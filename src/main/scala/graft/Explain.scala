@@ -85,18 +85,15 @@ object Explain {
       // Round-4 dense-index twins (the production path on hub-free
       // graphs): same single-span shape, but state enters as bare
       // primitive arrays read through int position arrays.
-      val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(4)(_.toLong), 4))
-      val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
+      val run = new graft.algo.Superstep.Run(spark, ids, Some(packed))
+      val pidx = run.dense.get
       val commArrR = new StateMap.Ref(sc.broadcast(ids.clone()))
       val qR = new StateMap.Ref(sc.broadcast(Array.fill(4)(0.125)))
       // Round-5 delta-transport twin (the production per-round plan after
       // the envelope fix): identical single-span shape; state enters as a
       // DeltaState.Payload resolved once per task.
-      val dBase = sc.broadcast(new graft.util.DeltaState.FullState(
-        ids.clone(), ids.clone(), Array.fill(4)(1L)))
-      val dState = new StateMap.Ref(sc.broadcast(new graft.util.DeltaState.Payload(
-        graft.util.DeltaState.newRunId(), 0, 0, dBase,
-        Array.empty[Int], Array.empty[Long], Array.empty[Long], Array.empty[Long])))
+      run.delta.publish(0, ids, scala.collection.mutable.LongMap(ids.map(_ -> 1L): _*))
+      val dState = run.delta.ref
       val idxShapes = Seq(
         "indexed_hedonic_superstep" ->
           graft.algo.Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, 0.1,
@@ -119,7 +116,7 @@ object Explain {
           org.apache.spark.sql.execution.FormattedMode)
         sb.append(s"\n## $name (dense-index strategy, per-round plan)\n\n```\n$plan```\n")
       }
-      pidx.unpersist()
+      run.close()
       packed.unpersist()
     }
     Files.writeString(Paths.get(out), sb.toString)

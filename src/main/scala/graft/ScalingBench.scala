@@ -174,10 +174,6 @@ object ScalingBench {
     // broadcast-state iteration (zero edge-scale exchange per round);
     // 0 forces the co-partitioned shuffle path.
     val bcastMax = sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX", "4000000").toLong
-    // Kernel A/B: dense-index (default) vs hash-probe state kernels — the
-    // direct measurement of the DRAM-random-probe term in the N-vs-4N
-    // efficiency decomposition (BASELINE.md).
-    val indexed = sys.env.getOrElse("SPARK_GRAFT_INDEXED", "true").toBoolean
     // Pack-SORT width stays data-sized (shrinking it to per-core counts
     // made each in-partition sort huge: build 208 s -> 385 s measured at
     // 12 partitions / 4 cores); the iteration-cache granularity is sized
@@ -222,7 +218,7 @@ object ScalingBench {
       if (!sys.env.get("SPARK_GRAFT_SKIP_HED").exists(_.toBoolean)) {
         val (members, metrics) = Hedonic.run(edges, init,
           Hedonic.Config(alpha = Some(alpha), maxSupersteps = maxSS,
-            broadcastStateMaxRows = bcastMax, indexedState = indexed,
+            broadcastStateMaxRows = bcastMax,
             packPartitions = Some(packParts), cachePartitions = Some(cacheParts)),
           packedOpt = sharedPack)
         System.err.println("superstep wallMs: " + metrics.map(_.wallMs).mkString(","))
@@ -248,7 +244,7 @@ object ScalingBench {
       if (!sys.env.get("SPARK_GRAFT_SKIP_PR").exists(_.toBoolean)) {
         val (pr, ms) = PageRank.runTimed(edges,
           PageRank.Config(fixedIter = Some(prIters), broadcastStateMaxRows = bcastMax,
-            indexedState = indexed, packPartitions = Some(packParts),
+            packPartitions = Some(packParts),
             cachePartitions = Some(cacheParts)),
           packedOpt = sharedPack)
         pr.count()

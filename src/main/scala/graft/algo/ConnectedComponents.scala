@@ -71,16 +71,17 @@ object ConnectedComponents {
     // exchanges + pin + convergence check, x O(log^2 V) rounds) dwarfs
     // the actual work on small inputs — dedupSurvivors' pair graphs and
     // Leiden.refine's intra-community slices are tiny by construction at
-    // any corpus scale. limit(cap+1) keeps an over-budget table off the
-    // driver (the capped collect just signals "too big"); larger inputs
+    // any corpus scale. The capped collect (Superstep.stateGate) keeps an
+    // over-budget table off the driver; larger inputs
     // run the large/small-star loop below unchanged, so the 100 TB path
     // is exactly the code it was. Labels are identical by construction:
     // union-by-minimum keeps every union-find root the component minimum,
     // the same canonical comp = min(component) the star loop converges
     // to (AlgoSpec pins both paths against runNaive).
-    val cap = math.min(maxDriverEdges, Int.MaxValue - 2L).toInt
-    val eCap = edges.select(col("src"), col("dst")).limit(cap + 1).collect()
-    if (eCap.length <= maxDriverEdges) return runDriver(edges.sparkSession, eCap)
+    Superstep.stateGate(edges.select(col("src"), col("dst")), maxDriverEdges) match {
+      case Some(rows) => return runDriver(edges.sparkSession, rows)
+      case None =>
+    }
     // Per round: pin + cache-count (pinCount, InternalRow cache — no
     // row boxing) + the union-distinct job only when the counts already
     // agree; the previous round's count carries forward (the old loop
@@ -156,17 +157,7 @@ object ConnectedComponents {
     parent.foreachKey { v => ids(j) = v; j += 1 }
     j = 0
     while (j < n) { comps(j) = find(ids(j)); j += 1 }
-    // same parallelize shape as the driver-state loops' stateDF
-    val idsL = ids; val compsL = comps
-    val slices = math.max(1,
-      math.min(spark.sparkContext.defaultParallelism, n / 65536 + 1))
-    val rdd = spark.sparkContext.parallelize(0 until n, slices)
-      .map(k => org.apache.spark.sql.Row(idsL(k), compsL(k)))
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("comp",
-        org.apache.spark.sql.types.LongType, nullable = false))))
+    Superstep.frame(spark, ids, "comp", comps)
   }
 
   /** Naive min-label propagation — O(diameter) supersteps; the in-repo

@@ -86,12 +86,6 @@ object Hedonic {
       // unweighted formula. Reference graphs are unweighted; parity
       // queries use the default.
       weighted: Boolean = false,
-      // Dense-index kernels for the broadcast-state path (hub-free graphs
-      // only — maxSegs > 1 falls back to the hash kernels): neighbor arrays
-      // remapped once to state-array positions, per-round broadcast = the
-      // bare values array. Decision-identical (shared kernel tails); kept
-      // switchable for the hash-vs-index A/B the scaling evidence rests on.
-      indexedState: Boolean = true,
       // Pack-shuffle partition count (None = session shuffle partitions).
       // Sizes the CSR build sort and the cache blocks (see
       // PackedAdjacency.build).
@@ -512,44 +506,37 @@ object Hedonic {
     }
 
     // ONE materialization decides the strategy AND (when within budget)
-    // already IS the driver-state collect (round 6; the old shape ran a
-    // separate count() job and then re-materialized the state inside
-    // runDriverState). limit(budget+1) keeps an over-budget state off the
-    // driver: the capped collect then just signals "too big" and the
-    // shuffle path recomputes from the frame.
-    val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val startCap = startMembers.select("id", "community").limit(cap + 1).collect()
-    val bcast = startCap.length <= cfg.broadcastStateMaxRows
-
-    if (bcast) {
-      // ONE-superstep fast path (round 6): a single superstep never
-      // amortizes the CSR pack build (exchange + sort + cache of the
-      // E-row adjacency), so the single-ungated-step queries
-      // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
-      // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
-      // (BenchExtra move1_ab). Decision-identical: stepPlanMap is the same
-      // plan the driver-state loop uses on hub graphs (StrategySpec pins
-      // it against both the packed kernels and the shuffle path).
-      if (cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
-          ckpt.isEmpty && !cfg.trackPotential) {
-        val ve = veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))
-        return runMapOneShot(edges, startCap, startStep, a, 2 * ve._2, cfg)
-      }
-      // Broadcast-state strategy iterates over the CSR-packed adjacency
-      // (one build-time shuffle, then V-row supersteps — see
-      // PackedAdjacency / stepPlanPacked).
-      packedOpt.foreach(p => require(p.weighted == cfg.weighted,
-        s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
-      val packed = packedOpt.getOrElse {
-        val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-        graft.graph.PackedAdjacency.build(
-          GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
-          weighted = cfg.weighted, deferCacheIfHubFree = cfg.indexedState,
-          partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
-      }
-      val edgeCount = packed.degSum
-      return runDriverState(edges, packed, startCap, startStep, a, edgeCount, cfg,
-        ckpt, ownsPack = packedOpt.isEmpty)
+    // already IS the driver-state collect (Superstep.stateGate).
+    Superstep.stateGate(startMembers.select("id", "community"), cfg.broadcastStateMaxRows) match {
+      case Some(rows) =>
+        packedOpt.foreach(p => require(p.weighted == cfg.weighted,
+          s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
+        // ONE-superstep fast path (round 6): a single superstep never
+        // amortizes the CSR pack build (exchange + sort + cache of the
+        // E-row adjacency), so the single-ungated-step queries
+        // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
+        // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
+        // (BenchExtra move1_ab). Decision-identical: stepPlanMap is the same
+        // plan the driver-state loop uses on hub graphs (StrategySpec pins
+        // it against both the packed kernels and the shuffle path).
+        val oneShot = cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
+          ckpt.isEmpty && !cfg.trackPotential
+        // Otherwise the loop iterates over the CSR-packed adjacency (one
+        // build-time shuffle, then V-row supersteps — see PackedAdjacency /
+        // stepPlanPacked).
+        val packed =
+          if (oneShot) None
+          else Some(packedOpt.getOrElse {
+            val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+            graft.graph.PackedAdjacency.build(
+              GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
+              weighted = cfg.weighted, deferCacheIfHubFree = true,
+              partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
+          })
+        val edgeCount = packed.fold(2 * veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))._2)(_.degSum)
+        return runDriverState(edges, packed, rows, startStep, a, edgeCount, cfg,
+          ckpt, ownsPack = packedOpt.isEmpty)
+      case None =>
     }
 
     // Shuffle path: cached pre-partitioned on dst (the gather JOIN key);
@@ -594,318 +581,106 @@ object Hedonic {
     (members, metrics)
   }
 
-  /** One-superstep broadcast-state execution without a pack build (see the
-    * fast-path comment in run()): state enters as two broadcast primitive
-    * maps, the superstep is stepPlanMap's single-stage gather+decide job
-    * over the symmetrized rows, and the merge is runDriverState's Row
-    * branch verbatim (only wanter rows come back; doMove carries the
-    * gate). */
-  private def runMapOneShot(
-      edges: Dataset[Edge],
-      init0: Array[org.apache.spark.sql.Row], // pre-collected (id, community)
-      startStep: Int,
-      alpha: Double,
-      edgeCount: Long,
-      cfg: Config): (DataFrame, Seq[RunMetrics]) = {
-    val spark = edges.sparkSession
-    val t0 = System.nanoTime()
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    val sizes = new scala.collection.mutable.LongMap[Long]()
-    var i = 0
-    while (i < n) {
-      ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1)
-      idx(ids(i)) = i
-      sizes(comms(i)) = sizes.getOrElse(comms(i), 0L) + 1L
-      i += 1
-    }
-    import graft.util.StateMap
-    val sc = spark.sparkContext
-    val commB = sc.broadcast(StateMap.longLong(ids, comms, n))
-    val sizeB = sc.broadcast(StateMap.longLong(sizes))
-    val gate =
-      if (cfg.parityGating) graft.util.Portable.parityGate(col("id"), startStep)
-      else lit(true)
-    val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    val sym = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-    val rows = stepPlanMap(sym, new StateMap.Ref(commB), new StateMap.Ref(sizeB),
-      alpha, gate, cfg.weighted).collect()
-    commB.destroy(); sizeB.destroy()
-    var wanted = 0L
-    var moved = 0L
-    var k = 0
-    while (k < rows.length) {
-      val r = rows(k)
-      idx.get(r.getLong(0)) match { // ids outside the state table drop
-        case Some(at) =>
-          wanted += 1
-          if (r.getBoolean(2)) { moved += 1; comms(at) = r.getLong(1) }
-        case None => ()
-      }
-      k += 1
-    }
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    // final state frame: same parallelize shape as runDriverState.stateDF
-    // (no LocalRelation — see that comment)
-    val idsL = ids; val commsL = comms
-    val slices = math.max(1,
-      math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(j => org.apache.spark.sql.Row(idsL(j), commsL(j)))
-    val out = spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-    (out, Vector(RunMetrics(startStep, moved, Double.NaN, wanted, edgeCount, wallMs)))
+  /** Community sizes of a membership array. */
+  private[algo] def sizesOf(comms: Array[Long]): scala.collection.mutable.LongMap[Long] = {
+    val m = new scala.collection.mutable.LongMap[Long](comms.length * 2)
+    var j = 0
+    while (j < comms.length) { m(comms(j)) = m.getOrElse(comms(j), 0L) + 1L; j += 1 }
+    m
+  }
+
+  /** Moves one member from community `old` to `c` in `sizes` (O(1) —
+    * sizes are maintained incrementally, never rebuilt per round); returns
+    * the new size of `old`. */
+  private[algo] def shift(sizes: scala.collection.mutable.LongMap[Long],
+                          old: Long, c: Long): Long = {
+    val so = sizes(old) - 1L
+    if (so == 0L) sizes.remove(old) else sizes(old) = so
+    sizes(c) = sizes.getOrElse(c, 0L) + 1L
+    so
   }
 
   /** Broadcast-strategy loop with DRIVER-RESIDENT state (V fits the
-    * broadcast budget by definition, so it fits the driver). The superstep
-    * plan is built ONCE over mutable Ref cells (two primitive maps: id ->
-    * community, community -> size, plus the round number for the gate)
-    * and re-collected every round with fresh contents (StateMap.Ref) —
-    * no per-round planning, codegen, or broadcast-variable churn. Each
-    * superstep is ONE single-stage Spark job collecting only the WANTER
-    * rows; nothing pinned, no cached state to release, no stats growth.
-    * All payoff/argmax/gate arithmetic stays IN-PLAN — identical
-    * expressions to the shuffle path — so results are bitwise-
-    * reproducible across strategies (StrategySpec) and DuckDB replay
-    * (q_hedonic_full etc.) is unaffected. */
+    * broadcast budget by definition, so it fits the driver), on the
+    * Superstep engine. The plan reads the membership as the delta-transport
+    * payload on hub-free packs, as two primitive maps (id -> community,
+    * community -> size) on hub packs, and — `packed = None`, the
+    * one-superstep fast path — as the same maps over the symmetrized rows.
+    * Each superstep is ONE single-stage Spark job collecting only the
+    * WANTER rows (doMove carries the gate); nothing pinned. All
+    * payoff/argmax/gate arithmetic stays IN-PLAN — identical expressions
+    * to the shuffle path — so results are bitwise-reproducible across
+    * strategies (StrategySpec) and DuckDB replay (q_hedonic_full etc.) is
+    * unaffected. */
   private def runDriverState(
       edges: Dataset[Edge],
-      packed: graft.graph.PackedAdj,
+      packed: Option[graft.graph.PackedAdj],
       init0: Array[org.apache.spark.sql.Row], // pre-collected (id, community)
       startStep: Int,
       alpha: Double,
       edgeCount: Long,
       cfg: Config,
       ckpt: Option[Checkpoint],
-      ownsPack: Boolean = true): (DataFrame, Seq[RunMetrics]) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
-    }
-    // NOT a LocalRelation (ADVICE r3): `(0..n).toDF` serialized V rows into
-    // the plan on every checkpoint/potential call — a large per-round driver
-    // allocation near the 4M-row budget, and joining edges against a V-row
-    // LocalRelation re-introduced the broadcast-build job StateMap exists to
-    // avoid. Parallelize indices instead: the arrays cross once per job in
-    // the torrent-broadcast taskBinary, rows materialize in executors, and
-    // the resulting LogicalRDD has no stats — so potential()'s edge join
-    // never tries to broadcast-build the state side.
-    def stateDF: DataFrame = {
-      val idsL = ids; val commsL = comms
-      val slices = math.max(1,
-        math.min(spark.sparkContext.defaultParallelism, n / 65536 + 1))
-      val rdd = spark.sparkContext.parallelize(0 until n, slices)
-        .map(k => org.apache.spark.sql.Row(idsL(k), commsL(k)))
-      spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("community",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    }
-
-    val sc = spark.sparkContext
-    val timing = sys.env.get("SPARK_GRAFT_STEP_TIMING").exists(_.toBoolean)
-    // The superstep DataFrame is built ONCE and re-collected every round;
-    // only the Ref contents — per-round BROADCAST HANDLES — change between
-    // rounds (see StateMap.Ref): no per-superstep analysis/optimization/
-    // planning, tiny task closures, and the maps ship executor-cached via
-    // real broadcasts (shipping them inside the closure instead was
-    // measured 2x slower: every task re-deserialized 16+ MB of state).
+      ownsPack: Boolean): (DataFrame, Seq[RunMetrics]) = {
     import graft.util.StateMap
-    val commR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
-    val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
-    val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
-    val gate =
-      if (cfg.parityGating)
-        graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
-      else lit(true)
-    // Dense-index path (hub-free graphs): remap neighbor ids to state-array
-    // positions once, then each round broadcasts only the bare comms array
-    // (8 B/vertex vs ~32 B/vertex hash map) and the kernel does one direct
-    // read per neighbor. Hash-kernel path kept for hub graphs and for the
-    // scaling A/B (SPARK_GRAFT_INDEXED / Config.indexedState).
-    val useIdx = cfg.indexedState && packed.maxSegs == 1
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        // unpersist, not destroy: a lost cache partition re-runs the remap
-        // lineage, which still needs the broadcast re-shippable.
-        idxB.unpersist()
-        // the id-based cache is dead once the remap is live — unless the
-        // caller shared it (another algorithm's reindex still needs it).
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    // Delta transport (indexed path): the per-round broadcast is a small
-    // Payload (base handle + cumulative overrides) — see DeltaState. The
-    // hash path keeps bare-map broadcasts (hub graphs; ids aren't dense).
-    val stateR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.Payload]](null)
-    val stepDf = pidxOpt match {
-      case Some(pidx) =>
-        stepPlanPackedIdxDelta(pidx, stateR, alpha, gate, emitPos = true)
-      case None => stepPlanPacked(packed, commR, sizeR, alpha, gate)
+    val spark = edges.sparkSession
+    val run = new Superstep.Run(spark, Superstep.longs(init0, 0), packed, ownsPack)
+    val comms = Superstep.longs(init0, 1)
+    val sizes = sizesOf(comms)
+    def stateDF: DataFrame = Superstep.frame(spark, run.ids, "community", comms)
+    val commR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
+    val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
+    val gate = run.parityGate(cfg.parityGating)
+    val dense = run.dense.isDefined
+    val plan = (run.dense, packed) match {
+      case (Some(pidx), _) => stepPlanPackedIdxDelta(pidx, run.delta.ref, alpha, gate, emitPos = true)
+      case (None, Some(p)) => stepPlanPacked(p, commR, sizeR, alpha, gate)
+      case (None, None) =>
+        val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+        stepPlanMap(GraphOps.symmetrize(edges).select(symCols.map(col): _*),
+          commR, sizeR, alpha, gate, cfg.weighted)
     }
-    // Indexed path: collect wanter rows as per-partition PRIMITIVE arrays
-    // (position, bestComm, doMove) straight off the codegen'd InternalRow
-    // iterator — the Row-based DataFrame.collect deserializes and boxes
-    // every row serially on the driver, a per-superstep cost that does not
-    // shrink with cluster size. toRdd is built ONCE; each collect()
-    // re-serializes the task closure, so the Ref-carried broadcast handles
-    // are picked up per round exactly as with DataFrame.collect.
-    val fastRdd =
-      if (useIdx) Some(stepDf.queryExecution.toRdd.mapPartitions { it =>
-        val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-        val cb = new scala.collection.mutable.ArrayBuilder.ofLong
-        val mb = new scala.collection.mutable.ArrayBuilder.ofBoolean
-        while (it.hasNext) {
-          val r = it.next()
-          pb += r.getInt(0); cb += r.getLong(1); mb += r.getBoolean(2)
-        }
-        Iterator.single((pb.result(), cb.result(), mb.result()))
-      })
-      else None
-    // Community sizes maintained INCREMENTALLY (O(moved) per round) — the
-    // old per-round O(V) rebuild was part of the cluster-invariant
-    // envelope the N->4N efficiency target punishes.
-    val driverSizes = new scala.collection.mutable.LongMap[Long](n * 2)
-    locally {
-      var j = 0
-      while (j < n) {
-        driverSizes(comms(j)) = driverSizes.getOrElse(comms(j), 0L) + 1L
-        j += 1
-      }
-    }
-    // Delta-transport bookkeeping (indexed path): cumulative ABSOLUTE
-    // overrides since the last full base snapshot.
-    val runId = graft.util.DeltaState.newRunId()
-    var baseBcast: org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.FullState] = null
-    var baseEpoch = startStep
-    val cumPos = new scala.collection.mutable.LongMap[Long]()  // pos -> comm
-    val cumSizes = new scala.collection.mutable.LongMap[Long]() // comm -> size
-    def sizesArrays(): (Array[Long], Array[Long]) = {
-      val ks = new Array[Long](driverSizes.size)
-      val vs = new Array[Long](driverSizes.size)
-      var j = 0
-      driverSizes.foreachEntry { (k, v) => ks(j) = k; vs(j) = v; j += 1 }
-      (ks, vs)
-    }
+    val job = run.moves(plan)
     var metrics = Vector.empty[RunMetrics]
     var superstep = startStep
     var converged = false
     while (!converged && superstep < cfg.maxSupersteps) {
       val t0 = System.nanoTime()
-      val tSizes = System.nanoTime()
-      if (useIdx) {
-        // refresh the base when the cumulative delta stops being "small";
-        // no job is in flight here, so destroying the old base is safe.
-        if (baseBcast == null || cumPos.size > n / 4) {
-          val (ks, vs) = sizesArrays()
-          val nb = sc.broadcast(new graft.util.DeltaState.FullState(comms.clone(), ks, vs))
-          if (baseBcast != null) baseBcast.destroy()
-          baseBcast = nb
-          baseEpoch = superstep
-          cumPos.clear(); cumSizes.clear()
-        }
-        val dp = new Array[Int](cumPos.size)
-        val dc = new Array[Long](cumPos.size)
-        var j = 0
-        cumPos.foreachEntry { (p, c) => dp(j) = p.toInt; dc(j) = c; j += 1 }
-        val sk = new Array[Long](cumSizes.size)
-        val sv = new Array[Long](cumSizes.size)
-        j = 0
-        cumSizes.foreachEntry { (k, v) => sk(j) = k; sv(j) = v; j += 1 }
-        stateR.value = sc.broadcast(new graft.util.DeltaState.Payload(
-          runId, superstep, baseEpoch, baseBcast, dp, dc, sk, sv))
-      } else {
-        commR.value = sc.broadcast(StateMap.longLong(ids, comms, n))
-        sizeR.value = sc.broadcast(StateMap.longLong(driverSizes))
+      if (dense) run.delta.publish(superstep, comms, sizes)
+      else {
+        run.publish(commR, StateMap.longLong(run.ids, comms, run.n))
+        run.publish(sizeR, StateMap.longLong(sizes))
       }
-      roundR.value = Integer.valueOf(superstep)
-      val tLocal = System.nanoTime()
+      val parts = run.collect(job, superstep)
       // Every collected row is a wanter (wants = true pre-filtered in-plan);
-      // doMove carries the gate. Non-wanters change nothing and are not
-      // collected — identical counters and state to the old full collect.
+      // non-wanters change nothing and are not collected.
       var wanted = 0L
       var moved = 0L
-      var nRows = 0L
-      var tJob = 0L
-      // applyMove: state + incremental sizes (+ delta bookkeeping on the
-      // indexed path) in one place — the absolute size entries make the
-      // executor-side application idempotent (DeltaState scaladoc).
-      @inline def applyMove(at: Int, c: Long): Unit = {
-        val old = comms(at)
-        if (old != c) {
-          comms(at) = c
-          val so = driverSizes(old) - 1L
-          if (so == 0L) driverSizes.remove(old) else driverSizes(old) = so
-          driverSizes(c) = driverSizes.getOrElse(c, 0L) + 1L
-          if (useIdx) {
-            cumPos(at.toLong) = c
-            cumSizes(old) = so
-            cumSizes(c) = driverSizes(c)
-          }
-        }
-      }
-      fastRdd match {
-        case Some(rdd) =>
-          val parts = rdd.collect()
-          stateR.value.destroy()
-          tJob = System.nanoTime()
-          var p = 0
-          while (p < parts.length) {
-            val (pos, cs, mv) = parts(p)
-            nRows += pos.length
-            var k = 0
-            while (k < pos.length) {
-              val at = pos(k)
-              if (at >= 0) { // positions outside the state table drop, as before
-                wanted += 1
-                if (mv(k)) { moved += 1; applyMove(at, cs(k)) }
+      var p = 0
+      while (p < parts.length) {
+        val (pos, cs, mv) = parts(p)
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          if (at >= 0) { // positions outside the state table drop
+            wanted += 1
+            if (mv(k)) {
+              moved += 1
+              val old = comms(at)
+              val c = cs(k)
+              if (old != c) {
+                comms(at) = c
+                val so = shift(sizes, old, c)
+                if (dense) {
+                  run.delta.set(at, c); run.delta.setSize(old, so); run.delta.setSize(c, sizes(c))
+                }
               }
-              k += 1
             }
-            p += 1
           }
-        case None =>
-          val rows = stepDf.collect()
-          commR.value.destroy()
-          sizeR.value.destroy()
-          tJob = System.nanoTime()
-          nRows = rows.length
-          var k = 0
-          while (k < rows.length) {
-            val r = rows(k)
-            idx.get(r.getLong(0)) match { // ids outside the state table drop
-              case Some(at) =>
-                wanted += 1
-                if (r.getBoolean(2)) { moved += 1; applyMove(at, r.getLong(1)) }
-              case None => ()
-            }
-            k += 1
-          }
+          k += 1
+        }
+        p += 1
       }
-      if (timing) System.err.println(
-        f"stepTiming ss=$superstep sizes=${(tSizes - t0) / 1e6}%.0f " +
-        f"local=${(tLocal - tSizes) / 1e6}%.0f job=${(tJob - tLocal) / 1e6}%.0f " +
-        f"merge=${(System.nanoTime() - tJob) / 1e6}%.0f rows=$nRows")
       val pot = if (cfg.trackPotential) potential(edges, stateDF, alpha) else Double.NaN
       val wallMs = (System.nanoTime() - t0) / 1000000
       metrics :+= RunMetrics(superstep, moved, pot, wanted, edgeCount, wallMs)
@@ -918,11 +693,7 @@ object Hedonic {
       converged = wanted == 0L
       superstep += 1
     }
-    if (baseBcast != null) baseBcast.destroy()
-    pidxOpt match {
-      case Some(pidx) => pidx.unpersist()
-      case None       => if (ownsPack) packed.unpersist()
-    }
+    run.close()
     (stateDF, metrics)
   }
 

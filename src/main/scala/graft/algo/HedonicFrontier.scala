@@ -43,17 +43,17 @@ object HedonicFrontier {
     // unweighted (cfg.weighted is ignored here as before).
     if (!cfg.weighted) {
       // one capped materialization = strategy decision + driver-state
-      // collect (see Hedonic.run)
-      val cap = math.min(cfg.broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-      val initCap = init.select("id", "community").limit(cap + 1).collect()
-      if (initCap.length <= cfg.broadcastStateMaxRows) {
-        val packed = graft.graph.PackedAdjacency.build(
-          GraphOps.symmetrize(edges).select("src", "dst"), "src",
-          weighted = false, deferCacheIfHubFree = true,
-          partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
-        if (packed.maxSegs == 1)
-          return runDriverState(edges, packed, initCap, a, cfg)
-        packed.unpersist() // hub graph: fall through to the shuffle loop
+      // collect (Superstep.stateGate)
+      Superstep.stateGate(init.select("id", "community"), cfg.broadcastStateMaxRows) match {
+        case Some(rows) =>
+          val packed = graft.graph.PackedAdjacency.build(
+            GraphOps.symmetrize(edges).select("src", "dst"), "src",
+            weighted = false, deferCacheIfHubFree = true,
+            partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
+          if (packed.maxSegs == 1)
+            return runDriverState(edges, packed, rows, a, cfg)
+          packed.unpersist() // hub graph: fall through to the shuffle loop
+        case None =>
       }
     }
     // cached pre-partitioned on src: the per-superstep frontier semi-join
@@ -162,12 +162,12 @@ object HedonicFrontier {
     (state.select("id", "community"), metrics)
   }
 
-  /** Broadcast-state frontier loop (see run()). Per superstep:
+  /** Broadcast-state frontier loop (see run()) on the Superstep engine.
+    * Per superstep:
     *  - job 1 ("decide"): the packed superstep plan restricted to ACTIVE
     *    vertices by a flag-array filter that PUSHES BELOW the decision
     *    kernel (inactive vertices cost one boolean array read); collects
-    *    only wanter rows as primitive arrays, exactly like
-    *    Hedonic.runDriverState.
+    *    only wanter rows as primitive arrays, exactly like Hedonic's loop.
     *  - job 2 ("activate", only when something moved): mover rows of the
     *    same cached pack, exploded to neighbor positions whose POST-move
     *    community differs from the mover's new community — the reference's
@@ -176,73 +176,42 @@ object HedonicFrontier {
     * The next frontier = movers ∪ gated wanters ∪ those neighbors — the
     * identical SET the DataFrame loop builds. State (comms array, size
     * map, active flags) is driver-resident; per-round broadcasts are
-    * destroyed right after their collect. Both plans are built ONCE and
-    * re-collected with fresh Ref contents (StateMap.Ref). */
+    * destroyed right after their collect. */
   private def runDriverState(edges: Dataset[Edge],
       packed: graft.graph.PackedAdj, init0: Array[org.apache.spark.sql.Row],
       alpha: Double, cfg: Hedonic.Config): (DataFrame, Seq[RunMetrics]) = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import graft.util.StateMap
+    type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val edgeCount = packed.degSum
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val comms = new Array[Long](n)
-    var i = 0
-    while (i < n) { ids(i) = init0(i).getLong(0); comms(i) = init0(i).getLong(1); i += 1 }
-    val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-    val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-    idxB.unpersist()
-    packed.unpersist() // deferCacheIfHubFree: the long-id pack was never cached
+    val run = new Superstep.Run(edges.sparkSession, Superstep.longs(init0, 0),
+      Some(packed), ownsPack = true)
+    val n = run.n
+    val comms = Superstep.longs(init0, 1)
+    val pidx = run.dense.get
+    val sizes = Hedonic.sizesOf(comms)
 
-    val driverSizes = new scala.collection.mutable.LongMap[Long](n * 2)
-    locally {
-      var j = 0
-      while (j < n) {
-        driverSizes(comms(j)) = driverSizes.getOrElse(comms(j), 0L) + 1L
-        j += 1
-      }
-    }
+    val commArrR = new StateMap.Ref[Bc[Array[Long]]](null)
+    val sizeR = new StateMap.Ref[Bc[StateMap.LongLongMap]](null)
+    val activeR = new StateMap.Ref[Bc[Array[Boolean]]](null)
+    val decide = run.moves(Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, alpha,
+        run.parityGate(cfg.parityGating), emitPos = true)
+      .filter(StateMap.flagAt(activeR, col("myIdx"))))
 
-    val commArrR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]](null)
-    val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
-    val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
-    val activeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Boolean]]](null)
-    val gate =
-      if (cfg.parityGating)
-        graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
-      else lit(true)
-    val stepDf = Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, alpha, gate,
-        emitPos = true)
-      .filter(StateMap.flagAt(activeR, col("myIdx")))
-    val fastRdd = stepDf.queryExecution.toRdd.mapPartitions { it =>
-      val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-      val cb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val mb = new scala.collection.mutable.ArrayBuilder.ofBoolean
-      while (it.hasNext) {
-        val r = it.next()
-        pb += r.getInt(0); cb += r.getLong(1); mb += r.getBoolean(2)
-      }
-      Iterator.single((pb.result(), cb.result(), mb.result()))
-    }
-
-    val moverR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Boolean]]](null)
-    val postCommR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]](null)
-    val actDf = pidx.df
+    val moverR = new StateMap.Ref[Bc[Array[Boolean]]](null)
+    val postCommR = new StateMap.Ref[Bc[Array[Long]]](null)
+    val activate = run.job(pidx.df
       .filter(StateMap.flagAt(moverR, col("myIdx")))
       .select(StateMap.longAt(postCommR, col("myIdx")).as("mc"),
         explode(col("nbrs")).as("p"))
       .filter(col("p") >= 0 && StateMap.longAt(postCommR, col("p")) =!= col("mc"))
-      .select(col("p"))
-    val actRdd = actDf.queryExecution.toRdd.mapPartitions { it =>
-      val bs = new java.util.BitSet()
-      while (it.hasNext) bs.set(it.next().getInt(0))
-      val out = new scala.collection.mutable.ArrayBuilder.ofInt
-      var b = bs.nextSetBit(0)
-      while (b >= 0) { out += b; b = bs.nextSetBit(b + 1) }
-      Iterator.single(out.result())
-    }
+      .select(col("p")))(_.queryExecution.toRdd.mapPartitions { it =>
+        val bs = new java.util.BitSet()
+        while (it.hasNext) bs.set(it.next().getInt(0))
+        val out = new scala.collection.mutable.ArrayBuilder.ofInt
+        var b = bs.nextSetBit(0)
+        while (b >= 0) { out += b; b = bs.nextSetBit(b + 1) }
+        Iterator.single(out.result())
+      })
 
     var active = Array.fill(n)(true)
     var frontierSize = n.toLong
@@ -250,12 +219,10 @@ object HedonicFrontier {
     var superstep = 0
     while (frontierSize > 0 && superstep < cfg.maxSupersteps) {
       val t0 = System.nanoTime()
-      commArrR.value = sc.broadcast(comms.clone())
-      sizeR.value = sc.broadcast(StateMap.longLong(driverSizes))
-      activeR.value = sc.broadcast(active)
-      roundR.value = Integer.valueOf(superstep)
-      val parts = fastRdd.collect()
-      commArrR.value.destroy(); sizeR.value.destroy(); activeR.value.destroy()
+      run.publish(commArrR, comms.clone())
+      run.publish(sizeR, StateMap.longLong(sizes))
+      run.publish(activeR, active)
+      val parts = run.collect(decide, superstep)
       val moverFlags = new Array[Boolean](n)
       val nextActive = new Array[Boolean](n)
       var moved = 0L
@@ -272,12 +239,7 @@ object HedonicFrontier {
               nextActive(at) = true // the mover's own optimum may shift
               val old = comms(at)
               val c = cs(k)
-              if (old != c) {
-                comms(at) = c
-                val so = driverSizes(old) - 1L
-                if (so == 0L) driverSizes.remove(old) else driverSizes(old) = so
-                driverSizes(c) = driverSizes.getOrElse(c, 0L) + 1L
-              }
+              if (old != c) { comms(at) = c; Hedonic.shift(sizes, old, c) }
             } else nextActive(at) = true // gated wanter stays active
           }
           k += 1
@@ -285,10 +247,9 @@ object HedonicFrontier {
         p += 1
       }
       if (moved > 0) {
-        moverR.value = sc.broadcast(moverFlags)
-        postCommR.value = sc.broadcast(comms.clone())
-        val acts = actRdd.collect()
-        moverR.value.destroy(); postCommR.value.destroy()
+        run.publish(moverR, moverFlags)
+        run.publish(postCommR, comms.clone())
+        val acts = run.collect(activate, superstep)
         var q = 0
         while (q < acts.length) {
           val arr = acts(q)
@@ -305,19 +266,7 @@ object HedonicFrontier {
       metrics :+= RunMetrics(superstep, moved, Double.NaN, frontierSize, edgeCount, wallMs)
       superstep += 1
     }
-    pidx.unpersist()
-    // result frame via parallelized indices (no LocalRelation / no stats —
-    // the Hedonic.runDriverState stateDF shape)
-    val idsL = ids; val commsL = comms
-    val slices = math.max(1,
-      math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(k => org.apache.spark.sql.Row(idsL(k), commsL(k)))
-    val out = spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-    (out, metrics)
+    run.close()
+    (Superstep.frame(edges.sparkSession, run.ids, "community", comms), metrics)
   }
 }

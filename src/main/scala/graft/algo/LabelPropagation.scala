@@ -25,8 +25,8 @@ import graft.io.Iterate
   * (small V): labels live in DRIVER arrays between rounds and re-enter the
   * plan as a broadcast id -> label primitive map read through codegen'd
   * lookups (graft.util.StateMap); the single-stage job ends in a
-  * changer-row collect and nothing is pinned (see Hedonic.runDriverState
-  * for the rationale and the measured serial-cost motivation). Shuffle path: the
+  * changer-row collect and nothing is pinned (see Superstep for the
+  * rationale and the measured serial-cost motivation). Shuffle path: the
   * new labels are pinned while the would-change counter rides the
   * materialization pass as an accumulator (Iterate.pinSums); the previous
   * round's cache is released immediately.
@@ -64,29 +64,27 @@ object LabelPropagation {
           maxIter: Int = 30, parityGating: Boolean = true,
           weighted: Boolean = false,
           broadcastStateMaxRows: Long = 4000000L,
-          indexedState: Boolean = true,
           packedOpt: Option[graft.graph.PackedAdj] = None): DataFrame = {
     val init = initOpt
       .map(_.select(col("id"), col("label")))
       .getOrElse(GraphOps.vertices(edges).select(col("id"), col("id").as("label")))
     // one capped materialization = strategy decision + driver-state collect
-    // (see Hedonic.run)
-    val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val initCap = init.limit(cap + 1).collect()
-    val bcast = initCap.length <= broadcastStateMaxRows
-    if (bcast) {
-      // Broadcast-state strategy iterates over the CSR-packed adjacency
-      // (see PackedAdjacency / stepPlanPacked).
-      packedOpt.foreach(p => require(p.weighted == weighted,
-        s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
-      val packed = packedOpt.getOrElse {
-        val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-        val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-        graft.graph.PackedAdjacency.build(symDf, "src", weighted,
-          deferCacheIfHubFree = indexedState)
-      }
-      return runDriverState(edges.sparkSession, packed, initCap, maxIter,
-        parityGating, weighted, indexedState, ownsPack = packedOpt.isEmpty)
+    // (Superstep.stateGate)
+    Superstep.stateGate(init, broadcastStateMaxRows) match {
+      case Some(rows) =>
+        // Broadcast-state strategy iterates over the CSR-packed adjacency
+        // (see PackedAdjacency / stepPlanPacked).
+        packedOpt.foreach(p => require(p.weighted == weighted,
+          s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
+        val packed = packedOpt.getOrElse {
+          val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+          val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
+          graft.graph.PackedAdjacency.build(symDf, "src", weighted,
+            deferCacheIfHubFree = true)
+        }
+        return runDriverState(edges.sparkSession, Right(packed), rows, maxIter,
+          parityGating, weighted, ownsPack = packedOpt.isEmpty, "label")
+      case None =>
     }
     // Shuffle path: cached pre-partitioned on dst (the join key); only the
     // V-row label side re-exchanges per round.
@@ -127,44 +125,13 @@ object LabelPropagation {
     * step(). Output (id, bestLabel) per label row — value-identical to
     * step(sym, labels, weighted).select(id, bestLabel) (StrategySpec). */
   def bestLabels(sym: DataFrame, labels: DataFrame, weighted: Boolean = false,
-                 broadcastStateMaxRows: Long = 4000000L): DataFrame = {
-    val spark = labels.sparkSession
-    val cap = math.min(broadcastStateMaxRows, Int.MaxValue - 2L).toInt
-    val lab0 = labels.select("id", "label").limit(cap + 1).collect()
-    if (lab0.length > broadcastStateMaxRows)
-      return step(sym, labels, weighted).select(col("id"), col("bestLabel"))
-    import graft.util.StateMap
-    val n = lab0.length
-    val ids = new Array[Long](n)
-    val labs = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = lab0(i).getLong(0); labs(i) = lab0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
+                 broadcastStateMaxRows: Long = 4000000L): DataFrame =
+    Superstep.stateGate(labels.select("id", "label"), broadcastStateMaxRows) match {
+      case Some(rows) =>
+        runDriverState(labels.sparkSession, Left(sym), rows, maxIter = 1,
+          parityGating = false, weighted, ownsPack = false, "bestLabel")
+      case None => step(sym, labels, weighted).select(col("id"), col("bestLabel"))
     }
-    val sc = spark.sparkContext
-    val labB = sc.broadcast(StateMap.longLong(ids, labs, n))
-    val rows = stepPlanMap(sym, new StateMap.Ref(labB), weighted, lit(true)).collect()
-    labB.destroy()
-    var k = 0
-    while (k < rows.length) {
-      val r = rows(k)
-      idx.get(r.getLong(0)).foreach(at => labs(at) = r.getLong(1))
-      k += 1
-    }
-    // same parallelize shape as the driver-state loops' stateDF (no
-    // LocalRelation — see Hedonic.runDriverState)
-    val idsL = ids; val labsL = labs
-    val slices = math.max(1, math.min(sc.defaultParallelism, n / 65536 + 1))
-    val rdd = sc.parallelize(0 until n, slices)
-      .map(j => org.apache.spark.sql.Row(idsL(j), labsL(j)))
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("bestLabel",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-  }
 
   /** The driver-state iteration's plan over a broadcast id -> label map
     * (graft.util.StateMap lookup expressions — see Hedonic.stepPlanMap for
@@ -232,11 +199,6 @@ object LabelPropagation {
     dec.select(col("id"), col("bestLabel"), gate.as("g"))
   }
 
-  /** Broadcast-strategy loop with DRIVER-RESIDENT labels; exactly one
-    * Spark job (ending in a V-row collect) per iteration. Decision
-    * semantics identical to the shuffle loop: `wants` = majority label
-    * differs (counted BEFORE gating, so convergence is gate-independent);
-    * a node absent from the vote table keeps its label. */
   /** Dense-index step plan (hub-free production path; see
     * Hedonic.stepPlanPackedIdx). */
   private[graft] def stepPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
@@ -256,110 +218,72 @@ object LabelPropagation {
     * same kLabelIdx tail, so results are identical (PackedSpec pins). */
   private[graft] def stepPlanPackedIdxDelta(pidx: graft.graph.PackedIdxAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
-      gate: org.apache.spark.sql.Column): DataFrame = {
+      gate: org.apache.spark.sql.Column, emitPos: Boolean = false): DataFrame = {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
+    // emitPos: key on the state position (see Hedonic.stepPlanPackedIdx)
     pidx.df
-      .select(col("id"),
+      .select(col("id"), col("myIdx"),
         PackedKernels.labelDecideIdxDelta(col("myIdx"), col("nbrs"), wcol, stateR)
           .as("bestLabel"))
       .filter(col("bestLabel").isNotNull)
-      .select(col("id"), col("bestLabel"), gate.as("g"))
+      .select(if (emitPos) col("myIdx") else col("id"), col("bestLabel"), gate.as("g"))
   }
 
+  /** Broadcast-strategy loop with DRIVER-RESIDENT labels on the Superstep
+    * engine; exactly one Spark job (ending in a changer-row collect) per
+    * iteration. Decision semantics identical to the shuffle loop: `wants`
+    * = majority label differs (counted BEFORE gating, so convergence is
+    * gate-independent); a node absent from the vote table keeps its label.
+    * `adj` is the packed adjacency, or (Left) the symmetrized rows the
+    * map-state one-shot votes over. The output's label column is `name`. */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, init0: Array[org.apache.spark.sql.Row],
-      maxIter: Int, parityGating: Boolean, weighted: Boolean,
-      indexedState: Boolean = true, ownsPack: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val n = init0.length
-    val ids = new Array[Long](n)
-    val labs = new Array[Long](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = init0(i).getLong(0); labs(i) = init0(i).getLong(1)
-      idx(ids(i)) = i; i += 1
-    }
-    // Plan built once; Refs carry per-round broadcast handles (see
-    // StateMap.Ref and Hedonic.runDriverState).
+      adj: Either[DataFrame, graft.graph.PackedAdj],
+      init0: Array[org.apache.spark.sql.Row], maxIter: Int, parityGating: Boolean,
+      weighted: Boolean, ownsPack: Boolean, name: String): DataFrame = {
     import graft.util.StateMap
-    val sc = spark.sparkContext
-    val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongLongMap]](null)
-    val roundR = new StateMap.Ref[Integer](Integer.valueOf(0))
-    val gate =
-      if (parityGating) graft.util.Portable.parityGate(col("id"), StateMap.intRef(roundR))
-      else lit(true)
-    // Dense-index path (hub-free graphs; see Hedonic.runDriverState).
-    val useIdx = indexedState && packed.maxSegs == 1
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        // shared packs stay cached for the caller's other algorithms
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    // Delta transport (indexed path; labels in the Payload's comms lane,
-    // size lane empty) — see DeltaState and Hedonic.runDriverState.
-    val stateR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.Payload]](null)
-    val stepDf = pidxOpt match {
-      case Some(pidx) => stepPlanPackedIdxDelta(pidx, stateR, gate)
-      case None       => stepPlanPacked(packed, labR, gate)
+    val run = new Superstep.Run(spark, Superstep.longs(init0, 0), adj.toOption, ownsPack)
+    val labs = Superstep.longs(init0, 1)
+    val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
+    val gate = run.parityGate(parityGating)
+    val dense = run.dense.isDefined
+    val plan = (run.dense, adj) match {
+      case (Some(pidx), _)   => stepPlanPackedIdxDelta(pidx, run.delta.ref, gate, emitPos = true)
+      case (None, Right(p))  => stepPlanPacked(p, labR, gate)
+      case (None, Left(sym)) => stepPlanMap(sym, labR, weighted, gate)
     }
-    val runId = graft.util.DeltaState.newRunId()
-    var baseBcast: org.apache.spark.broadcast.Broadcast[
-      graft.util.DeltaState.FullState] = null
-    var baseEpoch = 0
-    val cumPos = new scala.collection.mutable.LongMap[Long]() // pos -> label
-    val emptyL = Array.empty[Long]
+    val job = run.moves(plan)
+    // labels ride the delta Payload's comms lane; the size lane stays empty
+    val noSizes = new scala.collection.mutable.LongMap[Long]()
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      if (useIdx) {
-        if (baseBcast == null || cumPos.size > n / 4) {
-          val nb = sc.broadcast(new graft.util.DeltaState.FullState(
-            labs.clone(), emptyL, emptyL))
-          if (baseBcast != null) baseBcast.destroy()
-          baseBcast = nb; baseEpoch = iter; cumPos.clear()
-        }
-        val dp = new Array[Int](cumPos.size)
-        val dc = new Array[Long](cumPos.size)
-        var j = 0
-        cumPos.foreachEntry { (p, c) => dp(j) = p.toInt; dc(j) = c; j += 1 }
-        stateR.value = sc.broadcast(new graft.util.DeltaState.Payload(
-          runId, iter, baseEpoch, baseBcast, dp, dc, emptyL, emptyL))
-      } else labR.value = sc.broadcast(StateMap.longLong(ids, labs, n))
-      roundR.value = Integer.valueOf(iter)
-      val rows = stepDf.collect()
-      if (useIdx) stateR.value.destroy() else labR.value.destroy()
+      if (dense) run.delta.publish(iter, labs, noSizes)
+      else run.publish(labR, StateMap.longLong(run.ids, labs, run.n))
+      val parts = run.collect(job, iter)
       // Every collected row is a changer (best != current, filtered
-      // in-plan) — identical counters and state to the old full collect.
+      // in-plan); `g` carries the gate.
       var wanted = 0L
-      var k = 0
-      while (k < rows.length) {
-        val r = rows(k)
-        idx.get(r.getLong(0)) match {
-          case Some(at) =>
+      var p = 0
+      while (p < parts.length) {
+        val (pos, ls, g) = parts(p)
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          if (at >= 0) {
             wanted += 1
-            if (r.getBoolean(2)) {
-              labs(at) = r.getLong(1)
-              if (useIdx) cumPos(at.toLong) = r.getLong(1)
+            if (g(k)) {
+              labs(at) = ls(k)
+              if (dense) run.delta.set(at, ls(k))
             }
-          case None => ()
+          }
+          k += 1
         }
-        k += 1
+        p += 1
       }
       done = wanted == 0L
       iter += 1
     }
-    if (baseBcast != null) baseBcast.destroy()
-    pidxOpt match {
-      case Some(pidx) => pidx.unpersist()
-      case None       => if (ownsPack) packed.unpersist()
-    }
-    (0 until n).map(k => (ids(k), labs(k))).toDF("id", "label")
+    run.close()
+    Superstep.frame(spark, run.ids, name, labs)
   }
 }

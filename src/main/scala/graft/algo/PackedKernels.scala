@@ -115,7 +115,7 @@ object PackedKernels {
     * decideFromCounts): NULLV unless the vertex STRICTLY wants to move;
     * otherwise the argmax candidate community under the canonical
     * (payoff, isCur, smallest-label) tie-break. Precondition (holds by
-    * construction in runDriverState): `size` covers every value of `comm`.
+    * construction in Hedonic.runDriverState): `size` covers every value of `comm`.
     *
     * `wts` null = unweighted. Weighted (Config.weighted): friendship mass =
     * weight sum (dvals), strangers stay count-based (lvals) — mirrors
@@ -183,7 +183,7 @@ object PackedKernels {
       val c = s.keyAt(j)
       val f = s.longAt(j)
       // slot<0 = community absent from the size map. Holds-by-construction
-      // in runDriverState, but Explain/tests call the kernel with hand-built
+      // in Hedonic.runDriverState, but Explain/tests call the kernel with hand-built
       // maps (ADVICE r3) — mirror the row plan's inner-join-drop semantics
       // (decideFromCounts drops the candidate row) instead of indexing at -1.
       val css = size.slot(c)

@@ -64,12 +64,6 @@ object PageRank {
       // iteration; 0 forces the co-partitioned shuffle path (tests use
       // this to pin both strategies to the same fixtures).
       broadcastStateMaxRows: Long = 4000000L,
-      // Dense-index kernels on the broadcast-state path (hub-free graphs;
-      // see Hedonic.Config.indexedState): unweighted iterations broadcast
-      // one PRE-DIVIDED rank/deg array per round (one read per edge
-      // instead of two hash probes), weighted ones a rank array against a
-      // once-broadcast strength array. Bitwise-identical sums.
-      indexedState: Boolean = true,
       // Pack-shuffle partition count (None = session shuffle partitions);
       // see Hedonic.Config.packPartitions.
       packPartitions: Option[Int] = None,
@@ -115,13 +109,12 @@ object PageRank {
       val deg =
         if (cfg.weighted) degAgg.select(col("id"), col("deg"))
         else degAgg.select(col("id"), col("d").cast("double").as("deg"))
-      if (v <= cfg.broadcastStateMaxRows) {
+      if (Superstep.fits(v.toLong, cfg.broadcastStateMaxRows)) {
         val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-          deferCacheIfHubFree = cfg.indexedState, partitions = cfg.packPartitions,
+          deferCacheIfHubFree = true, partitions = cfg.packPartitions,
           cachePartitions = cfg.cachePartitions,
           degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
         val out = runDriverState(spark, packed, deg, v, cfg, ownsPack = true)
-        packed.unpersist()
         degAgg.unpersist()
         return out
       }
@@ -146,7 +139,7 @@ object PageRank {
     // Explicit vertex tables may contain dangling vertices, whose left-join
     // handling needs the co-partitioned path; broadcast-state covers the
     // engine's common case (edge-derived vertex set, min degree 1).
-    val bcast = verticesOpt.isEmpty && v <= cfg.broadcastStateMaxRows
+    val bcast = verticesOpt.isEmpty && Superstep.fits(v.toLong, cfg.broadcastStateMaxRows)
 
     if (bcast) {
       // Broadcast-state strategy iterates over the CSR-packed in-neighbor
@@ -176,12 +169,11 @@ object PageRank {
             else
               symDf.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("deg"))
           (graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-            deferCacheIfHubFree = cfg.indexedState, partitions = cfg.packPartitions,
+            deferCacheIfHubFree = true, partitions = cfg.packPartitions,
             cachePartitions = cfg.cachePartitions), d)
       }
       val out = runDriverState(edges.sparkSession, packed, deg, v, cfg,
         ownsPack = packedOpt.isEmpty)
-      if (packedOpt.isEmpty) packed.unpersist()
       vertsOpt.foreach(_.unpersist())
       return out
     }
@@ -256,153 +248,78 @@ object PageRank {
   }
 
   /** Broadcast-strategy loop with DRIVER-RESIDENT ranks (V fits the
-    * broadcast budget, hence the driver). The iteration plan is built
-    * ONCE over mutable Ref cells (rank map per round; degree map set
-    * once — degrees never change) and re-collected every round
-    * (StateMap.Ref): no per-round planning, codegen, or broadcast
-    * churn. An iteration is exactly ONE single-stage job: packed-
-    * adjacency scan, per-vertex contribution kernel, V-row collect;
-    * nothing is pinned. The rank update stays IN-PLAN,
-    * same arithmetic shape as the shuffle path's expression (rank/deg per
-    * contribution row); only the tol-mode |delta| sum moves to the driver
-    * (same values, different summation order — a stopping heuristic, not a
-    * result). No dangling term: this path requires an edge-derived vertex
-    * set (min degree 1). */
+    * broadcast budget, hence the driver) on the Superstep engine. An
+    * iteration is exactly ONE single-stage job: packed-adjacency scan,
+    * per-vertex contribution kernel, V-row primitive collect; nothing is
+    * pinned. On hub-free packs each round broadcasts ONE bare double[] —
+    * the pre-divided rank/deg when unweighted (the same IEEE division the
+    * hash kernel does per edge, so bitwise-identical sums with one read
+    * per edge), the rank alone when weighted (strength array broadcast
+    * once); hub packs read broadcast rank/degree maps (degrees set once —
+    * they never change). The rank update stays IN-PLAN, same arithmetic
+    * shape as the shuffle path's expression (rank/deg per contribution
+    * row); only the tol-mode |delta| sum moves to the driver (same values,
+    * different summation order — a stopping heuristic, not a result). No
+    * dangling term: this path requires an edge-derived vertex set (min
+    * degree 1). */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
       packed: graft.graph.PackedAdj, deg: DataFrame, v: Double,
-      cfg: Config, ownsPack: Boolean = true): (DataFrame, Seq[Long]) = {
-    import spark.implicits._
+      cfg: Config, ownsPack: Boolean): (DataFrame, Seq[Long]) = {
+    import graft.util.StateMap
+    type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     val vd = deg.collect()
-    val n = vd.length
-    val ids = new Array[Long](n)
-    val degs = new Array[Double](n)
-    val idx = new scala.collection.mutable.LongMap[Int](n * 2)
-    var i = 0
-    while (i < n) {
-      ids(i) = vd(i).getLong(0); degs(i) = vd(i).getDouble(1)
-      idx(ids(i)) = i; i += 1
+    val run = new Superstep.Run(spark, Superstep.longs(vd, 0), Some(packed), ownsPack)
+    val n = run.n
+    val degs = Superstep.doubles(vd, 1)
+    val dense = run.dense.isDefined
+    val qR = new StateMap.Ref[Bc[Array[Double]]](null)
+    val rankR = new StateMap.Ref[Bc[StateMap.LongDoubleMap]](null)
+    val plan = run.dense match {
+      case Some(pidx) => iterPlanPackedIdx(pidx, qR,
+        if (cfg.weighted) Some(run.once(degs.clone())) else None, v, cfg, emitPos = true)
+      case None => iterPlanPacked(packed, rankR,
+        run.once(StateMap.longDouble(run.ids, degs, n)), v, cfg)
     }
-    // Plan built once; the rank Ref carries a per-round broadcast handle,
-    // the degree broadcast is set once — degrees never change (see
-    // StateMap.Ref and Hedonic.runDriverState).
-    import graft.util.StateMap
-    val sc = spark.sparkContext
-    // Dense-index path (hub-free graphs): remap neighbors to state-array
-    // positions once; per round broadcast ONE bare double[] — pre-divided
-    // rank/deg when unweighted (kernel: one read per edge), rank alone when
-    // weighted (strength array broadcast once). Hash path kept for hub
-    // graphs and the scaling A/B (Config.indexedState).
-    val useIdx = cfg.indexedState && packed.maxSegs == 1
-    val qR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
-    val degArrROpt =
-      if (useIdx && cfg.weighted) Some(new StateMap.Ref(sc.broadcast(degs.clone())))
-      else None
-    val degR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongDoubleMap]](
-      if (useIdx) null else sc.broadcast(StateMap.longDouble(ids, degs, n)))
-    val rankR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[
-      StateMap.LongDoubleMap]](null)
-    val pidxOpt =
-      if (useIdx) {
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        // shared packs stay cached for the caller's other algorithms
-        if (ownsPack) packed.unpersist()
-        Some(pidx)
-      } else None
-    val iterDf = pidxOpt match {
-      case Some(pidx) => iterPlanPackedIdx(pidx, qR, degArrROpt, v, cfg, emitPos = true)
-      case None       => iterPlanPacked(packed, rankR, degR, v, cfg)
-    }
-    // Indexed path: V rows come back per iteration — collect them as
-    // per-partition PRIMITIVE (position, rank) arrays straight off the
-    // codegen'd InternalRow iterator instead of boxed Rows (the Row
-    // decode is driver-serial and does not shrink with cluster size).
-    // Built once; each collect() re-serializes the closure so the
-    // Ref-carried broadcast handles are fresh per round.
-    val fastRdd =
-      if (useIdx) Some(iterDf.queryExecution.toRdd.mapPartitions { it =>
-        val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-        val rb = new scala.collection.mutable.ArrayBuilder.ofDouble
-        while (it.hasNext) {
-          val r = it.next()
-          pb += r.getInt(0); rb += r.getDouble(1)
-        }
-        Iterator.single((pb.result(), rb.result()))
-      })
-      else None
+    val job = run.values(plan)
     var ranks = Array.fill(n)(1.0 / v)
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
-    val timing = sys.env.get("SPARK_GRAFT_STEP_TIMING").exists(_.toBoolean)
     var iter = 0
     var done = false
     while (!done && iter < nIter) {
       val t0 = System.nanoTime()
-      if (useIdx) {
-        val q =
-          if (cfg.weighted) ranks.clone()
-          else {
-            // same IEEE division the hash kernel did per edge — bitwise-
-            // identical contributions, computed once per vertex instead.
-            val a = new Array[Double](n)
-            var z = 0
-            while (z < n) { a(z) = ranks(z) / degs(z); z += 1 }
-            a
-          }
-        qR.value = sc.broadcast(q)
-      } else rankR.value = sc.broadcast(StateMap.longDouble(ids, ranks, n))
-      val tLocal = System.nanoTime()
+      if (!dense) run.publish(rankR, StateMap.longDouble(run.ids, ranks, n))
+      else if (cfg.weighted) run.publish(qR, ranks.clone())
+      else {
+        val q = new Array[Double](n)
+        var z = 0
+        while (z < n) { q(z) = ranks(z) / degs(z); z += 1 }
+        run.publish(qR, q)
+      }
+      val parts = run.collect(job, iter)
       val next = ranks.clone() // min-degree-1: every vertex receives a row
       var delta = 0.0
-      var nRows = 0L
-      var tJob = 0L
-      fastRdd match {
-        case Some(rdd) =>
-          val parts = rdd.collect()
-          qR.value.destroy()
-          tJob = System.nanoTime()
-          var p = 0
-          while (p < parts.length) {
-            val (pos, rs) = parts(p)
-            nRows += pos.length
-            var k = 0
-            while (k < pos.length) {
-              val at = pos(k)
-              delta += math.abs(rs(k) - ranks(at))
-              next(at) = rs(k)
-              k += 1
-            }
-            p += 1
+      var p = 0
+      while (p < parts.length) {
+        val (pos, rs) = parts(p)
+        var k = 0
+        while (k < pos.length) {
+          val at = pos(k)
+          if (at >= 0) {
+            delta += math.abs(rs(k) - ranks(at))
+            next(at) = rs(k)
           }
-        case None =>
-          val rows = iterDf.collect()
-          rankR.value.destroy()
-          tJob = System.nanoTime()
-          nRows = rows.length
-          var k = 0
-          while (k < rows.length) {
-            val at = idx(rows(k).getLong(0))
-            val nr = rows(k).getDouble(1)
-            delta += math.abs(nr - ranks(at))
-            next(at) = nr
-            k += 1
-          }
+          k += 1
+        }
+        p += 1
       }
       ranks = next
-      if (timing) System.err.println(
-        f"prIterTiming it=$iter local=${(tLocal - t0) / 1e6}%.0f " +
-        f"job=${(tJob - tLocal) / 1e6}%.0f " +
-        f"merge=${(System.nanoTime() - tJob) / 1e6}%.0f rows=$nRows")
       if (cfg.fixedIter.isEmpty) done = delta < cfg.tol
       iterMs += (System.nanoTime() - t0) / 1000000
       iter += 1
     }
-    if (degR.value != null) degR.value.destroy()
-    degArrROpt.foreach(_.value.destroy())
-    pidxOpt.foreach(_.unpersist())
-    ((0 until n).map(k => (ids(k), ranks(k))).toDF("id", "rank"), iterMs.toSeq)
+    run.close()
+    (Superstep.frame(spark, run.ids, "rank", ranks), iterMs.toSeq)
   }
 
   /** One co-partitioned-shuffle iteration's (unpinned) next-state plan —

@@ -171,47 +171,29 @@ object Spectral {
     val symDf = GraphOps.symmetrize(edges).select("src", "dst")
     val degAgg = symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")).persist()
     val nL = degAgg.count()
-    if (nL <= broadcastStateMaxRows) {
+    if (Superstep.fits(nL, broadcastStateMaxRows)) {
       val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
         deferCacheIfHubFree = true,
         degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
       if (packed.maxSegs == 1) {
-        import graft.util.StateMap
-        val sc = spark.sparkContext
-        val n = nL.toInt
         // ids/degrees/x0 in one collect; x0 evaluated by the SAME column
         // expression the DataFrame path uses.
         val rows = degAgg.select(col("id"), col("d").cast("double").as("deg"),
           Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")).collect()
-        val ids = new Array[Long](n)
-        val degs = new Array[Double](n)
-        var x = new Array[Double](n)
-        var i = 0
+        val run = new Superstep.Run(spark, Superstep.longs(rows, 0), Some(packed),
+          ownsPack = true)
+        val n = run.n
+        val degs = Superstep.doubles(rows, 1)
+        var x = Superstep.doubles(rows, 2)
         var m2 = 0.0
         var dmax = 0.0
-        while (i < n) {
-          ids(i) = rows(i).getLong(0); degs(i) = rows(i).getDouble(1)
-          x(i) = rows(i).getDouble(2)
-          m2 += degs(i); if (degs(i) > dmax) dmax = degs(i)
-          i += 1
-        }
+        var i = 0
+        while (i < n) { m2 += degs(i); if (degs(i) > dmax) dmax = degs(i); i += 1 }
         val sigma = 3.0 * dmax + 1.0
-        val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
-        val pidx = graft.graph.PackedAdjacency.reindex(packed, idxB)
-        idxB.unpersist()
-        packed.unpersist()
-        val xR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
-        val sumDf = pidx.df.select(col("myIdx"),
-          GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y"))
-        val sumRdd = sumDf.queryExecution.toRdd.mapPartitions { it =>
-          val pb = new scala.collection.mutable.ArrayBuilder.ofInt
-          val yb = new scala.collection.mutable.ArrayBuilder.ofDouble
-          while (it.hasNext) {
-            val r = it.next()
-            pb += r.getInt(0); yb += r.getDouble(1)
-          }
-          Iterator.single((pb.result(), yb.result()))
-        }
+        val xR = new graft.util.StateMap.Ref[
+          org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
+        val job = run.values(run.dense.get.df.select(col("myIdx"),
+          GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y")))
         var it2 = 0
         while (it2 < iters) {
           var s1 = 0.0
@@ -220,9 +202,8 @@ object Spectral {
           while (j < n) { s1 += degs(j) * x(j); xx += x(j) * x(j); j += 1 }
           val n0 = math.sqrt(xx)
           val nrm = if (n0 > 0.0) n0 else 1.0
-          xR.value = sc.broadcast(x)
-          val parts = sumRdd.collect()
-          xR.value.destroy()
+          run.publish(xR, x)
+          val parts = run.collect(job, it2)
           val next = new Array[Double](n)
           var p = 0
           while (p < parts.length) {
@@ -240,17 +221,9 @@ object Spectral {
           x = next
           it2 += 1
         }
-        pidx.unpersist()
+        run.close()
         degAgg.unpersist()
-        val idsL = ids; val xL = x
-        val slices = math.max(1, math.min(sc.defaultParallelism, n / 65536 + 1))
-        val rdd = sc.parallelize(0 until n, slices)
-          .map(k => org.apache.spark.sql.Row(idsL(k), xL(k)))
-        return spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("x",
-            org.apache.spark.sql.types.DoubleType, nullable = false))))
+        return Superstep.frame(spark, run.ids, "x", x)
       }
       packed.unpersist()
     }

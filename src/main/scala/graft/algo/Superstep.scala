@@ -1,0 +1,266 @@
+package graft.algo
+
+import scala.collection.mutable.{ArrayBuffer, LongMap}
+import scala.reflect.ClassTag
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import graft.graph.{PackedAdj, PackedAdjacency, PackedIdxAdj}
+import graft.util.{DeltaState, Portable, StateMap}
+
+/** The driver-state superstep engine shared by every broadcast-state loop
+  * (Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral) and by
+  * the driver-side strategies of ConnectedComponents.
+  *
+  * Strategy: when the V-row state fits a row budget it lives in DRIVER
+  * arrays between rounds, and a round is ONE single-stage Spark job over
+  * the cached (CSR-packed) adjacency that collects only the rows that
+  * change something. Each algorithm supplies its kernel plan, its merge
+  * rule and its own bookkeeping; this object owns the rest:
+  *
+  *  - StateGate (`stateGate` / `fits`): one capped collect decides the
+  *    strategy AND already is the driver-state collect. The cap is clamped
+  *    to `Int.MaxValue - 2` (collect arrays are int-indexed) and the
+  *    collected length is compared against that CLAMPED cap, so a
+  *    truncated collect is never taken for a complete one. A budget <= 0
+  *    means "over budget" without running a job — the forced-shuffle
+  *    setting.
+  *  - Vertex numbering (`Run`): collected ids become dense positions; the
+  *    id -> position map feeds the reindex and the hash-layout key.
+  *  - Layout and pack ownership: hub-free packs (`maxSegs == 1`) are
+  *    remapped once to dense positions (PackedAdjacency.reindex) so a
+  *    round's state is a bare primitive array; hub packs keep the hash
+  *    kernels over broadcast primitive maps. An own pack is released as
+  *    soon as it is no longer needed; a caller's shared pack never is.
+  *  - Plans are built ONCE over StateMap.Ref cells and re-collected every
+  *    round; the Refs carry per-round BROADCAST HANDLES (`publish`), not
+  *    the state itself — a handle serializes to an id and the value ships
+  *    executor-cached, while a bare array in the closure is re-deserialized
+  *    by every task (measured 2x slower). No per-round planning or codegen.
+  *  - Delta transport (`Delta`): the per-round broadcast is a small
+  *    DeltaState.Payload — a base snapshot handle plus cumulative absolute
+  *    overrides; the base is republished once the delta passes V/4.
+  *  - Primitive collect (`moves` / `values`): rows come back as
+  *    per-partition primitive arrays read straight off the codegen'd
+  *    InternalRow iterator. Row-based DataFrame.collect deserializes and
+  *    boxes every row serially on the driver — a per-round cost that does
+  *    not shrink with cluster size. Rows are keyed by state POSITION; on
+  *    the hash layout the position is looked up in-plan from the id.
+  *  - The output frame (`frame`): parallelized indices over the driver
+  *    arrays, NOT a LocalRelation (`toDF` on a local Seq). A LocalRelation
+  *    serializes V rows into the plan on every use (checkpoint, potential),
+  *    and a join against it re-introduces the broadcast-build job the
+  *    StateMap lookups exist to avoid. Parallelized indices
+  *    ship the arrays once per job in the taskBinary, rows materialize in
+  *    executors, and the LogicalRDD carries no stats, so a downstream join
+  *    never tries to broadcast-build the state side.
+  */
+object Superstep {
+
+  type Moves = (Array[Int], Array[Long], Array[Boolean])
+  type Values = (Array[Int], Array[Double])
+
+  /** StateGate decision: does a capped collect of `collected` rows hold
+    * the whole state under `budget`? */
+  private[graft] def fits(collected: Long, budget: Long): Boolean =
+    budget > 0 && collected <= math.min(budget, Int.MaxValue - 2L)
+
+  /** StateGate: the state's rows when they fit `budget`, else None (one
+    * job, none when the budget is <= 0). */
+  def stateGate(state: DataFrame, budget: Long): Option[Array[Row]] =
+    if (budget <= 0) None
+    else {
+      val cap = math.min(budget, Int.MaxValue - 2L).toInt
+      val rows = state.limit(cap + 1).collect()
+      if (fits(rows.length, budget)) Some(rows) else None
+    }
+
+  def longs(rows: Array[Row], c: Int): Array[Long] = {
+    val a = new Array[Long](rows.length)
+    var i = 0
+    while (i < a.length) { a(i) = rows(i).getLong(c); i += 1 }
+    a
+  }
+
+  def doubles(rows: Array[Row], c: Int): Array[Double] = {
+    val a = new Array[Double](rows.length)
+    var i = 0
+    while (i < a.length) { a(i) = rows(i).getDouble(c); i += 1 }
+    a
+  }
+
+  /** (key, value) frame over the driver arrays (see the object doc). */
+  def frame(spark: SparkSession, ids: Array[Long], name: String, vals: Array[Long]): DataFrame =
+    frameOf(spark, ids, name, LongType, j => vals(j))
+
+  def frame(spark: SparkSession, ids: Array[Long], name: String, vals: Array[Double]): DataFrame =
+    frameOf(spark, ids, name, DoubleType, j => vals(j))
+
+  private def frameOf(spark: SparkSession, ids: Array[Long], name: String, dt: DataType,
+                      v: Int => Any): DataFrame = {
+    val sc = spark.sparkContext
+    val n = ids.length
+    val slices = math.max(1, math.min(sc.defaultParallelism, n / 65536 + 1))
+    val rdd = sc.parallelize(0 until n, slices).map(j => Row(ids(j), v(j)))
+    spark.createDataFrame(rdd, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField(name, dt, nullable = false))))
+  }
+
+  /** (position, long, flag) rows as per-partition primitive arrays. */
+  private def movesOf(plan: DataFrame): RDD[Moves] =
+    plan.queryExecution.toRdd.mapPartitions { it =>
+      val pb = new scala.collection.mutable.ArrayBuilder.ofInt
+      val vb = new scala.collection.mutable.ArrayBuilder.ofLong
+      val fb = new scala.collection.mutable.ArrayBuilder.ofBoolean
+      while (it.hasNext) {
+        val r = it.next()
+        pb += r.getInt(0); vb += r.getLong(1); fb += r.getBoolean(2)
+      }
+      Iterator.single((pb.result(), vb.result(), fb.result()))
+    }
+
+  /** (position, double) rows as per-partition primitive arrays. */
+  private def valuesOf(plan: DataFrame): RDD[Values] =
+    plan.queryExecution.toRdd.mapPartitions { it =>
+      val pb = new scala.collection.mutable.ArrayBuilder.ofInt
+      val vb = new scala.collection.mutable.ArrayBuilder.ofDouble
+      while (it.hasNext) {
+        val r = it.next()
+        pb += r.getInt(0); vb += r.getDouble(1)
+      }
+      Iterator.single((pb.result(), vb.result()))
+    }
+
+  /** The (key, value) arrays of a LongMap, for broadcast payloads. */
+  private def entries(m: LongMap[Long]): (Array[Long], Array[Long]) = {
+    val ks = new Array[Long](m.size)
+    val vs = new Array[Long](m.size)
+    var j = 0
+    m.foreachEntry { (k, v) => ks(j) = k; vs(j) = v; j += 1 }
+    (ks, vs)
+  }
+
+  /** One driver-state run over the state vertices `ids` (in collect
+    * order: position i holds ids(i)). `packed` is the adjacency the plans
+    * scan, if any — a hub-free pack is remapped to dense positions
+    * (`dense`), a hub pack stays on the hash kernels. `ownsPack` = the run
+    * built the pack itself and may release it. Call `close()` when done. */
+  final class Run(val spark: SparkSession, val ids: Array[Long],
+                  packed: Option[PackedAdj] = None, ownsPack: Boolean = false) {
+    val sc = spark.sparkContext
+    val n: Int = ids.length
+    private val posOf = StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n)
+    val round = new StateMap.Ref[Integer](Integer.valueOf(0))
+    private val live = ArrayBuffer.empty[Broadcast[_]]  // destroyed after each collect
+    private val owned = ArrayBuffer.empty[Broadcast[_]] // destroyed by close()
+
+    val dense: Option[PackedIdxAdj] = packed.filter(_.maxSegs == 1).map { p =>
+      val idxB = sc.broadcast(posOf)
+      val pidx = PackedAdjacency.reindex(p, idxB)
+      // unpersist, not destroy: a lost cache partition re-runs the remap
+      // lineage, which still needs the broadcast re-shippable.
+      idxB.unpersist()
+      if (ownsPack) p.unpersist()
+      pidx
+    }
+
+    val delta = new Delta(this)
+
+    /** The parity gate on `id`, keyed on the round this run is collecting. */
+    def parityGate(on: Boolean): Column =
+      if (on) Portable.parityGate(col("id"), StateMap.intRef(round)) else lit(true)
+
+    /** A broadcast that lives for the whole run. */
+    def once[T: ClassTag](v: T): StateMap.Ref[Broadcast[T]] = {
+      val b = sc.broadcast(v); owned += b; new StateMap.Ref(b)
+    }
+
+    /** Publish this round's value into `r`; destroyed after the collect. */
+    def publish[T: ClassTag](r: StateMap.Ref[Broadcast[T]], v: T): Unit = {
+      val b = sc.broadcast(v); live += b; r.value = b
+    }
+
+    private lazy val posR = once(posOf)
+
+    /** Position-key a plan: dense-layout plans already emit the state
+      * position first; hash-layout plans emit the id, looked up in-plan
+      * (ids outside the state table become -1, which merges skip). */
+    private def keyed(plan: DataFrame): DataFrame =
+      if (dense.isDefined) plan
+      else {
+        val c = plan.columns
+        plan.select(coalesce(StateMap.lookup(posR, col(c(0))).cast("int"), lit(-1)) +:
+          c.toSeq.tail.map(col): _*)
+      }
+
+    def moves(plan: DataFrame): () => RDD[Moves] = job(keyed(plan))(movesOf)
+    def values(plan: DataFrame): () => RDD[Values] = job(keyed(plan))(valuesOf)
+
+    /** A round's RDD over `plan`. Dense-layout plans only scan the cached
+      * pack, so one RDD serves every round. Hash-layout plans may hold an
+      * exchange (hub branch, row aggregate), and re-running a physical plan
+      * reuses its shuffle output — stale state — so they are re-planned
+      * each round. */
+    def job[P](plan: DataFrame)(rddOf: DataFrame => RDD[P]): () => RDD[P] =
+      if (dense.isDefined) { val rdd = rddOf(plan); () => rdd }
+      else () => rddOf(plan.select(plan.columns.map(col): _*))
+
+    /** Run round `epoch`'s job and release its published broadcasts. */
+    def collect[P](job: () => RDD[P], epoch: Int): Array[P] = {
+      round.value = Integer.valueOf(epoch)
+      val parts = job().collect()
+      live.foreach(_.destroy()); live.clear()
+      parts
+    }
+
+    def close(): Unit = {
+      delta.close()
+      owned.foreach(_.destroy()); owned.clear()
+      dense match {
+        case Some(p) => p.unpersist()
+        case None    => if (ownsPack) packed.foreach(_.unpersist())
+      }
+    }
+  }
+
+  /** Driver side of the delta transport (see DeltaState): the base
+    * snapshot broadcast, the cumulative absolute overrides since it (state
+    * position -> value, size key -> size), and the per-round Payload in
+    * `ref`. Absolute overrides keep executor-side application idempotent. */
+  final class Delta private[Superstep] (run: Run) {
+    val ref = new StateMap.Ref[Broadcast[DeltaState.Payload]](null)
+    private val runId = DeltaState.newRunId()
+    private var base: Broadcast[DeltaState.FullState] = null
+    private var baseEpoch = 0
+    private val cumPos = new LongMap[Long]()
+    private val cumSizes = new LongMap[Long]()
+
+    def set(at: Int, v: Long): Unit = cumPos(at.toLong) = v
+    def setSize(k: Long, size: Long): Unit = cumSizes(k) = size
+
+    /** Publish round `epoch`: refresh the base from `vals`/`sizes` when
+      * there is none or the delta has grown past V/4 (no job is in flight
+      * here, so destroying the old base is safe). */
+    def publish(epoch: Int, vals: Array[Long], sizes: LongMap[Long]): Unit = {
+      if (base == null || cumPos.size > run.n / 4) {
+        val (ks, vs) = entries(sizes)
+        val nb = run.sc.broadcast(new DeltaState.FullState(vals.clone(), ks, vs))
+        if (base != null) base.destroy()
+        base = nb; baseEpoch = epoch
+        cumPos.clear(); cumSizes.clear()
+      }
+      val dp = new Array[Int](cumPos.size)
+      val dc = new Array[Long](cumPos.size)
+      var j = 0
+      cumPos.foreachEntry { (p, c) => dp(j) = p.toInt; dc(j) = c; j += 1 }
+      val (sk, sv) = entries(cumSizes)
+      run.publish(ref, new DeltaState.Payload(runId, epoch, baseEpoch, base, dp, dc, sk, sv))
+    }
+
+    private[Superstep] def close(): Unit =
+      if (base != null) { base.destroy(); base = null }
+  }
+}

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** CSR-packed adjacency cache + hub segmentation metadata (see
   * PackedAdjacency.build). `maxSegs == 1` means no vertex exceeded the
   * segment cap, so plan builders can skip the hub-combine branch
-  * entirely. Caller owns the cache lifetime (unpersist()). */
+  * entirely. Caller owns the cache lifetime (unpersist()). `cached` is
+  * false for a deferred hub-free build (see build): its unpersist is a
+  * no-op, so it cannot evict a cached pack over the same plan. */
 final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
-                           degSum: Long = 0L) {
-  def unpersist(): Unit = { df.unpersist(); () }
+                           degSum: Long = 0L, cached: Boolean = true) {
+  def unpersist(): Unit = if (cached) df.unpersist()
 }
 
 /** Dense-index remap of a hub-free packed adjacency: neighbor arrays hold
@@ -187,10 +189,9 @@ object PackedAdjacency {
           }
         }.toDF("id", "nsegs", "nbrs")
     val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
-    val packed =
-      if (deferCacheIfHubFree && maxSegs == 1) packed1
-      else { val p = packed1.persist(); p.count(); p }
-    PackedAdj(packed, maxSegs, weighted, degSum)
+    val defer = deferCacheIfHubFree && maxSegs == 1
+    if (!defer) { packed1.persist(); packed1.count() }
+    PackedAdj(packed1, maxSegs, weighted, degSum, cached = !defer)
   }
 
   /** Remap a hub-free (`maxSegs == 1`) packed adjacency to dense state

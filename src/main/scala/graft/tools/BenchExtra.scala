@@ -310,31 +310,6 @@ object BenchExtra {
           }
         }
       }),
-      // ---- pagerank: indexed (reindex + dense kernels) vs hash kernels
-      // for SHORT runs (fixedIter = 3)
-      "pr3_idx_ab" -> (() => timed("pr3_idx_ab") {
-        val e = graft.io.Iterate.pin(
-          graft.ingest.EdgeExtraction.cooccurrence(li, "l_suppkey", "l_partkey", 1000).toDF())
-          .as[graft.model.Edge]
-        timed("  pr3_indexed") {
-          noop(graft.algo.PageRank.run(e, graft.algo.PageRank.Config(fixedIter = Some(3)))
-            .select(col("id"), round(col("rank"), 6).as("rank")))
-        }
-        timed("  pr3_hash") {
-          noop(graft.algo.PageRank.run(e,
-            graft.algo.PageRank.Config(fixedIter = Some(3), indexedState = false))
-            .select(col("id"), round(col("rank"), 6).as("rank")))
-        }
-        timed("  pr3_indexed2") {
-          noop(graft.algo.PageRank.run(e, graft.algo.PageRank.Config(fixedIter = Some(3)))
-            .select(col("id"), round(col("rank"), 6).as("rank")))
-        }
-        timed("  pr3_hash2") {
-          noop(graft.algo.PageRank.run(e,
-            graft.algo.PageRank.Config(fixedIter = Some(3), indexedState = false))
-            .select(col("id"), round(col("rank"), 6).as("rank")))
-        }
-      }),
       // ---- containment sub-steps
       "containment_steps" -> (() => timed("containment_steps") {
         import org.apache.spark.sql.expressions.Window
@@ -560,14 +535,7 @@ object BenchExtra {
             k += 1
           }
           println(s"    movers=${rows.length}")
-          noop(spark2.createDataFrame(
-            sc.parallelize(0 until n, 8)
-              .map(j => org.apache.spark.sql.Row(ids(j), comms(j))),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("community",
-                org.apache.spark.sql.types.LongType, nullable = false)))))
+          noop(graft.algo.Superstep.frame(spark2, ids, "community", comms))
         }
       }),
       // ---- containment candidate-count A/B (deterministic, noise-free):

@@ -1,6 +1,7 @@
 package graft
 
-import graft.algo.{Hedonic, LabelPropagation, PageRank}
+import org.apache.spark.sql.functions.col
+import graft.algo.{Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral}
 import graft.graph.{GraphOps, PackedAdjacency}
 
 /** Pack-once, run-many: a caller-built CSR pack of the symmetrized edges is
@@ -46,6 +47,22 @@ class SharedPackSpec extends SparkSpec {
     assert(pack.df.storageLevel.useMemory,
       "shared pack was unpersisted by LabelPropagation.run")
     assert(shL == ownL)
+    // The other driver-state loops take no shared pack: the one-step
+    // hedonic fast path and bestLabels build none, the frontier executor
+    // and the spectral vector build their own. None of them may release
+    // the shared pack (or leak a cache — checked below).
+    val others = Seq[(String, () => Long)](
+      "HedonicFrontier.run" -> (() => HedonicFrontier.run(e, init, cfgH)._1.count()),
+      "one-step Hedonic.run" ->
+        (() => Hedonic.run(e, init, cfgH.copy(maxSupersteps = 1))._1.count()),
+      "LabelPropagation.bestLabels" -> (() => LabelPropagation.bestLabels(
+        GraphOps.symmetrize(e).select("src", "dst"),
+        GraphOps.vertices(e).select(col("id"), col("id").as("label"))).count()),
+      "Spectral.wholeGraphVector" -> (() => Spectral.wholeGraphVector(e, iters = 5).count()))
+    others.foreach { case (who, body) =>
+      assert(body() == 8L, s"$who: wrong row count")
+      assert(pack.df.storageLevel.useMemory, s"shared pack was unpersisted by $who")
+    }
 
     assert(toMap(shH) == ownHM)
     assert(shMet.map(m => (m.superstep, m.moved, m.frontier)) ==

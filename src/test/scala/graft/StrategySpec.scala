@@ -180,21 +180,33 @@ class StrategySpec extends SparkSpec {
   }
 
   // --- dense-index vs hash-probe kernel A/B (PackedAdjacency.reindex) ---
-  // indexedState toggles ONLY the state representation (bare values array
-  // through int position arrays vs broadcast hash maps); the shared kernel
-  // tails must make every decision — and every per-superstep counter —
-  // identical, unweighted and weighted.
+  // The pack decides the state representation: a hub-free pack
+  // (maxSegs == 1) runs the dense-index kernels (bare values array through
+  // int position arrays), any other the hash kernels (broadcast hash
+  // maps). Both sides run on ONE prebuilt pack p; the hash side gets
+  // p.copy(maxSegs = 2), whose hub branch then selects no rows, so only the
+  // state representation differs. The shared kernel tails must make every
+  // decision — and every per-superstep counter — identical, unweighted
+  // and weighted.
+  private def packOf(e: org.apache.spark.sql.Dataset[graft.model.Edge],
+                     weighted: Boolean = false): graft.graph.PackedAdj = {
+    val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+    graft.graph.PackedAdjacency.build(
+      graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted)
+  }
 
   test("hedonic: indexed and hash packed kernels decide identically") {
     val e = edgesOf(pairs)
     val init = membersOf(Seq((0L, 5L), (1L, 0L), (2L, 0L), (3L, 1L),
       (4L, 1L), (5L, 0L), (6L, 1L), (7L, 5L)))
     val cfg = Hedonic.Config(maxSupersteps = 40)
-    val (mI, metI) = Hedonic.run(e, init, cfg)
-    val (mH, metH) = Hedonic.run(e, init, cfg.copy(indexedState = false))
+    val p = packOf(e)
+    val (mI, metI) = Hedonic.run(e, init, cfg, Some(p))
+    val (mH, metH) = Hedonic.run(e, init, cfg, Some(p.copy(maxSegs = 2)))
     assert(toMap(mI) == toMap(mH))
     assert(metI.map(m => (m.superstep, m.moved, m.frontier)) ==
       metH.map(m => (m.superstep, m.moved, m.frontier)))
+    p.unpersist()
   }
 
   test("hedonic: WEIGHTED indexed and hash packed kernels agree") {
@@ -204,20 +216,24 @@ class StrategySpec extends SparkSpec {
     }.toDS()
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
     val cfg = Hedonic.Config(maxSupersteps = 40, weighted = true)
-    val (mI, _) = Hedonic.run(wedges, init, cfg)
-    val (mH, _) = Hedonic.run(wedges, init, cfg.copy(indexedState = false))
+    val p = packOf(wedges, weighted = true)
+    val (mI, _) = Hedonic.run(wedges, init, cfg, Some(p))
+    val (mH, _) = Hedonic.run(wedges, init, cfg, Some(p.copy(maxSegs = 2)))
     assert(toMap(mI) == toMap(mH))
+    p.unpersist()
   }
 
   test("pagerank: indexed (pre-divided) and hash kernels agree bitwise") {
     val e = edgesOf(Fixtures.zachary)
     val cfg = PageRank.Config(fixedIter = Some(20))
-    val i = PageRank.run(e, cfg)
+    val p = packOf(e)
+    val i = PageRank.runTimed(e, cfg, None, Some(p))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.run(e, cfg.copy(indexedState = false))
+    val h = PageRank.runTimed(e, cfg, None, Some(p.copy(maxSegs = 2)))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // Same divisions, same neighbor order: EXACT equality, not allclose.
     assert(i == h)
+    p.unpersist()
   }
 
   test("pagerank: WEIGHTED indexed and hash kernels agree bitwise") {
@@ -226,21 +242,54 @@ class StrategySpec extends SparkSpec {
       graft.model.Edge(u, v, ((u + 2 * v) % 5 + 1).toDouble)
     }.toDS()
     val cfg = PageRank.Config(fixedIter = Some(20), weighted = true)
-    val i = PageRank.run(wedges, cfg)
+    val p = packOf(wedges, weighted = true)
+    val i = PageRank.runTimed(wedges, cfg, None, Some(p))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.run(wedges, cfg.copy(indexedState = false))
+    val h = PageRank.runTimed(wedges, cfg, None, Some(p.copy(maxSegs = 2)))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(i == h)
+    p.unpersist()
   }
 
   test("lpa: indexed and hash packed kernels produce identical labels") {
     val e = edgesOf(pairs)
-    val i = toMap(LabelPropagation.run(e))
-    val h = toMap(LabelPropagation.run(e, indexedState = false))
+    val p = packOf(e)
+    val i = toMap(LabelPropagation.run(e, packedOpt = Some(p)))
+    val h = toMap(LabelPropagation.run(e, packedOpt = Some(p.copy(maxSegs = 2))))
     assert(i == h)
-    val iw = toMap(LabelPropagation.run(e, weighted = true))
-    val hw = toMap(LabelPropagation.run(e, weighted = true, indexedState = false))
+    val pw = packOf(e, weighted = true)
+    val iw = toMap(LabelPropagation.run(e, weighted = true, packedOpt = Some(pw)))
+    val hw = toMap(LabelPropagation.run(e, weighted = true,
+      packedOpt = Some(pw.copy(maxSegs = 2))))
     assert(iw == hw)
+    p.unpersist(); pw.unpersist()
+  }
+
+  test("hub packs: multi-round hash-layout runs match the shuffle path") {
+    // segCap = 2 splits every degree-3 vertex into two segments, so the
+    // hub branch (per-segment partials + an aggregate exchange) decides
+    // for real vertices in every round.
+    val e = edgesOf(pairs)
+    val hub = graft.graph.PackedAdjacency.build(
+      graft.graph.GraphOps.symmetrize(e).select("src", "dst"), "src", segCap = 2)
+    assert(hub.maxSegs == 2)
+    val init = membersOf((0L to 7L).map(i => (i, i)))
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (mH, metH) = Hedonic.run(e, init, cfg, Some(hub))
+    val (mS, metS) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = 0L))
+    assert(toMap(mH) == toMap(mS))
+    assert(metH.map(m => (m.superstep, m.moved, m.frontier)) ==
+      metS.map(m => (m.superstep, m.moved, m.frontier)))
+    assert(toMap(LabelPropagation.run(e, packedOpt = Some(hub))) ==
+      toMap(LabelPropagation.run(e, broadcastStateMaxRows = 0L)))
+    val cfgP = PageRank.Config(fixedIter = Some(20))
+    val rH = PageRank.runTimed(e, cfgP, None, Some(hub))._1
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val rS = PageRank.run(e, cfgP.copy(broadcastStateMaxRows = 0L))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(rH.keySet == rS.keySet)
+    rH.foreach { case (id, r) => assert(math.abs(r - rS(id)) < 1e-12) }
+    hub.unpersist()
   }
 
   test("indexed superstep plans contain zero spine shuffle exchanges") {
