@@ -487,15 +487,16 @@ object Hedonic {
       cfg: Config = Config(),
       packedOpt: Option[graft.graph.PackedAdj] = None): (DataFrame, Seq[RunMetrics]) = {
     val spark = edges.sparkSession
-    // alpha and (V, 2E) from the SAME job when alpha defaults to density —
-    // the one-shot fast path below reuses the edge count for its metrics
-    // row instead of running a second pass (round 6).
-    val (a, veOpt) = cfg.alpha match {
+    // alpha and the degree summary (V, 2E, max degree) from the SAME job
+    // when alpha defaults to density — the pack build takes the summary in
+    // place of its own stats job, and the one-shot fast path below reuses
+    // 2E for its metrics row instead of running a second pass.
+    val (a, degrees) = cfg.alpha match {
       case Some(x) => (x, None)
       case None =>
-        val ve = GraphOps.vertexEdgeCounts(edges)
-        val d = if (ve._1 < 2) 0.0 else 2.0 * ve._2 / (ve._1.toDouble * (ve._1 - 1))
-        (d, Some(ve))
+        val s = GraphOps.degreeSummary(edges)
+        val (v, e) = (s.vertices, s.degSum / 2)
+        (if (v < 2) 0.0 else 2.0 * e / (v.toDouble * (v - 1)), Some(s))
     }
     val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, cfg.checkpointEvery))
 
@@ -531,9 +532,10 @@ object Hedonic {
             graft.graph.PackedAdjacency.build(
               GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
               weighted = cfg.weighted, deferCacheIfHubFree = true,
-              partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
+              partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
+              degrees = degrees)
           })
-        val edgeCount = packed.fold(2 * veOpt.getOrElse(GraphOps.vertexEdgeCounts(edges))._2)(_.degSum)
+        val edgeCount = packed.fold(degrees.getOrElse(GraphOps.degreeSummary(edges)).degSum)(_.degSum)
         return runDriverState(edges, packed, rows, startStep, a, edgeCount, cfg,
           ckpt, ownsPack = packedOpt.isEmpty)
       case None =>
@@ -688,7 +690,7 @@ object Hedonic {
         val metricsJson = Checkpoint.json(Map(
           "moved" -> moved, "wanted" -> wanted,
           "potential" -> (if (pot.isNaN) null else pot), "wallMs" -> wallMs))
-        ckpt.get.truncate(stateDF, superstep, metricsJson) // durable snapshot
+        ckpt.get.snapshot(stateDF, superstep, metricsJson) // durable, not re-read
       }
       converged = wanted == 0L
       superstep += 1

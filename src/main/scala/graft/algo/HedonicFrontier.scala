@@ -162,6 +162,20 @@ object HedonicFrontier {
     (state.select("id", "community"), metrics)
   }
 
+  /** The activation round's task: one partition's neighbor positions as
+    * a sorted, duplicate-free int array. */
+  private object ActivatedTask extends Superstep.Task[Array[Int]] {
+    def apply(ctx: org.apache.spark.TaskContext,
+              it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Array[Int] = {
+      val bs = new java.util.BitSet()
+      while (it.hasNext) bs.set(it.next().getInt(0))
+      val out = new scala.collection.mutable.ArrayBuilder.ofInt
+      var b = bs.nextSetBit(0)
+      while (b >= 0) { out += b; b = bs.nextSetBit(b + 1) }
+      out.result()
+    }
+  }
+
   /** Broadcast-state frontier loop (see run()) on the Superstep engine.
     * Per superstep:
     *  - job 1 ("decide"): the packed superstep plan restricted to ACTIVE
@@ -204,14 +218,7 @@ object HedonicFrontier {
       .select(StateMap.longAt(postCommR, col("myIdx")).as("mc"),
         explode(col("nbrs")).as("p"))
       .filter(col("p") >= 0 && StateMap.longAt(postCommR, col("p")) =!= col("mc"))
-      .select(col("p")))(_.queryExecution.toRdd.mapPartitions { it =>
-        val bs = new java.util.BitSet()
-        while (it.hasNext) bs.set(it.next().getInt(0))
-        val out = new scala.collection.mutable.ArrayBuilder.ofInt
-        var b = bs.nextSetBit(0)
-        while (b >= 0) { out += b; b = bs.nextSetBit(b + 1) }
-        Iterator.single(out.result())
-      })
+      .select(col("p")), ActivatedTask)
 
     var active = Array.fill(n)(true)
     var frontierSize = n.toLong

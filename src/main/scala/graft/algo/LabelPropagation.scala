@@ -65,33 +65,52 @@ object LabelPropagation {
           weighted: Boolean = false,
           broadcastStateMaxRows: Long = 4000000L,
           packedOpt: Option[graft.graph.PackedAdj] = None): DataFrame = {
-    val init = initOpt
-      .map(_.select(col("id"), col("label")))
-      .getOrElse(GraphOps.vertices(edges).select(col("id"), col("id").as("label")))
-    // one capped materialization = strategy decision + driver-state collect
-    // (Superstep.stateGate)
-    Superstep.stateGate(init, broadcastStateMaxRows) match {
+    val spark = edges.sparkSession
+    val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+    def symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
+    // The default init (every vertex its own label) comes with its row
+    // count in hand: a shared pack's V, or the own-pack degree table,
+    // persisted and counted once — over budget that count alone decides,
+    // within budget one exact collect is the state AND the pack build's
+    // degree summary. A caller's init gets one capped collect.
+    val degAgg = Option.when(initOpt.isEmpty && packedOpt.isEmpty)(
+      symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")).persist())
+    val (state, known) = (initOpt, packedOpt) match {
+      case (Some(i), _) => (i.select(col("id"), col("label")), None)
+      case (None, Some(p)) =>
+        val ids = if (p.maxSegs == 1) p.df.select("id") else p.df.select("id").distinct()
+        (ids.select(col("id"), col("id").as("label")), Some(p.vertices))
+      case (None, None) =>
+        (degAgg.get.select(col("id"), col("id").as("label"), col("d")), Some(degAgg.get.count()))
+    }
+    Superstep.stateGate(state, broadcastStateMaxRows, known) match {
       case Some(rows) =>
         // Broadcast-state strategy iterates over the CSR-packed adjacency
         // (see PackedAdjacency / stepPlanPacked).
         packedOpt.foreach(p => require(p.weighted == weighted,
           s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
         val packed = packedOpt.getOrElse {
-          val symCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-          val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
           graft.graph.PackedAdjacency.build(symDf, "src", weighted,
-            deferCacheIfHubFree = true)
+            deferCacheIfHubFree = true,
+            degOpt = degAgg.map(_.select(col("id").as("src"), col("d"))),
+            degrees = degAgg.map(_ => graft.graph.DegreeSummary.of(Superstep.longs(rows, 2))))
         }
-        return runDriverState(edges.sparkSession, Right(packed), rows, maxIter,
-          parityGating, weighted, ownsPack = packedOpt.isEmpty, "label")
+        val out = runDriverState(spark, Right(packed), Superstep.longs(rows, 0),
+          Superstep.longs(rows, 1), maxIter, parityGating, weighted,
+          ownsPack = packedOpt.isEmpty, "label")
+        degAgg.foreach(_.unpersist())
+        return out
       case None =>
     }
+    val init = state.select("id", "label")
     // Shuffle path: cached pre-partitioned on dst (the join key); only the
     // V-row label side re-exchanges per round.
     val sym = GraphOps.pinnedSym(edges, "dst", weighted, sorted = true)
 
-    var labels = Iterate.pin(init)
-    var prevPin: Option[Iterate.Pinned] = None
+    val initPin = Iterate.pinned(init)
+    degAgg.foreach(_.unpersist())
+    var labels = initPin.df
+    var prevPin: Option[Iterate.Pinned] = Some(initPin)
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
@@ -128,8 +147,9 @@ object LabelPropagation {
                  broadcastStateMaxRows: Long = 4000000L): DataFrame =
     Superstep.stateGate(labels.select("id", "label"), broadcastStateMaxRows) match {
       case Some(rows) =>
-        runDriverState(labels.sparkSession, Left(sym), rows, maxIter = 1,
-          parityGating = false, weighted, ownsPack = false, "bestLabel")
+        runDriverState(labels.sparkSession, Left(sym), Superstep.longs(rows, 0),
+          Superstep.longs(rows, 1), maxIter = 1, parityGating = false, weighted,
+          ownsPack = false, "bestLabel")
       case None => step(sym, labels, weighted).select(col("id"), col("bestLabel"))
     }
 
@@ -238,11 +258,10 @@ object LabelPropagation {
     * map-state one-shot votes over. The output's label column is `name`. */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
       adj: Either[DataFrame, graft.graph.PackedAdj],
-      init0: Array[org.apache.spark.sql.Row], maxIter: Int, parityGating: Boolean,
+      ids: Array[Long], labs: Array[Long], maxIter: Int, parityGating: Boolean,
       weighted: Boolean, ownsPack: Boolean, name: String): DataFrame = {
     import graft.util.StateMap
-    val run = new Superstep.Run(spark, Superstep.longs(init0, 0), adj.toOption, ownsPack)
-    val labs = Superstep.longs(init0, 1)
+    val run = new Superstep.Run(spark, ids, adj.toOption, ownsPack)
     val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
     val gate = run.parityGate(parityGating)
     val dense = run.dense.isDefined

@@ -89,114 +89,80 @@ object PageRank {
   def runTimed(edges: Dataset[Edge], cfg: Config = Config(),
           verticesOpt: Option[DataFrame] = None,
           packedOpt: Option[graft.graph.PackedAdj] = None): (DataFrame, Seq[Long]) = {
-    // Round-6 setup dedup for the COMMON case (edge-derived vertex set, no
-    // prebuilt pack): ONE E-row degree aggregate yields the vertex count
-    // (the strategy decision), the pack build's segmentation degrees, and
-    // the rank-degree table. The old path made three separate passes over
-    // the symmetrized edges (a 2E-row vertices().distinct(), the build's
-    // own degree aggregate, and the rank-degree aggregate).
-    if (verticesOpt.isEmpty && packedOpt.isEmpty) {
-      val spark = edges.sparkSession
-      val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-      val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-      val degAgg =
-        (if (cfg.weighted)
-          symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"),
-            sum(col("weight").cast("double")).as("deg"))
-        else
-          symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))).persist()
-      val v = degAgg.count().toDouble
-      val deg =
-        if (cfg.weighted) degAgg.select(col("id"), col("deg"))
-        else degAgg.select(col("id"), col("d").cast("double").as("deg"))
-      if (Superstep.fits(v.toLong, cfg.broadcastStateMaxRows)) {
-        val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-          deferCacheIfHubFree = true, partitions = cfg.packPartitions,
-          cachePartitions = cfg.cachePartitions,
-          degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
-        val out = runDriverState(spark, packed, deg, v, cfg, ownsPack = true)
+    val spark = edges.sparkSession
+    (verticesOpt, packedOpt) match {
+      case (None, None) =>
+        // ONE degree pass for the common case (edge-derived vertex set, own
+        // pack): the persisted degree table is counted once — the strategy
+        // decision, no job over budget — and, when V fits, collected once.
+        // Its rows are the state ids, the rank degrees and the pack build's
+        // degree summary (no stats or segment-join jobs on hub-free graphs).
+        val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+        val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
+        val degAgg =
+          (if (cfg.weighted)
+            symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"),
+              sum(col("weight").cast("double")).as("deg"))
+          else
+            symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))).persist()
+        val v = degAgg.count()
+        val out = Superstep.stateGate(degAgg, cfg.broadcastStateMaxRows, Some(v)) match {
+          case Some(rows) =>
+            val d = Superstep.longs(rows, 1)
+            val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
+              deferCacheIfHubFree = true, partitions = cfg.packPartitions,
+              cachePartitions = cfg.cachePartitions,
+              degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))),
+              degrees = Some(graft.graph.DegreeSummary.of(d)))
+            val degs = if (cfg.weighted) Superstep.doubles(rows, 2) else d.map(_.toDouble)
+            runDriverState(spark, packed, Superstep.longs(rows, 0), degs, v.toDouble, cfg,
+              ownsPack = true)
+          case None =>
+            // over-budget V: co-partitioned shuffle path, no dangling (min deg 1)
+            val deg =
+              if (cfg.weighted) degAgg.select(col("id"), col("deg"))
+              else degAgg.select(col("id"), col("d").cast("double").as("deg"))
+            runShuffle(edges, cfg, deg, v.toDouble, mayDangle = false)
+        }
         degAgg.unpersist()
-        return out
-      }
-      // over-budget V: co-partitioned shuffle path, no dangling (min deg 1)
-      val out = runShuffle(edges, cfg, deg, v, mayDangle = false)
-      degAgg.unpersist()
-      return out
-    }
-    // With a prebuilt pack the vertex count comes off the cached V-row
-    // pack (distinct over ids — multi-segment hubs repeat) instead of a
-    // 2E-row distinct over the raw edges.
-    val vertsOpt = packedOpt match {
-      case Some(_) if verticesOpt.isEmpty => None
+        out
+      case (None, Some(p)) if Superstep.fits(p.vertices, cfg.broadcastStateMaxRows) =>
+        // Caller's pack: V is the pack's own, degrees come off the cached
+        // V-row pack (multi-segment hub vertices contribute one row per
+        // segment, hence the groupBy).
+        require(p.weighted == cfg.weighted,
+          s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}")
+        val vd = (if (cfg.weighted)
+            p.df.groupBy(col("id")).agg(
+              sum(aggregate(col("wts"), lit(0.0), (acc, x) => acc + x)).as("deg"))
+          else
+            p.df.groupBy(col("id")).agg(sum(size(col("nbrs"))).cast("double").as("deg")))
+          .collect()
+        runDriverState(spark, p, Superstep.longs(vd, 0), Superstep.doubles(vd, 1),
+          p.vertices.toDouble, cfg, ownsPack = false)
       case _ =>
-        val vt = verticesOpt.getOrElse(GraphOps.vertices(edges)).select("id").persist()
-        Some(vt)
+        // Explicit vertex tables may contain dangling vertices, whose
+        // left-join handling needs the co-partitioned path; an over-budget
+        // V with a prebuilt pack lands here too (the shuffle path ignores
+        // the pack).
+        val verts = verticesOpt.getOrElse(GraphOps.vertices(edges)).select("id").persist()
+        val v = verts.count().toDouble
+        val symForDeg = GraphOps.symmetrize(edges)
+        val deg =
+          if (cfg.weighted)
+            symForDeg.groupBy(col("src").as("id"))
+              .agg(sum(col("weight").cast("double")).as("deg"))
+          else
+            symForDeg.groupBy(col("src").as("id"))
+              .agg(count(lit(1)).cast("double").as("deg"))
+        // edge-derived vertex sets have min degree 1 by construction — the
+        // dangling machinery only wakes up for explicit vertex tables.
+        val vdegIn = verts.join(deg, Seq("id"), "left")
+          .select(col("id"), coalesce(col("deg"), lit(0.0)).as("deg"))
+        val out = runShuffle(edges, cfg, vdegIn, v, mayDangle = verticesOpt.isDefined)
+        verts.unpersist()
+        out
     }
-    val v = vertsOpt match {
-      case Some(vt) => vt.count().toDouble
-      case None     => packedOpt.get.df.select("id").distinct().count().toDouble
-    }
-    // Explicit vertex tables may contain dangling vertices, whose left-join
-    // handling needs the co-partitioned path; broadcast-state covers the
-    // engine's common case (edge-derived vertex set, min degree 1).
-    val bcast = verticesOpt.isEmpty && Superstep.fits(v.toLong, cfg.broadcastStateMaxRows)
-
-    if (bcast) {
-      // Broadcast-state strategy iterates over the CSR-packed in-neighbor
-      // lists (one build-time shuffle, then V-row iterations — see
-      // PackedAdjacency / iterPlanPacked).
-      packedOpt.foreach(p => require(p.weighted == cfg.weighted,
-        s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
-      val (packed, deg) = packedOpt match {
-        case Some(p) =>
-          // Degrees off the cached V-row pack (multi-segment hub vertices
-          // contribute one row per segment, hence the groupBy).
-          val d =
-            if (cfg.weighted)
-              p.df.groupBy(col("id")).agg(
-                sum(aggregate(col("wts"), lit(0.0),
-                  (acc, x) => acc + x)).as("deg"))
-            else
-              p.df.groupBy(col("id")).agg(
-                sum(size(col("nbrs"))).cast("double").as("deg"))
-          (p, d)
-        case None =>
-          val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-          val symDf = GraphOps.symmetrize(edges).select(symCols.map(col): _*)
-          val d =
-            if (cfg.weighted)
-              symDf.groupBy(col("src").as("id")).agg(sum(col("weight").cast("double")).as("deg"))
-            else
-              symDf.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("deg"))
-          (graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-            deferCacheIfHubFree = true, partitions = cfg.packPartitions,
-            cachePartitions = cfg.cachePartitions), d)
-      }
-      val out = runDriverState(edges.sparkSession, packed, deg, v, cfg,
-        ownsPack = packedOpt.isEmpty)
-      vertsOpt.foreach(_.unpersist())
-      return out
-    }
-    // Over-budget V with a prebuilt pack: the shuffle path ignores the
-    // pack, so the vertex table is derived here after all.
-    val verts = vertsOpt.getOrElse {
-      val vt = GraphOps.vertices(edges).select("id").persist(); vt.count(); vt
-    }
-    val symForDeg = GraphOps.symmetrize(edges)
-    val deg =
-      if (cfg.weighted)
-        symForDeg.groupBy(col("src").as("id"))
-          .agg(sum(col("weight").cast("double")).as("deg"))
-      else
-        symForDeg.groupBy(col("src").as("id"))
-          .agg(count(lit(1)).cast("double").as("deg"))
-    // edge-derived vertex sets have min degree 1 by construction — the
-    // dangling machinery only wakes up for explicit vertex tables.
-    val vdegIn = verts.join(deg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0.0)).as("deg"))
-    val out = runShuffle(edges, cfg, vdegIn, v, mayDangle = verticesOpt.isDefined)
-    verts.unpersist()
-    out
   }
 
   /** Co-partitioned shuffle loop (over-budget V or explicit vertex table).
@@ -211,9 +177,9 @@ object PageRank {
     val vdeg = vdegIn.persist()
     vdeg.count()
 
-    var ranks = vdeg.select(col("id"), lit(1.0 / v).as("rank"), col("deg"))
-      .transform(Iterate.pin)
-    var prevPin: Option[Iterate.Pinned] = None
+    val initPin = Iterate.pinned(vdeg.select(col("id"), lit(1.0 / v).as("rank"), col("deg")))
+    var ranks = initPin.df
+    var prevPin: Option[Iterate.Pinned] = Some(initPin)
     var iter = 0
     var done = false
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
@@ -263,15 +229,13 @@ object PageRank {
     * dangling term: this path requires an edge-derived vertex set (min
     * degree 1). */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, deg: DataFrame, v: Double,
+      packed: graft.graph.PackedAdj, ids: Array[Long], degs: Array[Double], v: Double,
       cfg: Config, ownsPack: Boolean): (DataFrame, Seq[Long]) = {
     import graft.util.StateMap
     type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val vd = deg.collect()
-    val run = new Superstep.Run(spark, Superstep.longs(vd, 0), Some(packed), ownsPack)
+    val run = new Superstep.Run(spark, ids, Some(packed), ownsPack)
     val n = run.n
-    val degs = Superstep.doubles(vd, 1)
     val dense = run.dense.isDefined
     val qR = new StateMap.Ref[Bc[Array[Double]]](null)
     val rankR = new StateMap.Ref[Bc[StateMap.LongDoubleMap]](null)

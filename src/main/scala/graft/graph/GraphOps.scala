@@ -107,9 +107,17 @@ object GraphOps {
     * and its degree sum is exactly 2E on a canonical edge table — the old
     * two jobs (edges.count + a 2E-row distinct) collapse into one pass. */
   def vertexEdgeCounts(edges: Dataset[Edge]): (Long, Long) = {
+    val s = degreeSummary(edges)
+    (s.vertices, s.degSum / 2)
+  }
+
+  /** V, 2E and the max degree of the symmetrized edges in one job — the
+    * degree summary PackedAdjacency.build takes in place of its own. */
+  def degreeSummary(edges: Dataset[Edge]): DegreeSummary = {
     val row = symmetrize(edges).groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .agg(count(lit(1)), coalesce(sum(col("d")), lit(0L))).collect()(0)
-    (row.getLong(0), row.getLong(1) / 2)
+      .agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)), coalesce(max(col("d")), lit(0L)))
+      .collect()(0)
+    DegreeSummary(row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
   /** Graph density 2E/(V(V-1)) — the reference's default resolution alpha

@@ -6,12 +6,30 @@ import org.apache.spark.sql.functions._
 /** CSR-packed adjacency cache + hub segmentation metadata (see
   * PackedAdjacency.build). `maxSegs == 1` means no vertex exceeded the
   * segment cap, so plan builders can skip the hub-combine branch
-  * entirely. Caller owns the cache lifetime (unpersist()). `cached` is
-  * false for a deferred hub-free build (see build): its unpersist is a
-  * no-op, so it cannot evict a cached pack over the same plan. */
+  * entirely. `degSum` (directed half-edges, 2E on a symmetrized input)
+  * and `vertices` (V) come from the build's degree summary. Caller owns
+  * the cache lifetime (unpersist()). `cached` is false for a deferred
+  * hub-free build (see build): its unpersist is a no-op, so it cannot
+  * evict a cached pack over the same plan. */
 final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
-                           degSum: Long = 0L, cached: Boolean = true) {
+                           degSum: Long = 0L, vertices: Long = 0L,
+                           cached: Boolean = true) {
   def unpersist(): Unit = if (cached) df.unpersist()
+}
+
+/** One pass over a per-vertex degree table: V (rows), `degSum` (the sum of
+  * degrees — 2E on a symmetrized edge table) and the largest degree. */
+final case class DegreeSummary(vertices: Long, degSum: Long, maxDeg: Long)
+
+object DegreeSummary {
+  /** The summary of collected degrees (one per vertex). */
+  def of(degrees: Array[Long]): DegreeSummary = {
+    var sum = 0L
+    var mx = 0L
+    var i = 0
+    while (i < degrees.length) { sum += degrees(i); mx = math.max(mx, degrees(i)); i += 1 }
+    DegreeSummary(degrees.length, sum, mx)
+  }
 }
 
 /** Dense-index remap of a hub-free packed adjacency: neighbor arrays hold
@@ -108,33 +126,49 @@ object PackedAdjacency {
   /** `degOpt`: a precomputed per-`key` row-count table (columns: key, "d")
     * — round-6 setup dedup: callers that already aggregated degrees (the
     * strategy decision / rank-degree table) pass it so the build does not
-    * re-aggregate the E-row input. */
+    * re-aggregate the E-row input. It feeds the stats job (when no
+    * `degrees` summary is given) and the hub segment join. */
+  /** `degrees`: the caller's summary of `sym`'s per-`key` degree table
+    * (V, 2E, max degree — GraphOps.degreeSummary or DegreeSummary.of over
+    * collected degrees). Contract: it must describe this same `sym`; it
+    * replaces the build's own stats job, and `maxSegs` — hence the
+    * layout — is derived from its max degree. Without it the build runs
+    * one stats job over the degree table. Either way the segment join is
+    * elided only when `maxSegs == 1` proves every vertex is a single
+    * segment: rows are then keyed with constant seg = 0, nsegs = 1 —
+    * exactly what the join would assign — so no broadcast-build job runs
+    * (and, when `degOpt` is absent, no second E-row aggregate). Hub
+    * graphs keep the join. */
   def build(sym: DataFrame, key: String, weighted: Boolean = false,
             segCap: Int = 1 << 20, deferCacheIfHubFree: Boolean = false,
             partitions: Option[Int] = None,
             cachePartitions: Option[Int] = None,
-            degOpt: Option[DataFrame] = None): PackedAdj = {
+            degOpt: Option[DataFrame] = None,
+            degrees: Option[DegreeSummary] = None): PackedAdj = {
     val spark = sym.sparkSession
     import spark.implicits._
     val nbr = if (key == "src") "dst" else "src"
-    val degAgg = degOpt.getOrElse(sym.groupBy(col(key)).agg(count(lit(1)).as("d")))
+    lazy val degAgg = degOpt.getOrElse(sym.groupBy(col(key)).agg(count(lit(1)).as("d")))
     // Stats come from the V-row degree frame, NOT from scanning the packed
     // table afterwards (the old count()+max(nsegs) pair forced two full
-    // materializations of the pack): degSum = directed half-edge count
-    // (2E on a symmetrized input), maxSegs decides the hub branch before
+    // materializations of the pack): maxSegs decides the hub branch before
     // any caching policy is applied.
-    val st = degAgg.agg(
-      sum(col("d")),
-      max(ceil(col("d") / lit(segCap.toDouble)).cast("int"))).collect()(0)
-    val degSum = if (st.isNullAt(0)) 0L else st.getLong(0)
-    val maxSegs = if (st.isNullAt(1)) 1 else st.getInt(1)
-    val nseg = degAgg
-      .select(col(key), ceil(col("d") / lit(segCap.toDouble)).cast("int").as("nsegs"))
-    val keyed = sym.join(broadcast(nseg), Seq(key))
-      .select((Seq(col(key).as("id"),
-        pmod(xxhash64(col(nbr)), col("nsegs").cast("long")).as("seg"),
-        col("nsegs"),
-        col(nbr).as("n")) ++
+    val st = degrees.getOrElse {
+      val r = degAgg.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)),
+        coalesce(max(col("d")), lit(0L))).collect()(0)
+      DegreeSummary(r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    val maxSegs = math.max(1L, (st.maxDeg + segCap - 1) / segCap).toInt
+    val (input, segs) =
+      if (maxSegs == 1) (sym, Seq(lit(0L).as("seg"), lit(1).as("nsegs")))
+      else {
+        val nseg = degAgg
+          .select(col(key), ceil(col("d") / lit(segCap.toDouble)).cast("int").as("nsegs"))
+        (sym.join(broadcast(nseg), Seq(key)),
+          Seq(pmod(xxhash64(col(nbr)), col("nsegs").cast("long")).as("seg"), col("nsegs")))
+      }
+    val keyed = input
+      .select(((col(key).as("id") +: segs :+ col(nbr).as("n")) ++
         (if (weighted) Seq(col("weight").cast("double").as("w")) else Nil)): _*)
       .repartition(partitions.getOrElse(
         sym.sparkSession.sessionState.conf.numShufflePartitions),
@@ -191,7 +225,7 @@ object PackedAdjacency {
     val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
     val defer = deferCacheIfHubFree && maxSegs == 1
     if (!defer) { packed1.persist(); packed1.count() }
-    PackedAdj(packed1, maxSegs, weighted, degSum, cached = !defer)
+    PackedAdj(packed1, maxSegs, weighted, st.degSum, st.vertices, cached = !defer)
   }
 
   /** Remap a hub-free (`maxSegs == 1`) packed adjacency to dense state

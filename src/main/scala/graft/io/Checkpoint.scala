@@ -22,20 +22,26 @@ final class Checkpoint(spark: SparkSession, dir: String, every: Int = 5) {
   /** Truncate lineage: every `every` supersteps write + re-read the state
     * (also serving resume); otherwise localCheckpoint (cheap, non-durable).
     */
-  def truncate(df: DataFrame, superstep: Int, metricsJson: String = "{}"): DataFrame = {
-    if (superstep % every == 0) {
-      val snap = s"$dir/superstep=$superstep"
-      df.write.mode("overwrite").parquet(snap)
-      // Manifest lines are REAL JSON (jackson, ships with Spark) — hand-
-      // concatenated strings were a quoting-bug class waiting to corrupt
-      // resume metadata (VERDICT r1 #10).
-      val line = Checkpoint.json(Map(
-        "superstep" -> superstep, "path" -> snap,
-        "metrics" -> Checkpoint.Raw(metricsJson))) + "\n"
-      Files.writeString(manifest, line,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-      spark.read.parquet(snap)
-    } else df.transform(graft.io.Iterate.pin)
+  def truncate(df: DataFrame, superstep: Int, metricsJson: String = "{}"): DataFrame =
+    if (superstep % every == 0) spark.read.parquet(snapshot(df, superstep, metricsJson))
+    else df.transform(graft.io.Iterate.pin)
+
+  /** Durable snapshot only: write the state's parquet and its manifest
+    * line; returns the snapshot path. For callers whose state lives
+    * outside Spark (the driver-state loops) — re-reading would cost a
+    * schema-inference job and a file listing for a frame nobody uses. */
+  def snapshot(df: DataFrame, superstep: Int, metricsJson: String = "{}"): String = {
+    val snap = s"$dir/superstep=$superstep"
+    df.write.mode("overwrite").parquet(snap)
+    // Manifest lines are REAL JSON (jackson, ships with Spark) — hand-
+    // concatenated strings were a quoting-bug class waiting to corrupt
+    // resume metadata (VERDICT r1 #10).
+    val line = Checkpoint.json(Map(
+      "superstep" -> superstep, "path" -> snap,
+      "metrics" -> Checkpoint.Raw(metricsJson))) + "\n"
+    Files.writeString(manifest, line,
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    snap
   }
 
   /** Latest durable snapshot (superstep, state) if any — the resume point. */

@@ -52,6 +52,23 @@ object Iterate {
   def pin(df: DataFrame): DataFrame =
     rewrap(df.localCheckpoint(true))
 
+  /** `pin` with a release handle and no extra job — a loop's initial
+    * state, released like every later round's once the next is pinned. */
+  def pinned(df: DataFrame): Pinned = {
+    val (c, release) = checkpointed(df)
+    new Pinned(rewrap(c), Array.empty, release)
+  }
+
+  /** Eager localCheckpoint and the release handle of its cached internal
+    * RDD (the checkpointed plan is a LogicalRDD over it). */
+  private def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
+    val c = df.localCheckpoint(true)
+    val internal = c.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    (c, () => internal.foreach(_.unpersist(blocking = false)))
+  }
+
   /** A pinned iteration state plus the column sums observed while pinning.
     * `release()` drops the backing cache once the NEXT state is pinned —
     * without it a long superstep loop accumulates one cached copy of the
@@ -69,15 +86,9 @@ object Iterate {
     * boxes every row — the right trade for V-row state with counters to
     * accumulate, measurably the wrong one for E-scale pair tables). */
   def pinCount(df: DataFrame): Pinned = {
-    val c = df.localCheckpoint(true)
-    // the checkpointed plan is a LogicalRDD over the cached internal RDD —
-    // that RDD is the release handle
-    val internal = c.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+    val (c, release) = checkpointed(df)
     val n = c.count() // over the cache, no row conversion
-    new Pinned(rewrap(c), Array(n.toDouble),
-      () => internal.foreach(_.unpersist(blocking = false)))
+    new Pinned(rewrap(c), Array(n.toDouble), release)
   }
 
   /** Materialize + aggregate in ONE Spark job — the superstep fixed-cost

@@ -257,4 +257,32 @@ class PackedSpec extends SparkSpec {
       p.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
+
+  test("hub-free build given a degree summary plans no broadcast join; hub builds keep it") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def broadcastJoins(df: DataFrame): Int = {
+      def walk(p: SparkPlan): Int = p match {
+        case _: BroadcastHashJoinExec => 1 + p.children.map(walk).sum
+        case s: InMemoryTableScanExec => walk(s.relation.cachedPlan)
+        case o                        => o.children.map(walk).sum
+      }
+      walk(df.queryExecution.executedPlan)
+    }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val e = edgesOf(Fixtures.zachary)
+      val symDf = GraphOps.symmetrize(e).select("src", "dst")
+      val free = PackedAdjacency.build(symDf, "src", deferCacheIfHubFree = true,
+        degrees = Some(GraphOps.degreeSummary(e)))
+      assert(free.maxSegs == 1 && free.vertices == 34L && free.degSum == 156L)
+      assert(broadcastJoins(free.df) == 0, free.df.queryExecution.executedPlan.toString)
+      val hub = PackedAdjacency.build(symDf, "src", segCap = 2)
+      assert(hub.maxSegs > 1 && hub.vertices == 34L && hub.degSum == 156L)
+      assert(broadcastJoins(hub.df) == 1, hub.df.queryExecution.executedPlan.toString)
+      free.unpersist(); hub.unpersist()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import graft.algo.{Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral}
 import graft.graph.{GraphOps, PackedAdjacency}
 
@@ -14,6 +18,18 @@ class SharedPackSpec extends SparkSpec {
 
   private val pairs = Seq[(Long, Long)](
     (0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5), (2, 3), (5, 6), (6, 7))
+
+  /** A result's row count, after which the caller releases what it owns
+    * of it: the pinned state a shuffle-path result scans. Anything else
+    * still persisted afterwards was leaked by the run. */
+  private def countAndRelease(df: DataFrame): Long = {
+    val n = df.count()
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.flatMap(lineage)
+      .filter(_.getStorageLevel != StorageLevel.NONE)
+      .foreach(_.unpersist(blocking = true))
+    n
+  }
 
   test("hedonic + pagerank on one shared pack match own-pack runs bitwise") {
     val e = edgesOf(pairs)
@@ -58,10 +74,24 @@ class SharedPackSpec extends SparkSpec {
       "LabelPropagation.bestLabels" -> (() => LabelPropagation.bestLabels(
         GraphOps.symmetrize(e).select("src", "dst"),
         GraphOps.vertices(e).select(col("id"), col("id").as("label"))).count()),
-      "Spectral.wholeGraphVector" -> (() => Spectral.wholeGraphVector(e, iters = 5).count()))
+      "Spectral.wholeGraphVector" -> (() => Spectral.wholeGraphVector(e, iters = 5).count()),
+      // own-pack PageRank and default-init LPA, within and over budget:
+      // their persisted degree table must be released on both paths
+      "own-pack PageRank.runTimed" -> (() => countAndRelease(PageRank.runTimed(e, cfgP)._1)),
+      "own-pack PageRank.runTimed over budget" -> (() => countAndRelease(
+        PageRank.runTimed(e, cfgP.copy(broadcastStateMaxRows = 7L))._1)),
+      "LabelPropagation.run" -> (() => countAndRelease(LabelPropagation.run(e))),
+      "LabelPropagation.run over budget" -> (() => countAndRelease(
+        LabelPropagation.run(e, broadcastStateMaxRows = 7L))))
+    // Leaks are checked per run: several runs persist the same degree
+    // plan, and a later run's unpersist would remove an earlier run's
+    // leaked entry before a check at the end could see it.
     others.foreach { case (who, body) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       assert(body() == 8L, s"$who: wrong row count")
       assert(pack.df.storageLevel.useMemory, s"shared pack was unpersisted by $who")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$who leaked persistent RDDs: $leaked")
     }
 
     assert(toMap(shH) == ownHM)

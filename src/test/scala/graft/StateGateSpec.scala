@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
-import graft.algo.{ConnectedComponents, LabelPropagation, Superstep}
+import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Superstep}
 
 /** The StateGate budget decision shared by every driver-state strategy
   * (Superstep.stateGate): exact at the boundary, job-free at budget 0,
@@ -33,7 +33,10 @@ class StateGateSpec extends SparkSpec {
     assert(toMap(driver) == toMap(star))
   }
 
-  test("budget 0 decides over-budget without submitting a gate job") {
+  /** `body`'s result and the number of Spark jobs it submitted (counted
+    * by job group; a sentinel job submitted afterwards proves every
+    * earlier job-start event has reached the listener). */
+  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -43,21 +46,61 @@ class StateGateSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      val state = spark.range(8).select(col("id"), col("id").as("community"))
-      sc.setJobGroup("gate-zero", "budget 0")
-      assert(Superstep.stateGate(state, 0L).isEmpty)
-      // control: a positive budget's gate job does reach the listener
-      sc.setJobGroup("gate-v", "budget V")
-      assert(Superstep.stateGate(state, 8L).isDefined)
+      sc.setJobGroup(group, group)
+      val out = body
+      val sentinel = s"$group-sentinel"
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
       sc.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("gate-v") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains("gate-v"), "listener never saw the control job")
-      assert(!groups.contains("gate-zero"), "budget 0 submitted a job")
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "listener never saw the sentinel job")
+      (out, groups.toArray.count(_ == group))
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
+  }
+
+  test("budget 0 decides over-budget without submitting a gate job") {
+    val state = spark.range(8).select(col("id"), col("id").as("community"))
+    val (zero, zeroJobs) = jobsOf("gate-zero")(Superstep.stateGate(state, 0L))
+    assert(zero.isEmpty)
+    assert(zeroJobs == 0, "budget 0 submitted a job")
+    // control: a positive budget's gate job does reach the listener
+    val (v, vJobs) = jobsOf("gate-v")(Superstep.stateGate(state, 8L))
+    assert(v.isDefined)
+    assert(vJobs > 0, "listener never saw the control job")
+  }
+
+  test("a count in hand: over budget submits no job, within budget collects all rows") {
+    val state = spark.range(8).select(col("id"), col("id").as("label"))
+    // budget V-1 with the count V in hand: decided without a job
+    val (over, overJobs) = jobsOf("known-over")(Superstep.stateGate(state, 7L, Some(8L)))
+    assert(over.isEmpty)
+    assert(overJobs == 0, "an over-budget count in hand submitted a job")
+    // budget V: one exact collect of every row
+    val (fit, fitJobs) = jobsOf("known-fits")(Superstep.stateGate(state, 8L, Some(8L)))
+    assert(fit.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 8L))
+    assert(fitJobs == 1)
+  }
+
+  test("hub-free own-pack PageRank: three set-up jobs, then one job per iteration") {
+    // Set-up = count the degree table, collect it (ids, degrees and the
+    // pack's degree summary), materialize the reindexed pack; no stats,
+    // segment-join or separate degree-collect job. Adaptive execution off,
+    // as it splits each shuffle stage into a job of its own.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val e = edgesOf(pairs)
+      for (k <- Seq(1, 4)) {
+        val ((_, iters), jobs) = jobsOf(s"pagerank-$k")(
+          PageRank.runTimed(e, PageRank.Config(fixedIter = Some(k))))
+        assert(iters.size == k)
+        assert(jobs == 3 + k, s"fixedIter=$k")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("a truncated collect is never taken as complete") {
