@@ -76,7 +76,16 @@ object SparkEntry {
     * 3.6-3.9 -> 2.2 s, satisfaction 3.1-3.5 -> 2.0 s. Single-reference
     * sites (q_ari, q_induced) and the iterative runs (which collect or
     * pin their state internally) keep plain m0 — there the pin would be
-    * a pure extra job. */
+    * a pure extra job.
+    *
+    * Cache ownership (ADVICE r6 #3): the pin is an eager localCheckpoint
+    * that outlives the query body making it, and nothing here releases it
+    * — the CALLER of the query owns it (it sits in the returned frame's
+    * lineage). A harness that unpersists everything between queries never
+    * sees it; a long-lived session running these queries repeatedly
+    * accumulates one dead cached V-row RDD per call until it unpersists
+    * them itself (they are listed in `sc.getPersistentRDDs`;
+    * `spark.catalog.clearCache()` does not reach a localCheckpoint). */
   private def m0p(edges: org.apache.spark.sql.Dataset[Edge]): DataFrame =
     graft.io.Iterate.pin(m0(edges))
 

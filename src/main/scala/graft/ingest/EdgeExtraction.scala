@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.model.Edge
 
@@ -13,11 +13,17 @@ import graft.model.Edge
   *    point. `maxPathFanout` caps it: paths shared by more repos are dropped
   *    (they carry ~no co-occurrence signal, exactly like stopwords in
   *    near-dup mining) and the dropped count is observable via
-  *    `hubPathCount`. Residual skew is handled by AQE skew-join splitting,
-  *    which the session enables.
-  *  - The self-join is an equi-join on `path` — sort-merge at scale; the
-  *    pair stream is aggregated with partial (map-side) combine before the
-  *    final shuffle on (src, dst).
+  *    `hubPathCount`. The cap is applied while streaming: the pair pass
+  *    holds at most `maxPathFanout` ids of one path group (8 KB at the
+  *    default 1000), and an over-cap hub path is skipped row by row, never
+  *    materialized. A path group still lands in one task (the exchange
+  *    hashes on the path), as it did under the old window count; its sort
+  *    is the only per-task cost that grows with the hub's row count, and
+  *    it spills like any sort.
+  *  - One exchange on the path, one in-partition sort on (path, id), one
+  *    pass that emits each distinct pair once with src < dst — no join, no
+  *    window, no dedup aggregate. The pair stream is aggregated with
+  *    partial (map-side) combine before the final shuffle on (src, dst).
   *  - The `sha` column is never touched: extraction reads only (repo, path),
   *    so Parquet column pruning keeps `content` out of the scan entirely.
   */
@@ -77,46 +83,71 @@ object EdgeExtraction {
       maxPathFanout: Int = 1000): Dataset[Edge] = {
     val spark = files.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
 
-    // Round-6 shape (guide §2.4): ONE exchange on pk serves the distinct,
-    // the fanout cap and the self-join. The previous formulation planned
-    // the scan→distinct prologue once per consumer (4 parquet scans, 6
-    // exchanges: distinct keyed (id,pk), a groupBy(pk) fanout aggregate,
-    // a broadcast join back, then the self-join) — here:
-    //   - repartition(pk) establishes HashPartitioning(pk); the (id,pk)
-    //     dropDuplicates runs WITHIN those partitions (pk ⊆ {id,pk}
-    //     satisfies the aggregate's clustering requirement — no exchange);
-    //   - the fanout cap is a window count over the same partitioning
-    //     (no aggregate+join round trip);
-    //   - both self-join sides are the identical subtree, so the single
-    //     pk exchange is planned once and reused.
-    // Only the pair stream then shuffles (groupBy(src,dst), map-side
-    // partial aggregation) — the one fundamentally required shuffle.
-    val kept = files
+    // One exchange on pk, one in-partition sort on (pk, id), one streaming
+    // pass that emits each distinct pair of a path group once (pathPairs);
+    // only the pair stream then shuffles (groupBy(src,dst), map-side
+    // partial aggregation). A null path links no repos.
+    files
       .select(col(idCol).cast("long").as("id"), col(pathCol).as("pk"))
+      .filter(col("pk").isNotNull)
       .repartition(col("pk"))
-      .dropDuplicates("id", "pk")
-      .withColumn("k", count(lit(1)).over(Window.partitionBy("pk")))
-      .filter(col("k") <= maxPathFanout)
-
-    val a = kept.select(col("pk"), col("id").as("src"))
-    val b = kept.select(col("pk"), col("id").as("dst"))
-    a.join(b, Seq("pk"))
-      .filter(col("src") < col("dst"))
+      .sortWithinPartitions("pk", "id")
+      .mapPartitions(rows => pathPairs(rows, maxPathFanout))
+      .toDF("src", "dst")
       .groupBy("src", "dst")
       .agg(count(lit(1)).cast("double").as("weight"))
       .as[Edge]
   }
 
+  /** The pairs of one partition sorted by (pk, id): for each pk group, every
+    * (a, b) with a < b over its distinct non-null ids — provided the group
+    * has at most `cap` distinct ids, a null id counting as one member that
+    * pairs with nothing. At most `cap` ids of a group are held; once a group
+    * passes the cap, the rest of its rows are read past and dropped. Keys
+    * compare with `==`: by value for the string and integral path keys the
+    * callers use. */
+  private def pathPairs(rows: Iterator[Row], cap: Int): Iterator[(Long, Long)] = {
+    val in = rows.buffered
+    def group(): Array[Long] = {
+      val pk = in.head.get(1)
+      val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+      var members = 0
+      var sawNull = false
+      var last = 0L
+      while (in.hasNext && in.head.get(1) == pk) {
+        val r = in.next()
+        if (members <= cap) {
+          if (r.isNullAt(0)) {
+            if (!sawNull) { sawNull = true; members += 1 }
+          } else if (ids.length == 0 || r.getLong(0) != last) {
+            last = r.getLong(0)
+            members += 1
+            if (members <= cap) ids += last
+          }
+        }
+      }
+      if (members > cap) Array.emptyLongArray else ids.result()
+    }
+    Iterator.continually(in).takeWhile(_.hasNext).map(_ => group()).flatMap { ids =>
+      ids.indices.iterator.flatMap(i => (i + 1 until ids.length).iterator.map(j => (ids(i), ids(j))))
+    }
+  }
+
   /** End-to-end: repo-file table -> (vertices, edges), preserving the file
-    * table (and its sha column) untouched for the invariant check. */
+    * table (and its sha column) untouched for the invariant check. Hash ids
+    * are computed inline (no join back to the vertex table); a null repo
+    * has no edges, as under the dense path's join. */
   def extract(
       files: DataFrame,
       maxPathFanout: Int = 1000,
-      dense: Boolean = false): (DataFrame, Dataset[Edge]) = {
-    val verts = if (dense) denseVertexIds(files) else hashVertexIds(files)
-    val withIds = files.join(verts, Seq("repo"))
-    (verts, cooccurrence(withIds, "id", "path", maxPathFanout))
-  }
+      dense: Boolean = false): (DataFrame, Dataset[Edge]) =
+    if (dense) {
+      val verts = denseVertexIds(files)
+      (verts, cooccurrence(files.join(verts, Seq("repo")), "id", "path", maxPathFanout))
+    } else {
+      val withIds = files.filter(col("repo").isNotNull)
+        .select(xxhash64(col("repo")).as("id"), col("path"))
+      (hashVertexIds(files), cooccurrence(withIds, "id", "path", maxPathFanout))
+    }
 }
