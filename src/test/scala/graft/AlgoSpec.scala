@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.algo.{ConnectedComponents, Hedonic, LabelPropagation, PageRank, TriangleCount}
 import graft.graph.GraphOps
@@ -165,6 +166,54 @@ class HedonicSpec extends SparkSpec {
     val (resumed, _) = Hedonic.run(e, init,
       Hedonic.Config(maxSupersteps = 40, checkpointEvery = 2, checkpointDir = Some(dir + "/b")))
     assert(toMap(full) == toMap(resumed))
+  }
+
+  /** Interrupts a Zachary run after 3 supersteps (snapshots at 0 and 2) on
+    * the `interrupted` state budget, resumes it to convergence on the
+    * `resumed` budget; returns the superstep=2 file names and the resumed
+    * membership next to an uninterrupted run's. */
+  private def resumeAcross(interrupted: Long, resumed: Long)
+      : (Set[String], Map[Long, Long], Map[Long, Long]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-x")
+    val e = edgesOf(Fixtures.zachary)
+    val init = GraphOps.vertices(e).select(col("id"), col("id").as("community"))
+    def cfg(steps: Int, budget: Long) = Hedonic.Config(maxSupersteps = steps,
+      checkpointEvery = 2, checkpointDir = Some(dir.toString), broadcastStateMaxRows = budget)
+    val (full, _) = Hedonic.run(e, init, Hedonic.Config(maxSupersteps = 80))
+    val (_, cut) = Hedonic.run(e, init, cfg(3, interrupted))
+    assert(cut.size == 3 && cut.last.frontier > 0, "converged before the interruption")
+    val files = java.nio.file.Files.list(dir.resolve("superstep=2")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    val (out, _) = Hedonic.run(e, init, cfg(80, resumed))
+    (files, toMap(full), toMap(out))
+  }
+
+  test("interrupted on the driver-state path (state.bin), resumed on the shuffle path") {
+    val (files, full, resumed) = resumeAcross(4000000L, 0L)
+    assert(files == Set("state.bin"))
+    assert(resumed == full)
+  }
+
+  test("interrupted on the shuffle path (parquet), resumed on the driver-state path") {
+    val (files, full, resumed) = resumeAcross(0L, 4000000L)
+    assert(files.exists(_.endsWith(".parquet")) && !files.contains("state.bin"))
+    assert(resumed == full)
+  }
+
+  test("a truncated state.bin fails the resume loudly, naming the file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-t")
+    val e = edgesOf(Fixtures.zachary)
+    val init = GraphOps.vertices(e).select(col("id"), col("id").as("community"))
+    def cfg(steps: Int) =
+      Hedonic.Config(maxSupersteps = steps, checkpointEvery = 2, checkpointDir = Some(dir.toString))
+    Hedonic.run(e, init, cfg(3))
+    val state = dir.resolve("superstep=2").resolve("state.bin")
+    val ch = java.nio.channels.FileChannel.open(state, java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(ch.size() / 2) finally ch.close()
+    // the manifest still names superstep 2: no silent restart from init,
+    // no resume from the partial arrays
+    val err = intercept[IllegalStateException](Hedonic.run(e, init, cfg(80)))
+    assert(err.getMessage.contains(state.toString))
   }
 }
 

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,6 +42,35 @@ trait SparkSpec extends AnyFunSuite {
   /** (id, community) rows collected to a canonical map. */
   def toMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body`'s result and the number of Spark jobs it submitted (counted
+    * by job group; a sentinel job submitted afterwards proves every
+    * earlier job-start event has reached the listener). */
+  def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = body
+      val sentinel = s"$group-sentinel"
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "listener never saw the sentinel job")
+      (out, groups.toArray.count(_ == group))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
 
   /** Two labelings equal up to label permutation (must be a bijection). */
   def sameUpToPermutation(a: Map[Long, Long], b: Map[Long, Long]): Boolean = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Superstep}
@@ -31,35 +29,6 @@ class StateGateSpec extends SparkSpec {
     assert(!aggregates(driver))
     assert(aggregates(star))
     assert(toMap(driver) == toMap(star))
-  }
-
-  /** `body`'s result and the number of Spark jobs it submitted (counted
-    * by job group; a sentinel job submitted afterwards proves every
-    * earlier job-start event has reached the listener). */
-  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = body
-      val sentinel = s"$group-sentinel"
-      sc.setJobGroup(sentinel, sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(sentinel), "listener never saw the sentinel job")
-      (out, groups.toArray.count(_ == group))
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup()
-    }
   }
 
   test("budget 0 decides over-budget without submitting a gate job") {
