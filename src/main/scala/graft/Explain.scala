@@ -66,7 +66,7 @@ object Explain {
       val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
         .map { case (a, b) => graft.model.Edge(a, b, 1.0) }.toDS()
       val symDf = graft.graph.GraphOps.symmetrize(edges).select("src", "dst")
-      val packed = graft.graph.PackedAdjacency.build(symDf, "src")
+      val packed = graft.graph.PackedAdjacency.buildLongIds(symDf, "src")
       val ids = (0L to 3L).toArray
       val sc = spark.sparkContext
       val commR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, ids, 4)))
@@ -85,8 +85,8 @@ object Explain {
       // Round-4 dense-index twins (the production path on hub-free
       // graphs): same single-span shape, but state enters as bare
       // primitive arrays read through int position arrays.
-      val run = new graft.algo.Superstep.Run(spark, ids, Some(packed))
-      val pidx = run.dense.get
+      val pidx = graft.graph.PackedAdjacency.build(symDf, "src", numbering = Some(ids))
+      val run = new graft.algo.Superstep.Run(spark, ids, Some(pidx))
       val commArrR = new StateMap.Ref(sc.broadcast(ids.clone()))
       val qR = new StateMap.Ref(sc.broadcast(Array.fill(4)(0.125)))
       // Round-5 delta-transport twin (the production per-round plan after
@@ -117,7 +117,7 @@ object Explain {
         sb.append(s"\n## $name (dense-index strategy, per-round plan)\n\n```\n$plan```\n")
       }
       run.close()
-      packed.unpersist()
+      pidx.unpersist(); packed.unpersist()
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

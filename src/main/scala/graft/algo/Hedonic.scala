@@ -347,11 +347,11 @@ object Hedonic {
 
   /** Dense-index superstep plan (hub-free production path): same shape as
     * stepPlanPacked's single-segment branch, but the kernel reads the
-    * per-round community state as a bare long[] through int position
-    * arrays (PackedAdjacency.reindex / PackedKernels.kHedonicIdx) —
+    * per-round community state as a bare long[] through the numbered
+    * pack's int position arrays (PackedKernels.kHedonicIdx) —
     * decision-identical by shared kernel tail. */
   private[graft] def stepPlanPackedIdx(
-      pidx: graft.graph.PackedIdxAdj,
+      pidx: graft.graph.PackedAdj,
       commArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
       sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
       alpha: Double,
@@ -377,7 +377,7 @@ object Hedonic {
     * broadcasts. Decision-identical (same kHedonicIdx kernel tail;
     * PackedSpec pins it). */
   private[graft] def stepPlanPackedIdxDelta(
-      pidx: graft.graph.PackedIdxAdj,
+      pidx: graft.graph.PackedAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
       alpha: Double,
       gate: org.apache.spark.sql.Column,
@@ -481,9 +481,12 @@ object Hedonic {
     * identical), honored on the broadcast-state path. A pipeline running
     * several algorithms on one graph packs ONCE and shares it — the pack's
     * E-row shuffle+sort is the dominant one-time cost at every scale and
-    * there is no reason to pay it per algorithm. The caller owns the
-    * cache lifetime (run() will not unpersist a prebuilt pack); its
-    * `weighted` flag must match cfg.weighted. */
+    * there is no reason to pay it per algorithm. A hub-free pack comes
+    * numbered by its build: an init over exactly the pack's vertices runs
+    * on it as it is, any other init on a renumbered copy the run
+    * releases. The default alpha takes V and 2E from the pack. The caller
+    * owns the cache lifetime (run() will not unpersist a prebuilt pack);
+    * its `weighted` flag must match cfg.weighted. */
   def run(
       edges: Dataset[Edge],
       init: DataFrame,
@@ -493,13 +496,14 @@ object Hedonic {
     // alpha and the degree summary (V, 2E, max degree) from the SAME job
     // when alpha defaults to density — the pack build takes the summary in
     // place of its own stats job, and the one-shot fast path below reuses
-    // 2E for its metrics row instead of running a second pass.
-    val (a, degrees) = cfg.alpha match {
-      case Some(x) => (x, None)
-      case None =>
-        val s = GraphOps.degreeSummary(edges)
-        val (v, e) = (s.vertices, s.degSum / 2)
-        (if (v < 2) 0.0 else 2.0 * e / (v.toDouble * (v - 1)), Some(s))
+    // 2E for its metrics row instead of running a second pass. A shared
+    // pack already carries V and 2E.
+    val degrees = Option.when(cfg.alpha.isEmpty && packedOpt.isEmpty)(
+      GraphOps.degreeSummary(edges))
+    val a = cfg.alpha.getOrElse {
+      val (v, e) = packedOpt.fold((degrees.get.vertices, degrees.get.degSum / 2))(
+        p => (p.vertices, p.degSum / 2))
+      if (v < 2) 0.0 else 2.0 * e / (v.toDouble * (v - 1))
     }
     val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, cfg.checkpointEvery))
 
@@ -528,19 +532,21 @@ object Hedonic {
         // Otherwise the loop iterates over the CSR-packed adjacency (one
         // build-time shuffle, then V-row supersteps — see PackedAdjacency /
         // stepPlanPacked).
+        // An own pack is numbered by the state: position i is ids(i).
+        val ids = Superstep.longs(rows, 0)
         val packed =
           if (oneShot) None
           else Some(packedOpt.getOrElse {
             val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
             graft.graph.PackedAdjacency.build(
               GraphOps.symmetrize(edges).select(symCols.map(col): _*), "src",
-              weighted = cfg.weighted, deferCacheIfHubFree = true,
+              weighted = cfg.weighted,
               partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
-              degrees = degrees)
+              degrees = degrees, numbering = Some(ids))
           })
         val edgeCount = packed.fold(degrees.getOrElse(GraphOps.degreeSummary(edges)).degSum)(_.degSum)
-        return runDriverState(edges, packed, rows, startStep, a, edgeCount, cfg,
-          ckpt, ownsPack = packedOpt.isEmpty)
+        return runDriverState(edges, packed, ids, Superstep.longs(rows, 1), startStep, a,
+          edgeCount, cfg, ckpt, ownsPack = packedOpt.isEmpty)
       case None =>
     }
 
@@ -620,7 +626,8 @@ object Hedonic {
   private def runDriverState(
       edges: Dataset[Edge],
       packed: Option[graft.graph.PackedAdj],
-      init0: Array[org.apache.spark.sql.Row], // pre-collected (id, community)
+      ids: Array[Long], // pre-collected state, in collect order
+      comms0: Array[Long],
       startStep: Int,
       alpha: Double,
       edgeCount: Long,
@@ -629,8 +636,8 @@ object Hedonic {
       ownsPack: Boolean): (DataFrame, Seq[RunMetrics]) = {
     import graft.util.StateMap
     val spark = edges.sparkSession
-    val run = new Superstep.Run(spark, Superstep.longs(init0, 0), packed, ownsPack)
-    val comms = Superstep.longs(init0, 1)
+    val run = new Superstep.Run(spark, ids, packed, ownsPack)
+    val comms = run.align(comms0)
     val sizes = sizesOf(comms)
     def stateDF: DataFrame = Superstep.frame(spark, run.ids, "community", comms)
     val commR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)

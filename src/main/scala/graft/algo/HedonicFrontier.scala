@@ -46,12 +46,14 @@ object HedonicFrontier {
       // collect (Superstep.stateGate)
       Superstep.stateGate(init.select("id", "community"), cfg.broadcastStateMaxRows) match {
         case Some(rows) =>
+          // numbered by the state, so the run scans the pack as it is
+          val ids = Superstep.longs(rows, 0)
           val packed = graft.graph.PackedAdjacency.build(
             GraphOps.symmetrize(edges).select("src", "dst"), "src",
-            weighted = false, deferCacheIfHubFree = true,
-            partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions)
+            partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
+            numbering = Some(ids))
           if (packed.maxSegs == 1)
-            return runDriverState(edges, packed, rows, a, cfg)
+            return runDriverState(edges, packed, ids, Superstep.longs(rows, 1), a, cfg)
           packed.unpersist() // hub graph: fall through to the shuffle loop
         case None =>
       }
@@ -192,15 +194,13 @@ object HedonicFrontier {
     * map, active flags) is driver-resident; per-round broadcasts are
     * destroyed right after their collect. */
   private def runDriverState(edges: Dataset[Edge],
-      packed: graft.graph.PackedAdj, init0: Array[org.apache.spark.sql.Row],
+      packed: graft.graph.PackedAdj, ids: Array[Long], comms: Array[Long],
       alpha: Double, cfg: Hedonic.Config): (DataFrame, Seq[RunMetrics]) = {
     import graft.util.StateMap
     type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val edgeCount = packed.degSum
-    val run = new Superstep.Run(edges.sparkSession, Superstep.longs(init0, 0),
-      Some(packed), ownsPack = true)
+    val run = new Superstep.Run(edges.sparkSession, ids, Some(packed), ownsPack = true)
     val n = run.n
-    val comms = Superstep.longs(init0, 1)
     val pidx = run.dense.get
     val sizes = Hedonic.sizesOf(comms)
 

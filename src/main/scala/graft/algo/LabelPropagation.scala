@@ -58,8 +58,10 @@ object LabelPropagation {
 
   /** `packedOpt`: a caller-built CSR pack of the symmetrized edges (see
     * Hedonic.run — pack once, run hedonic + PageRank + LPA), honored on
-    * the broadcast-state path; caller owns the cache lifetime and the
-    * `weighted` flags must match. */
+    * the broadcast-state path; with the default init a hub-free pack's
+    * numbering is the state, so the call runs its rounds and nothing
+    * else. Caller owns the cache lifetime and the `weighted` flags must
+    * match. */
   def run(edges: Dataset[Edge], initOpt: Option[DataFrame] = None,
           maxIter: Int = 30, parityGating: Boolean = true,
           weighted: Boolean = false,
@@ -72,7 +74,9 @@ object LabelPropagation {
     // count in hand: a shared pack's V, or the own-pack degree table,
     // persisted and counted once — over budget that count alone decides,
     // within budget one exact collect is the state AND the pack build's
-    // degree summary. A caller's init gets one capped collect.
+    // degree summary. Over a numbered shared pack it is the pack's own
+    // numbering, with no job at all. A caller's init gets one capped
+    // collect.
     val degAgg = Option.when(initOpt.isEmpty && packedOpt.isEmpty)(
       symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")).persist())
     val (state, known) = (initOpt, packedOpt) match {
@@ -83,21 +87,29 @@ object LabelPropagation {
       case (None, None) =>
         (degAgg.get.select(col("id"), col("id").as("label"), col("d")), Some(degAgg.get.count()))
     }
-    Superstep.stateGate(state, broadcastStateMaxRows, known) match {
-      case Some(rows) =>
+    // (ids, labels, degrees when the own-pack degree table was collected)
+    val inHand = (initOpt, packedOpt.flatMap(_.ids)) match {
+      case (None, Some(ids)) =>
+        Option.when(Superstep.fits(ids.length, broadcastStateMaxRows))((ids, ids.clone(), None))
+      case _ =>
+        Superstep.stateGate(state, broadcastStateMaxRows, known).map { rows =>
+          (Superstep.longs(rows, 0), Superstep.longs(rows, 1),
+            degAgg.map(_ => Superstep.longs(rows, 2)))
+        }
+    }
+    inHand match {
+      case Some((ids, labs, degs)) =>
         // Broadcast-state strategy iterates over the CSR-packed adjacency
         // (see PackedAdjacency / stepPlanPacked).
         packedOpt.foreach(p => require(p.weighted == weighted,
           s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
         val packed = packedOpt.getOrElse {
           graft.graph.PackedAdjacency.build(symDf, "src", weighted,
-            deferCacheIfHubFree = true,
             degOpt = degAgg.map(_.select(col("id").as("src"), col("d"))),
-            degrees = degAgg.map(_ => graft.graph.DegreeSummary.of(Superstep.longs(rows, 2))))
+            degrees = degs.map(graft.graph.DegreeSummary.of), numbering = Some(ids))
         }
-        val out = runDriverState(spark, Right(packed), Superstep.longs(rows, 0),
-          Superstep.longs(rows, 1), maxIter, parityGating, weighted,
-          ownsPack = packedOpt.isEmpty, "label")
+        val out = runDriverState(spark, Right(packed), ids, labs, maxIter, parityGating,
+          weighted, ownsPack = packedOpt.isEmpty, "label")
         degAgg.foreach(_.unpersist())
         return out
       case None =>
@@ -221,7 +233,7 @@ object LabelPropagation {
 
   /** Dense-index step plan (hub-free production path; see
     * Hedonic.stepPlanPackedIdx). */
-  private[graft] def stepPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
+  private[graft] def stepPlanPackedIdx(pidx: graft.graph.PackedAdj,
       labArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
       gate: org.apache.spark.sql.Column): DataFrame = {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
@@ -236,7 +248,7 @@ object LabelPropagation {
   /** Delta-transport twin (see Hedonic.stepPlanPackedIdxDelta /
     * DeltaState): labels ride the Payload's comms lane; decisions use the
     * same kLabelIdx tail, so results are identical (PackedSpec pins). */
-  private[graft] def stepPlanPackedIdxDelta(pidx: graft.graph.PackedIdxAdj,
+  private[graft] def stepPlanPackedIdxDelta(pidx: graft.graph.PackedAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
       gate: org.apache.spark.sql.Column, emitPos: Boolean = false): DataFrame = {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
@@ -258,10 +270,11 @@ object LabelPropagation {
     * map-state one-shot votes over. The output's label column is `name`. */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
       adj: Either[DataFrame, graft.graph.PackedAdj],
-      ids: Array[Long], labs: Array[Long], maxIter: Int, parityGating: Boolean,
+      ids: Array[Long], labs0: Array[Long], maxIter: Int, parityGating: Boolean,
       weighted: Boolean, ownsPack: Boolean, name: String): DataFrame = {
     import graft.util.StateMap
     val run = new Superstep.Run(spark, ids, adj.toOption, ownsPack)
+    val labs = run.align(labs0)
     val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
     val gate = run.parityGate(parityGating)
     val dense = run.dense.isDefined

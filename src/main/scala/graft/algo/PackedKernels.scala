@@ -141,7 +141,7 @@ object PackedKernels {
     hedonicDecideTail(s, weighted = wts != null, curComm, size, alpha)
   }
 
-  /** Dense-index twin of kHedonic (PackedAdjacency.reindex path): `nbrs`
+  /** Dense-index twin of kHedonic (numbered-pack path): `nbrs`
     * hold POSITIONS into the driver state array (-1 = endpoint outside the
     * state table, the hash kernel's slot<0 skip), `comm` is the bare
     * per-round values array. One direct 8-byte read per neighbor replaces
@@ -532,7 +532,7 @@ object PackedKernels {
         wtsE = if (wtsE.isDefined) Some(newChildren(1)) else None)
   }
 
-  /** Dense-index expression twins (PackedAdjacency.reindex path, maxSegs
+  /** Dense-index expression twins (numbered-pack path, maxSegs
     * == 1 only — hub graphs stay on the hash kernels). State Refs carry
     * per-round broadcasts of BARE primitive arrays. */
   private case class HedonicDecideIdxE(idxE: Expression, nbrsE: Expression,

@@ -82,10 +82,12 @@ object PageRank {
     * `packedOpt`: a caller-built CSR pack of the SYMMETRIZED edges (see
     * Hedonic.run — src- and dst-packs are identical on a symmetric edge
     * set), honored on the broadcast-state path. Pack once, run hedonic +
-    * PageRank + LPA: the degree table is then derived from the cached
-    * V-row pack (size(nbrs) / sum(wts)) instead of a second E-row
-    * aggregate. Caller owns the pack's cache lifetime; its `weighted`
-    * flag must match cfg.weighted. */
+    * PageRank + LPA: a hub-free pack hands over its numbering and
+    * degrees, so the call runs its iterations and nothing else; strengths
+    * (weighted) and hub-pack degrees are derived from the cached V-row
+    * pack (sum(wts) / size(nbrs)) instead of a second E-row aggregate.
+    * Caller owns the pack's cache lifetime; its `weighted` flag must match
+    * cfg.weighted. */
   def runTimed(edges: Dataset[Edge], cfg: Config = Config(),
           verticesOpt: Option[DataFrame] = None,
           packedOpt: Option[graft.graph.PackedAdj] = None): (DataFrame, Seq[Long]) = {
@@ -108,15 +110,14 @@ object PageRank {
         val v = degAgg.count()
         val out = Superstep.stateGate(degAgg, cfg.broadcastStateMaxRows, Some(v)) match {
           case Some(rows) =>
+            val ids = Superstep.longs(rows, 0)
             val d = Superstep.longs(rows, 1)
             val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
-              deferCacheIfHubFree = true, partitions = cfg.packPartitions,
-              cachePartitions = cfg.cachePartitions,
+              partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
               degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))),
-              degrees = Some(graft.graph.DegreeSummary.of(d)))
+              degrees = Some(graft.graph.DegreeSummary.of(d)), numbering = Some(ids))
             val degs = if (cfg.weighted) Superstep.doubles(rows, 2) else d.map(_.toDouble)
-            runDriverState(spark, packed, Superstep.longs(rows, 0), degs, v.toDouble, cfg,
-              ownsPack = true)
+            runDriverState(spark, packed, ids, degs, v.toDouble, cfg, ownsPack = true)
           case None =>
             // over-budget V: co-partitioned shuffle path, no dangling (min deg 1)
             val deg =
@@ -127,19 +128,24 @@ object PageRank {
         degAgg.unpersist()
         out
       case (None, Some(p)) if Superstep.fits(p.vertices, cfg.broadcastStateMaxRows) =>
-        // Caller's pack: V is the pack's own, degrees come off the cached
-        // V-row pack (multi-segment hub vertices contribute one row per
-        // segment, hence the groupBy).
+        // Caller's pack: V is the pack's own. A pack that numbered itself
+        // carries its degrees in pack order, so no job runs. Strengths and
+        // hub packs' degrees come off the cached V-row pack (multi-segment
+        // hub vertices contribute one row per segment, hence the groupBy).
         require(p.weighted == cfg.weighted,
           s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}")
-        val vd = (if (cfg.weighted)
-            p.df.groupBy(col("id")).agg(
-              sum(aggregate(col("wts"), lit(0.0), (acc, x) => acc + x)).as("deg"))
-          else
-            p.df.groupBy(col("id")).agg(sum(size(col("nbrs"))).cast("double").as("deg")))
-          .collect()
-        runDriverState(spark, p, Superstep.longs(vd, 0), Superstep.doubles(vd, 1),
-          p.vertices.toDouble, cfg, ownsPack = false)
+        val (ids, degs) = (p.ids, p.deg) match {
+          case (Some(ids), Some(d)) if !cfg.weighted => (ids, d.map(_.toDouble))
+          case _ =>
+            val vd = (if (cfg.weighted)
+                p.df.groupBy(col("id")).agg(
+                  sum(aggregate(col("wts"), lit(0.0), (acc, x) => acc + x)).as("deg"))
+              else
+                p.df.groupBy(col("id")).agg(sum(size(col("nbrs"))).cast("double").as("deg")))
+              .collect()
+            (Superstep.longs(vd, 0), Superstep.doubles(vd, 1))
+        }
+        runDriverState(spark, p, ids, degs, p.vertices.toDouble, cfg, ownsPack = false)
       case _ =>
         // Explicit vertex tables may contain dangling vertices, whose
         // left-join handling needs the co-partitioned path; an over-budget
@@ -229,13 +235,14 @@ object PageRank {
     * dangling term: this path requires an edge-derived vertex set (min
     * degree 1). */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
-      packed: graft.graph.PackedAdj, ids: Array[Long], degs: Array[Double], v: Double,
+      packed: graft.graph.PackedAdj, ids: Array[Long], degs0: Array[Double], v: Double,
       cfg: Config, ownsPack: Boolean): (DataFrame, Seq[Long]) = {
     import graft.util.StateMap
     type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     val run = new Superstep.Run(spark, ids, Some(packed), ownsPack)
     val n = run.n
+    val degs = run.align(degs0)
     val dense = run.dense.isDefined
     val qR = new StateMap.Ref[Bc[Array[Double]]](null)
     val rankR = new StateMap.Ref[Bc[StateMap.LongDoubleMap]](null)
@@ -366,9 +373,9 @@ object PageRank {
   }
 
   /** Dense-index iteration plan (hub-free production path; see
-    * PackedKernels.kContribIdx). No hub branch — reindex requires
-    * maxSegs == 1. */
-  private[graft] def iterPlanPackedIdx(pidx: graft.graph.PackedIdxAdj,
+    * PackedKernels.kContribIdx). No hub branch — only hub-free packs are
+    * numbered. */
+  private[graft] def iterPlanPackedIdx(pidx: graft.graph.PackedAdj,
       qR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]],
       degArrR: Option[graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]]],
       v: Double, cfg: Config, emitPos: Boolean = false): DataFrame = {

@@ -171,70 +171,73 @@ object Spectral {
     val symDf = GraphOps.symmetrize(edges).select("src", "dst")
     val degAgg = symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")).persist()
     val nL = degAgg.count()
-    if (Superstep.fits(nL, broadcastStateMaxRows)) {
-      val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
-        deferCacheIfHubFree = true,
-        degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))))
-      if (packed.maxSegs == 1) {
-        // ids/degrees/x0 in one collect; x0 evaluated by the SAME column
-        // expression the DataFrame path uses.
-        val rows = degAgg.select(col("id"), col("d").cast("double").as("deg"),
-          Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")).collect()
-        val run = new Superstep.Run(spark, Superstep.longs(rows, 0), Some(packed),
-          ownsPack = true)
-        val n = run.n
-        val degs = Superstep.doubles(rows, 1)
-        var x = Superstep.doubles(rows, 2)
-        var m2 = 0.0
-        var dmax = 0.0
-        var i = 0
-        while (i < n) { m2 += degs(i); if (degs(i) > dmax) dmax = degs(i); i += 1 }
-        val sigma = 3.0 * dmax + 1.0
-        val xR = new graft.util.StateMap.Ref[
-          org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
-        val job = run.values(run.dense.get.df.select(col("myIdx"),
-          GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y")))
-        var it2 = 0
-        while (it2 < iters) {
-          var s1 = 0.0
-          var xx = 0.0
-          var j = 0
-          while (j < n) { s1 += degs(j) * x(j); xx += x(j) * x(j); j += 1 }
-          val n0 = math.sqrt(xx)
-          val nrm = if (n0 > 0.0) n0 else 1.0
-          run.publish(xR, x)
-          val parts = run.collect(job, it2)
-          val next = new Array[Double](n)
-          var p = 0
-          while (p < parts.length) {
-            val (pos, ys) = parts(p)
-            var k = 0
-            while (k < pos.length) {
-              val at = pos(k)
-              // identical association order to the DataFrame mx() column
-              next(at) = ((ys(k) - degs(at) / m2 * s1 - x(at) * 0.0) +
-                sigma * x(at)) / nrm
-              k += 1
+    // ids/degrees/x0 in one collect (x0 evaluated by the SAME column
+    // expression the DataFrame path uses); they are also the pack's
+    // numbering and degree summary, so its build runs no stats job.
+    Superstep.stateGate(degAgg.select(col("id"), col("d"),
+        Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")),
+        broadcastStateMaxRows, Some(nL)) match {
+      case Some(rows) =>
+        val d = Superstep.longs(rows, 1)
+        val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
+          degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))),
+          degrees = Some(graft.graph.DegreeSummary.of(d)),
+          numbering = Some(Superstep.longs(rows, 0)))
+        if (packed.maxSegs == 1) {
+          val run = new Superstep.Run(spark, packed.ids.get, Some(packed), ownsPack = true)
+          val n = run.n
+          val degs = d.map(_.toDouble)
+          var x = Superstep.doubles(rows, 2)
+          var m2 = 0.0
+          var dmax = 0.0
+          var i = 0
+          while (i < n) { m2 += degs(i); if (degs(i) > dmax) dmax = degs(i); i += 1 }
+          val sigma = 3.0 * dmax + 1.0
+          val xR = new graft.util.StateMap.Ref[
+            org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
+          val job = run.values(packed.df.select(col("myIdx"),
+            GraphKernels.nbrSumIdx(col("nbrs"), xR).as("y")))
+          var it2 = 0
+          while (it2 < iters) {
+            var s1 = 0.0
+            var xx = 0.0
+            var j = 0
+            while (j < n) { s1 += degs(j) * x(j); xx += x(j) * x(j); j += 1 }
+            val n0 = math.sqrt(xx)
+            val nrm = if (n0 > 0.0) n0 else 1.0
+            run.publish(xR, x)
+            val parts = run.collect(job, it2)
+            val next = new Array[Double](n)
+            var p = 0
+            while (p < parts.length) {
+              val (pos, ys) = parts(p)
+              var k = 0
+              while (k < pos.length) {
+                val at = pos(k)
+                // identical association order to the DataFrame mx() column
+                next(at) = ((ys(k) - degs(at) / m2 * s1 - x(at) * 0.0) +
+                  sigma * x(at)) / nrm
+                k += 1
+              }
+              p += 1
             }
-            p += 1
+            x = next
+            it2 += 1
           }
-          x = next
-          it2 += 1
+          run.close()
+          degAgg.unpersist()
+          return Superstep.frame(spark, run.ids, "x", x)
         }
-        run.close()
-        degAgg.unpersist()
-        return Superstep.frame(spark, run.ids, "x", x)
-      }
-      packed.unpersist()
+        packed.unpersist()
+      case None =>
     }
     degAgg.unpersist()
     val sym = GraphOps.pinnedSym(edges, "dst")
     val deg = sym.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("double").as("deg")).persist()
-    val Array(m2, dmax) =
-      deg.agg(sum("deg"), max("deg")).collect()(0).toSeq.map(_.asInstanceOf[Double]).toArray
+    val row = deg.agg(sum("deg"), max("deg"), min("id")).collect()(0)
+    val (m2, dmax, minId) = (row.getDouble(0), row.getDouble(1), row.getLong(2))
     val sigma = 3.0 * dmax + 1.0
-    val minId = deg.agg(min("id")).collect()(0).getLong(0)
     val state0 = Iterate.pinSums(
       phaseStat(sym, deg.select(col("id"), lit(minId).as("community")), deg, m2)
         .withColumn("x", Portable.uniformSym(Portable.key(lit("sp"), col("id")))),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
-import graft.graph.{PackedAdj, PackedAdjacency, PackedIdxAdj}
+import graft.graph.{PackedAdj, PackedAdjacency}
 import graft.util.{DeltaState, Portable, StateMap}
 
 /** The driver-state superstep engine shared by every broadcast-state loop
@@ -31,13 +31,16 @@ import graft.util.{DeltaState, Portable, StateMap}
   *    setting. A caller that already counted the state (a persisted
   *    degree table) passes the count: over budget is then decided with
   *    no job, within budget the collect is exact.
-  *  - Vertex numbering (`Run`): collected ids become dense positions; the
-  *    id -> position map feeds the reindex and the hash-layout key.
-  *  - Layout and pack ownership: hub-free packs (`maxSegs == 1`) are
-  *    remapped once to dense positions (PackedAdjacency.reindex) so a
-  *    round's state is a bare primitive array; hub packs keep the hash
-  *    kernels over broadcast primitive maps. An own pack is released as
-  *    soon as it is no longer needed; a caller's shared pack never is.
+  *  - State layout (`Run`): a hub-free pack is numbered by its build
+  *    (PackedAdjacency), so a round's state is a bare primitive array
+  *    indexed by pack position. A state whose id set IS the numbering's
+  *    (aligned: an own pack numbered by the state, a shared pack's
+  *    edge-derived vertex set) is laid out in pack order with one map
+  *    lookup per row and no Spark job; any other state gets the pack
+  *    renumbered to its own positions (PackedAdjacency.reindex, -1 for
+  *    pack vertices outside it). Hub packs keep the hash kernels over
+  *    broadcast primitive maps keyed by state position. An own pack is
+  *    released at close; a caller's shared pack never is.
   *  - Plans are built ONCE over StateMap.Ref cells and re-collected every
   *    round; the Refs carry per-round BROADCAST HANDLES (`publish`), not
   *    the state itself — a handle serializes to an id and the value ships
@@ -179,28 +182,49 @@ object Superstep {
     (ks, vs)
   }
 
-  /** One driver-state run over the state vertices `ids` (in collect
-    * order: position i holds ids(i)). `packed` is the adjacency the plans
-    * scan, if any — a hub-free pack is remapped to dense positions
-    * (`dense`), a hub pack stays on the hash kernels. `ownsPack` = the run
-    * built the pack itself and may release it. Call `close()` when done. */
-  final class Run(val spark: SparkSession, val ids: Array[Long],
+  /** One driver-state run over the state vertices `stateIds` (in the
+    * caller's collect order). `packed` is the adjacency the plans scan, if
+    * any: a numbered pack is scanned as it is when the state is aligned
+    * with it and renumbered to the state otherwise (`dense`), a hub pack
+    * stays on the hash kernels. `ids` is the run's position order — the
+    * pack's when aligned — and `align` lays the caller's value arrays out
+    * in it. `ownsPack` = the run built the pack itself and releases it.
+    * Call `close()` when done. */
+  final class Run(val spark: SparkSession, stateIds: Array[Long],
                   packed: Option[PackedAdj] = None, ownsPack: Boolean = false) {
     val sc = spark.sparkContext
+    private val numbering = packed.flatMap(_.ids)
+    /** Pack position of each state row, when the state is aligned with a
+      * pack numbered by someone else (the run adopts the pack's order). */
+    private val order: Option[Array[Int]] =
+      numbering.filterNot(_ eq stateIds).flatMap(alignment(_, stateIds))
+    val ids: Array[Long] = if (order.isDefined) numbering.get else stateIds
     val n: Int = ids.length
-    private val posOf = StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n)
+    private lazy val posOf = StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n)
     val round = new StateMap.Ref[Integer](Integer.valueOf(0))
     private val live = ArrayBuffer.empty[Broadcast[_]]  // destroyed after each collect
     private val owned = ArrayBuffer.empty[Broadcast[_]] // destroyed by close()
 
-    val dense: Option[PackedIdxAdj] = packed.filter(_.maxSegs == 1).map { p =>
-      val idxB = sc.broadcast(posOf)
-      val pidx = PackedAdjacency.reindex(p, idxB)
-      // unpersist, not destroy: a lost cache partition re-runs the remap
-      // lineage, which still needs the broadcast re-shippable.
-      idxB.unpersist()
-      if (ownsPack) p.unpersist()
-      pidx
+    private val remapped = numbering.isDefined && !(numbering.get eq ids)
+    /** The numbered layout the plans scan, in this run's positions. */
+    val dense: Option[PackedAdj] = packed.filter(_.ids.isDefined).map { p =>
+      if (!remapped) p
+      else PackedAdjacency.reindex(p, ids, p.ids.get.map(PackedAdjacency.positionOf(posOf, _)))
+    }
+
+    /** The caller's per-row values (collect order) in this run's order. */
+    def align(a: Array[Long]): Array[Long] = order.fold(a) { o =>
+      val out = new Array[Long](n)
+      var i = 0
+      while (i < o.length) { out(o(i)) = a(i); i += 1 }
+      out
+    }
+
+    def align(a: Array[Double]): Array[Double] = order.fold(a) { o =>
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < o.length) { out(o(i)) = a(i); i += 1 }
+      out
     }
 
     val delta = new Delta(this)
@@ -256,12 +280,28 @@ object Superstep {
     def close(): Unit = {
       delta.close()
       owned.foreach(_.destroy()); owned.clear()
-      dense match {
-        case Some(p) => p.unpersist()
-        case None    => if (ownsPack) packed.foreach(_.unpersist())
-      }
+      if (remapped) dense.foreach(_.unpersist())
+      if (ownsPack) packed.foreach(_.unpersist())
     }
   }
+
+  /** Pack position of each state id when `state` holds exactly the
+    * vertices of the numbering `pack` (same count, every id found, none
+    * twice), else None. One map lookup per row. */
+  private def alignment(pack: Array[Long], state: Array[Long]): Option[Array[Int]] =
+    if (pack.length != state.length) None
+    else {
+      val pos = StateMap.longLong(pack, Array.tabulate(pack.length)(_.toLong), pack.length)
+      val seen = new java.util.BitSet(pack.length)
+      val out = new Array[Int](state.length)
+      var i = 0
+      while (i < state.length) {
+        val at = PackedAdjacency.positionOf(pos, state(i))
+        if (at < 0 || seen.get(at)) return None
+        out(i) = at; seen.set(at); i += 1
+      }
+      Some(out)
+    }
 
   /** Driver side of the delta transport (see DeltaState): the base
     * snapshot broadcast, the cumulative absolute overrides since it (state

@@ -2,19 +2,30 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.StateMap
 
-/** CSR-packed adjacency cache + hub segmentation metadata (see
-  * PackedAdjacency.build). `maxSegs == 1` means no vertex exceeded the
-  * segment cap, so plan builders can skip the hub-combine branch
-  * entirely. `degSum` (directed half-edges, 2E on a symmetrized input)
-  * and `vertices` (V) come from the build's degree summary. Caller owns
-  * the cache lifetime (unpersist()). `cached` is false for a deferred
-  * hub-free build (see build): its unpersist is a no-op, so it cannot
-  * evict a cached pack over the same plan. */
+/** CSR-packed adjacency cache (see PackedAdjacency.build). Two layouts:
+  *  - numbered (`ids` defined; every hub-free build): one row per vertex,
+  *    (id, myIdx, nbrs: array<int>[, wts]). Neighbor arrays hold
+  *    POSITIONS in the numbering (-1 = endpoint outside it) and `myIdx` is
+  *    the row's own. On the driver, `ids(i)` is the vertex at position i
+  *    and, when the build numbered the pack itself, `deg(i)` its degree.
+  *    Kernels read per-round state as a bare primitive array indexed by
+  *    position — one direct load per neighbor instead of ~2 random
+  *    hash-probe cache lines — and int arrays halve the cache against long
+  *    ids.
+  *  - long ids (`maxSegs > 1`, a hub graph): (id, nsegs, nbrs:
+  *    array<long>[, wts]) rows, one per vertex segment, read by the hash
+  *    kernels through broadcast maps.
+  * `maxSegs == 1` means no vertex exceeded the segment cap, so plan
+  * builders can skip the hub-combine branch entirely. `degSum` (directed
+  * half-edges, 2E on a symmetrized input) and `vertices` (V) come from the
+  * build's degree summary. Caller owns the cache lifetime (unpersist()). */
 final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
                            degSum: Long = 0L, vertices: Long = 0L,
-                           cached: Boolean = true) {
-  def unpersist(): Unit = if (cached) df.unpersist()
+                           ids: Option[Array[Long]] = None,
+                           deg: Option[Array[Long]] = None) {
+  def unpersist(): Unit = { df.unpersist(); () }
 }
 
 /** One pass over a per-vertex degree table: V (rows), `degSum` (the sum of
@@ -30,18 +41,6 @@ object DegreeSummary {
     while (i < degrees.length) { sum += degrees(i); mx = math.max(mx, degrees(i)); i += 1 }
     DegreeSummary(degrees.length, sum, mx)
   }
-}
-
-/** Dense-index remap of a hub-free packed adjacency: neighbor arrays hold
-  * POSITIONS into the driver's state arrays (int, -1 = endpoint outside
-  * the state table) and each row carries its own position (`myIdx`).
-  * Kernels then read per-round state as a bare primitive array — one
-  * direct 8-byte load per neighbor instead of ~2 random hash-probe cache
-  * lines — and the per-round broadcast shrinks to the values array alone
-  * (8 B/vertex vs the ~32 B/vertex open-addressing map). Int neighbor
-  * arrays also halve the cached adjacency's sequential footprint. */
-final case class PackedIdxAdj(df: DataFrame, weighted: Boolean) {
-  def unpersist(): Unit = { df.unpersist(); () }
 }
 
 /** CSR-packed adjacency: one row per vertex holding its neighbor ids as a
@@ -72,14 +71,25 @@ final case class PackedIdxAdj(df: DataFrame, weighted: Boolean) {
   * through a partial-counts + regular-aggregate branch in the plan
   * builders; `maxSegs` tells them whether that branch can be elided.
   *
-  * Arrays are sorted (array_sort) so per-vertex float accumulation order —
-  * and therefore every kernel output — is deterministic across runs and
-  * partitionings.
+  * Arrays are sorted by neighbor id so per-vertex float accumulation
+  * order — and therefore every kernel output — is deterministic across
+  * runs and partitionings; numbering keeps that order (positions are
+  * assigned per neighbor, the array is not re-sorted).
   *
-  * The degree join is broadcast: build() is only used by the
-  * broadcast-state strategy, whose precondition is V small enough to
-  * broadcast. The build costs one E-row shuffle (the groupBy) — the same
-  * price as the row cache's repartition — amortized over all supersteps.
+  * Numbering (hub-free packs): the build numbers the vertices itself,
+  * once, so every algorithm call over a shared pack scans it as it is.
+  * A build given no `numbering` takes it from its own degree table — the
+  * V-row (id, degree) collect that also yields the degree summary, so the
+  * build stays at two jobs — and the pack then carries its ids and
+  * degrees. An own-pack build is handed the caller's state ids instead;
+  * pack vertices outside them get -1. Either way the id -> position remap
+  * runs inside the assembly scan, and only the int layout is cached.
+  *
+  * The degree join and the position map are broadcast: build() is only
+  * used by the broadcast-state strategy, whose precondition is V small
+  * enough to broadcast. The build costs one E-row shuffle (the groupBy) —
+  * the same price as the row cache's repartition — amortized over all
+  * supersteps.
   */
 object PackedAdjacency {
 
@@ -96,16 +106,12 @@ object PackedAdjacency {
     * and the scan allocates exactly one primitive array per vertex
     * segment. This is the classic distributed CSR build; the in-partition
     * sort also hands every kernel a sorted neighbor array for free
-    * (deterministic float accumulation order). */
-  /** `deferCacheIfHubFree`: when true AND the graph turns out hub-free
-    * (maxSegs == 1), the LONG-id packed table is NOT persisted — the caller
-    * promises to `reindex` immediately, and reindex's single scan both
-    * materializes the pack lineage and caches the INT-position table (half
-    * the footprint). Measured necessity: at 1.67e9 pre-assembly rows on
-    * 2x12 GB executors, caching the long-array table (13.4 GB) while the
-    * pack sort runs drove execution memory to zero; the int table (6.7 GB)
-    * fits. Hub graphs (maxSegs > 1) always cache, since the hash-kernel
-    * plans scan the long-id table every superstep. */
+    * (deterministic float accumulation order).
+    *
+    * Only the int layout of a hub-free pack is cached, never its long-id
+    * table. Measured necessity: at 1.67e9 pre-assembly rows on 2x12 GB
+    * executors, caching the long-array table (13.4 GB) while the pack sort
+    * runs drove execution memory to zero; the int table (6.7 GB) fits. */
   /** `partitions`: pack-shuffle output count (defaults to the session's
     * shuffle partitions). This sizes the SORT tasks — keep it data-sized;
     * shrinking it to per-core counts made each in-partition sort huge and
@@ -126,39 +132,63 @@ object PackedAdjacency {
   /** `degOpt`: a precomputed per-`key` row-count table (columns: key, "d")
     * — round-6 setup dedup: callers that already aggregated degrees (the
     * strategy decision / rank-degree table) pass it so the build does not
-    * re-aggregate the E-row input. It feeds the stats job (when no
-    * `degrees` summary is given) and the hub segment join. */
+    * re-aggregate the E-row input. It feeds the degree collect or stats
+    * job and the hub segment join. */
   /** `degrees`: the caller's summary of `sym`'s per-`key` degree table
     * (V, 2E, max degree — GraphOps.degreeSummary or DegreeSummary.of over
     * collected degrees). Contract: it must describe this same `sym`; it
     * replaces the build's own stats job, and `maxSegs` — hence the
-    * layout — is derived from its max degree. Without it the build runs
-    * one stats job over the degree table. Either way the segment join is
-    * elided only when `maxSegs == 1` proves every vertex is a single
+    * layout — is derived from its max degree. Either way the segment join
+    * is elided only when `maxSegs == 1` proves every vertex is a single
     * segment: rows are then keyed with constant seg = 0, nsegs = 1 —
-    * exactly what the join would assign — so no broadcast-build job runs
-    * (and, when `degOpt` is absent, no second E-row aggregate). Hub
-    * graphs keep the join. */
+    * exactly what the join would assign — so no broadcast-build job runs.
+    * Hub graphs keep the join. */
+  /** `numbering`: the caller's state ids (an own-pack build): position i
+    * of the pack is vertex numbering(i). Without it a hub-free build
+    * numbers itself from its degree collect (see the object doc). Ignored
+    * on hub graphs. */
   def build(sym: DataFrame, key: String, weighted: Boolean = false,
-            segCap: Int = 1 << 20, deferCacheIfHubFree: Boolean = false,
+            segCap: Int = 1 << 20,
             partitions: Option[Int] = None,
             cachePartitions: Option[Int] = None,
             degOpt: Option[DataFrame] = None,
-            degrees: Option[DegreeSummary] = None): PackedAdj = {
+            degrees: Option[DegreeSummary] = None,
+            numbering: Option[Array[Long]] = None): PackedAdj =
+    pack(sym, key, weighted, segCap, partitions, cachePartitions, degOpt, degrees,
+      numbering, numbered = true)
+
+  /** build()'s long-id layout whatever the degrees: the hash kernels'
+    * input, which specs and plan dumps set against the numbered layout of
+    * the same hub-free graph. */
+  private[graft] def buildLongIds(sym: DataFrame, key: String, weighted: Boolean = false,
+                                  segCap: Int = 1 << 20): PackedAdj =
+    pack(sym, key, weighted, segCap, None, None, None, None, None, numbered = false)
+
+  private def pack(sym: DataFrame, key: String, weighted: Boolean, segCap: Int,
+                   partitions: Option[Int], cachePartitions: Option[Int],
+                   degOpt: Option[DataFrame], degrees: Option[DegreeSummary],
+                   numbering: Option[Array[Long]], numbered: Boolean): PackedAdj = {
     val spark = sym.sparkSession
     import spark.implicits._
     val nbr = if (key == "src") "dst" else "src"
     lazy val degAgg = degOpt.getOrElse(sym.groupBy(col(key)).agg(count(lit(1)).as("d")))
+    def segsOf(maxDeg: Long): Int = math.max(1L, (maxDeg + segCap - 1) / segCap).toInt
     // Stats come from the V-row degree frame, NOT from scanning the packed
-    // table afterwards (the old count()+max(nsegs) pair forced two full
-    // materializations of the pack): maxSegs decides the hub branch before
-    // any caching policy is applied.
-    val st = degrees.getOrElse {
+    // table afterwards: maxSegs decides the layout before anything is
+    // cached. A build that numbers itself collects the whole frame, which
+    // is its numbering, its degrees and its summary at once.
+    val own = Option.when(
+        numbered && numbering.isEmpty && degrees.forall(s => segsOf(s.maxDeg) == 1)) {
+      val rows = degAgg.select(col(key), col("d")).collect()
+      (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    }
+    val st = degrees.orElse(own.map(o => DegreeSummary.of(o._2))).getOrElse {
       val r = degAgg.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)),
         coalesce(max(col("d")), lit(0L))).collect()(0)
       DegreeSummary(r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val maxSegs = math.max(1L, (st.maxDeg + segCap - 1) / segCap).toInt
+    val maxSegs = segsOf(st.maxDeg)
+    val ids = if (numbered && maxSegs == 1) numbering.orElse(own.map(_._1)) else None
     val (input, segs) =
       if (maxSegs == 1) (sym, Seq(lit(0L).as("seg"), lit(1).as("nsegs")))
       else {
@@ -170,111 +200,92 @@ object PackedAdjacency {
     val keyed = input
       .select(((col(key).as("id") +: segs :+ col(nbr).as("n")) ++
         (if (weighted) Seq(col("weight").cast("double").as("w")) else Nil)): _*)
-      .repartition(partitions.getOrElse(
-        sym.sparkSession.sessionState.conf.numShufflePartitions),
+      .repartition(partitions.getOrElse(spark.sessionState.conf.numShufflePartitions),
         col("id"), col("seg"))
       .sortWithinPartitions("id", "seg", "n")
-    // Two typed assembly branches so the UNWEIGHTED shuffle never carries a
-    // constant 0.0 weight column — at 1.67e9 pre-assembly rows that column
-    // alone is ~13 GB of shuffle spill for bytes the pack then discards.
-    val packed0 =
-      if (weighted)
-        keyed.as[NbrRow].mapPartitions { it =>
-          new Iterator[(Long, Int, Array[Long], Array[Double])] {
-            private var cur: NbrRow = if (it.hasNext) it.next() else null
-            private val nb = new scala.collection.mutable.ArrayBuilder.ofLong
-            private val wb = new scala.collection.mutable.ArrayBuilder.ofDouble
-            override def hasNext: Boolean = cur != null
-            override def next(): (Long, Int, Array[Long], Array[Double]) = {
-              val id = cur.id
-              val seg = cur.seg
-              val ns = cur.nsegs
-              nb.clear(); wb.clear()
-              var go = true
-              while (go) {
-                nb += cur.n
-                wb += cur.w
-                cur = if (it.hasNext) it.next() else null
-                go = cur != null && cur.id == id && cur.seg == seg
-              }
-              (id, ns, nb.result(), wb.result())
-            }
-          }
-        }.toDF("id", "nsegs", "nbrs", "wts")
-      else
-        keyed.as[NbrRowU].mapPartitions { it =>
-          new Iterator[(Long, Int, Array[Long])] {
-            private var cur: NbrRowU = if (it.hasNext) it.next() else null
-            private val nb = new scala.collection.mutable.ArrayBuilder.ofLong
-            override def hasNext: Boolean = cur != null
-            override def next(): (Long, Int, Array[Long]) = {
-              val id = cur.id
-              val seg = cur.seg
-              val ns = cur.nsegs
-              nb.clear()
-              var go = true
-              while (go) {
-                nb += cur.n
-                cur = if (it.hasNext) it.next() else null
-                go = cur != null && cur.id == id && cur.seg == seg
-              }
-              (id, ns, nb.result())
-            }
-          }
-        }.toDF("id", "nsegs", "nbrs")
+    // The constant weight joins after the sort: the UNWEIGHTED shuffle
+    // never carries it — at 1.67e9 pre-assembly rows that column alone is
+    // ~13 GB of shuffle spill for bytes the pack then discards.
+    val rows = (if (weighted) keyed else keyed.withColumn("w", lit(0.0))).as[NbrRow]
+    val posB = ids.map(a => spark.sparkContext.broadcast(
+      StateMap.longLong(a, Array.tabulate(a.length)(_.toLong), a.length)))
+    val (layout, assembled) = posB match {
+      case Some(b) => ("myIdx", rows.mapPartitions { it =>
+        val m = b.value
+        segments(it, weighted).map { case (id, _, nb, wt) =>
+          (id, positionOf(m, id), nb.map(positionOf(m, _)), wt)
+        }
+      }.toDF())
+      case None => ("nsegs", rows.mapPartitions(segments(_, weighted)).toDF())
+    }
+    val packed0 = assembled.toDF("id", layout, "nbrs", "wts")
+      .select((Seq(col("id"), col(layout), col("nbrs")) ++
+        (if (weighted) Seq(col("wts")) else Nil)): _*)
     val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
-    val defer = deferCacheIfHubFree && maxSegs == 1
-    if (!defer) { packed1.persist(); packed1.count() }
-    PackedAdj(packed1, maxSegs, weighted, st.degSum, st.vertices, cached = !defer)
+    packed1.persist()
+    packed1.count()
+    // unpersist, not destroy: a lost cache partition re-runs the assembly,
+    // which still needs the map re-shippable.
+    posB.foreach(_.unpersist())
+    PackedAdj(packed1, maxSegs, weighted, st.degSum, st.vertices, ids,
+      if (numbering.isEmpty) own.map(_._2) else None)
   }
 
-  /** Remap a hub-free (`maxSegs == 1`) packed adjacency to dense state
-    * indexes (see PackedIdxAdj). `idxB` maps vertex id -> position in the
-    * caller's state arrays; ids outside it become -1 (the kernels' skip,
-    * mirroring the hash kernels' slot<0). One in-memory scan of the
-    * already-cached packed table, amortized over all supersteps like the
-    * build itself; the caller releases the id-based cache afterwards.
-    * Neighbor order (sorted by original id) is PRESERVED, so per-vertex
-    * float accumulation order — and every kernel decision — is unchanged. */
-  def reindex(packed: PackedAdj,
-      idxB: org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap])
-      : PackedIdxAdj = {
-    require(packed.maxSegs == 1,
-      "dense-index remap requires a hub-free packed adjacency (maxSegs == 1)")
+  /** Position of vertex `k` in the numbering `m`, -1 outside it. */
+  private[graft] def positionOf(m: StateMap.LongLongMap, k: Long): Int = {
+    val s = m.slot(k)
+    if (s < 0) -1 else m.valueAt(s).toInt
+  }
+
+  /** One partition's sorted (id, seg, n, w) rows as one row per vertex
+    * segment: (id, nsegs, neighbors, weights — null when unweighted). */
+  private def segments(it: Iterator[NbrRow], weighted: Boolean)
+      : Iterator[(Long, Int, Array[Long], Array[Double])] =
+    new Iterator[(Long, Int, Array[Long], Array[Double])] {
+      private var cur: NbrRow = if (it.hasNext) it.next() else null
+      private val nb = new scala.collection.mutable.ArrayBuilder.ofLong
+      private val wb = new scala.collection.mutable.ArrayBuilder.ofDouble
+      override def hasNext: Boolean = cur != null
+      override def next(): (Long, Int, Array[Long], Array[Double]) = {
+        val id = cur.id
+        val seg = cur.seg
+        val ns = cur.nsegs
+        nb.clear(); wb.clear()
+        var go = true
+        while (go) {
+          nb += cur.n
+          if (weighted) wb += cur.w
+          cur = if (it.hasNext) it.next() else null
+          go = cur != null && cur.id == id && cur.seg == seg
+        }
+        (id, ns, nb.result(), if (weighted) wb.result() else null)
+      }
+    }
+
+  /** Renumber a numbered pack: the row at pack position p moves to
+    * `to(p)` (-1 = outside the new numbering `ids`), in `myIdx` and in
+    * every neighbor array. Neighbor order is PRESERVED, so per-vertex
+    * float accumulation order — and every kernel decision — is unchanged.
+    * One scan of the cached int layout; the caller releases the copy. */
+  def reindex(packed: PackedAdj, ids: Array[Long], to: Array[Int]): PackedAdj = {
+    require(packed.ids.isDefined, "reindex requires a numbered (hub-free) pack")
     val spark = packed.df.sparkSession
     import spark.implicits._
-    def at(m: graft.util.StateMap.LongLongMap, k: Long): Int = {
-      val s = m.slot(k)
-      if (s < 0) -1 else m.valueAt(s).toInt
-    }
-    val out =
-      if (packed.weighted)
-        packed.df.select("id", "nbrs", "wts")
-          .as[(Long, Array[Long], Array[Double])]
-          .mapPartitions { it =>
-            it.map { case (id, nb, wt) =>
-              val m = idxB.value
-              val re = new Array[Int](nb.length)
-              var i = 0
-              while (i < nb.length) { re(i) = at(m, nb(i)); i += 1 }
-              (id, at(m, id), re, wt)
-            }
-          }.toDF("id", "myIdx", "nbrs", "wts")
-      else
-        packed.df.select("id", "nbrs")
-          .as[(Long, Array[Long])]
-          .mapPartitions { it =>
-            it.map { case (id, nb) =>
-              val m = idxB.value
-              val re = new Array[Int](nb.length)
-              var i = 0
-              while (i < nb.length) { re(i) = at(m, nb(i)); i += 1 }
-              (id, at(m, id), re)
-            }
-          }.toDF("id", "myIdx", "nbrs")
-    val p = out.persist()
-    p.count()
-    PackedIdxAdj(p, packed.weighted)
+    val toB = spark.sparkContext.broadcast(to)
+    val wts = if (packed.weighted) col("wts") else lit(null).cast("array<double>")
+    val out = packed.df.select(col("id"), col("myIdx"), col("nbrs"), wts.as("wts"))
+      .as[(Long, Int, Array[Int], Array[Double])]
+      .mapPartitions { it =>
+        val t = toB.value
+        def at(p: Int): Int = if (p < 0) -1 else t(p)
+        it.map { case (id, my, nb, wt) => (id, at(my), nb.map(at), wt) }
+      }.toDF("id", "myIdx", "nbrs", "wts")
+      .select((Seq(col("id"), col("myIdx"), col("nbrs")) ++
+        (if (packed.weighted) Seq(col("wts")) else Nil)): _*)
+      .persist()
+    out.count()
+    toB.unpersist()
+    packed.copy(df = out, ids = Some(ids), deg = None)
   }
 }
 
@@ -282,6 +293,3 @@ object PackedAdjacency {
   * neighbor, its weight (0 when unweighted). All-primitive fields so the
   * assembly scan deserializes without boxing. */
 private[graph] final case class NbrRow(id: Long, seg: Long, nsegs: Int, n: Long, w: Double)
-
-/** Unweighted twin of NbrRow — no weight column in the pack shuffle. */
-private[graph] final case class NbrRowU(id: Long, seg: Long, nsegs: Int, n: Long)

@@ -224,8 +224,9 @@ object BenchExtra {
         }
         timed("  pack_build") {
           val sym = graft.graph.GraphOps.symmetrize(e).select("src", "dst")
-          val p = graft.graph.PackedAdjacency.build(sym, "dst", deferCacheIfHubFree = true)
+          val p = graft.graph.PackedAdjacency.build(sym, "dst")
           println("    maxSegs=" + p.maxSegs + " degSum=" + p.degSum)
+          p.unpersist()
         }
         timed("  run_timed") {
           val (out, ms) = graft.algo.PageRank.runTimed(e,

@@ -42,7 +42,7 @@ class PackedSpec extends SparkSpec {
     val expect = rows3(Hedonic.stepPlanMap(symDf, commB, sizeB, alpha, gate))
     assert(expect.nonEmpty) // the fixture must actually exercise movers
     for (cap <- Seq(1 << 20, 2)) {
-      val p = PackedAdjacency.build(symDf, "src", weighted = false, segCap = cap)
+      val p = PackedAdjacency.buildLongIds(symDf, "src", weighted = false, segCap = cap)
       if (cap == 2) assert(p.maxSegs > 1) else assert(p.maxSegs == 1)
       val got = rows3(Hedonic.stepPlanPacked(p, commB, sizeB, alpha, gate))
       assert(got == expect, s"segCap=$cap")
@@ -68,7 +68,7 @@ class PackedSpec extends SparkSpec {
       Hedonic.stepPlanMap(symDf.select("src", "dst"), commB, sizeB, alpha, gate))
     assert(expect != unweighted)
     for (cap <- Seq(1 << 20, 2)) {
-      val p = PackedAdjacency.build(symDf, "src", weighted = true, segCap = cap)
+      val p = PackedAdjacency.buildLongIds(symDf, "src", weighted = true, segCap = cap)
       if (cap == 2) assert(p.maxSegs > 1)
       val got = rows3(Hedonic.stepPlanPacked(p, commB, sizeB, alpha, gate))
       assert(got == expect, s"segCap=$cap")
@@ -90,7 +90,7 @@ class PackedSpec extends SparkSpec {
       val expect = rows3(LabelPropagation.stepPlanMap(symDf, labB, weighted, gate))
       assert(expect.nonEmpty)
       for (cap <- Seq(1 << 20, 2)) {
-        val p = PackedAdjacency.build(symDf, "src", weighted, segCap = cap)
+        val p = PackedAdjacency.buildLongIds(symDf, "src", weighted, segCap = cap)
         val got = rows3(LabelPropagation.stepPlanPacked(p, labB, gate))
         assert(got == expect, s"weighted=$weighted segCap=$cap")
         p.unpersist()
@@ -119,7 +119,7 @@ class PackedSpec extends SparkSpec {
       val expect = PageRank.iterPlanMap(symDf, rankB, degB, v, cfg)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       for (cap <- Seq(1 << 20, 2)) {
-        val p = PackedAdjacency.build(symDf, "dst", weighted, segCap = cap)
+        val p = PackedAdjacency.buildLongIds(symDf, "dst", weighted, segCap = cap)
         val got = PageRank.iterPlanPacked(p, rankB, degB, v, cfg)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(got.keySet == expect.keySet, s"weighted=$weighted segCap=$cap")
@@ -134,23 +134,20 @@ class PackedSpec extends SparkSpec {
   }
 
   test("indexed kernels: outside-state vertices (-1 positions) match the row plan") {
-    // Vertex 33 is OUTSIDE stateSeq: reindex maps it (as row and as
-    // neighbor) to -1, and the indexed kernels must reproduce the row
+    // Vertex 33 is OUTSIDE stateSeq: a pack numbered by the state maps it
+    // (as row and as neighbor) to -1, and the indexed kernels must reproduce the row
     // plan's inner-join-drop semantics exactly — NULLV for the row, skip
     // for the neighbor — as the hash kernels already do.
     val e = edgesOf(Fixtures.zachary)
     val symDf = GraphOps.symmetrize(e).select("src", "dst")
     val ids = stateSeq.map(_._1).toArray
     val comms = stateSeq.map(_._2).toArray
-    val n = ids.length
     val commB = new StateMap.Ref(sc.broadcast(llMap(stateSeq)))
     val sizeB = new StateMap.Ref(sc.broadcast(llMap(sizesOf(stateSeq))))
     val commArrB = new StateMap.Ref(sc.broadcast(comms.clone()))
-    val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
     val alpha = 0.12
     val gate = graft.util.Portable.parityGate(col("id"), 3)
-    val p = PackedAdjacency.build(symDf, "src")
-    val pidx = PackedAdjacency.reindex(p, idxB)
+    val pidx = PackedAdjacency.build(symDf, "src", numbering = Some(ids))
     // myIdx = -1 exactly for vertex 33; its id appears in neighbor arrays
     // as -1 (covered implicitly by the decision parity below).
     val mi = pidx.df.select("id", "myIdx").collect()
@@ -163,7 +160,7 @@ class PackedSpec extends SparkSpec {
       .map { case (id, l, g) => (id, l, g) }
     val gotL = rows3(LabelPropagation.stepPlanPackedIdx(pidx, commArrB, gate))
     assert(gotL == expectL)
-    pidx.unpersist(); p.unpersist()
+    pidx.unpersist()
   }
 
   test("delta-transport plan ≡ bare-array indexed plan (full base + in-place delta epochs)") {
@@ -172,12 +169,9 @@ class PackedSpec extends SparkSpec {
     val symDf = GraphOps.symmetrize(e).select("src", "dst")
     val ids = stateSeq.map(_._1).toArray
     val comms = stateSeq.map(_._2).toArray
-    val n = ids.length
-    val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(n)(_.toLong), n))
     val alpha = 0.12
     val gate = graft.util.Portable.parityGate(col("id"), 3)
-    val p = PackedAdjacency.build(symDf, "src")
-    val pidx = PackedAdjacency.reindex(p, idxB)
+    val pidx = PackedAdjacency.build(symDf, "src", numbering = Some(ids))
     def sizeArrays(st: Seq[(Long, Long)]): (Array[Long], Array[Long]) = {
       val s = sizesOf(st)
       (s.map(_._1).toArray, s.map(_._2).toArray)
@@ -224,7 +218,7 @@ class PackedSpec extends SparkSpec {
       Array.empty[Long], Array.empty[Long])))
     val gotL = rows3(LabelPropagation.stepPlanPackedIdxDelta(pidx, lState, gate))
     assert(gotL == expectL)
-    pidx.unpersist(); p.unpersist()
+    pidx.unpersist()
   }
 
   test("packed single-segment superstep plans have zero shuffle exchanges") {
@@ -243,7 +237,7 @@ class PackedSpec extends SparkSpec {
     try {
       val e = edgesOf(Fixtures.zachary)
       val symDf = GraphOps.symmetrize(e).select("src", "dst")
-      val p = PackedAdjacency.build(symDf, "src")
+      val p = PackedAdjacency.buildLongIds(symDf, "src")
       val commB = new StateMap.Ref(sc.broadcast(llMap(stateSeq)))
       val sizeB = new StateMap.Ref(sc.broadcast(llMap(sizesOf(stateSeq))))
       val degB = new StateMap.Ref(sc.broadcast(ldMap((0L to 33L).map(i => (i, 2.0)))))
@@ -275,7 +269,7 @@ class PackedSpec extends SparkSpec {
     try {
       val e = edgesOf(Fixtures.zachary)
       val symDf = GraphOps.symmetrize(e).select("src", "dst")
-      val free = PackedAdjacency.build(symDf, "src", deferCacheIfHubFree = true,
+      val free = PackedAdjacency.build(symDf, "src",
         degrees = Some(GraphOps.degreeSummary(e)))
       assert(free.maxSegs == 1 && free.vertices == 34L && free.degSum == 156L)
       assert(broadcastJoins(free.df) == 0, free.df.queryExecution.executedPlan.toString)

@@ -36,6 +36,8 @@ class SharedPackSpec extends SparkSpec {
     val init = membersOf((0L to 7L).map(i => (i, i)))
     val cfgH = Hedonic.Config(maxSupersteps = 40)
     val cfgP = PageRank.Config(fixedIter = Some(20))
+    // lacks pack vertex 7, adds isolated vertex 42
+    val misaligned = membersOf((0L to 6L).map(i => (i, i % 3)) :+ ((42L, 42L)))
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
 
     val (ownH, ownMet) = Hedonic.run(e, init, cfgH)
@@ -82,7 +84,13 @@ class SharedPackSpec extends SparkSpec {
         PageRank.runTimed(e, cfgP.copy(broadcastStateMaxRows = 7L))._1)),
       "LabelPropagation.run" -> (() => countAndRelease(LabelPropagation.run(e))),
       "LabelPropagation.run over budget" -> (() => countAndRelease(
-        LabelPropagation.run(e, broadcastStateMaxRows = 7L))))
+        LabelPropagation.run(e, broadcastStateMaxRows = 7L))),
+      // a state that is not the pack's vertex set runs on a renumbered
+      // copy of the shared pack, which the run must release
+      "misaligned Hedonic.run on the shared pack" ->
+        (() => Hedonic.run(e, misaligned, cfgH, Some(pack))._1.count()),
+      "misaligned LabelPropagation.run on the shared pack" -> (() => LabelPropagation.run(e,
+        Some(misaligned.withColumnRenamed("community", "label")), packedOpt = Some(pack)).count()))
     // Leaks are checked per run: several runs persist the same degree
     // plan, and a later run's unpersist would remove an earlier run's
     // leaked entry before a check at the end could see it.
@@ -106,6 +114,71 @@ class SharedPackSpec extends SparkSpec {
     // the session is shared across suites)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"persistent RDDs leaked: $leaked")
+  }
+
+  test("a state that is not the pack's vertex set: same result as own packs and the shuffle path") {
+    val e = edgesOf(pairs)
+    // lacks pack vertex 7, adds isolated vertex 42
+    val init = membersOf((0L to 6L).map(i => (i, i % 3)) :+ ((42L, 42L)))
+    val labels = init.withColumnRenamed("community", "label")
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (ownH, ownMet) = Hedonic.run(e, init, cfg)
+    val (shufH, shufMet) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = 0L))
+    val ownL = toMap(LabelPropagation.run(e, Some(labels)))
+    val shufL = toMap(LabelPropagation.run(e, Some(labels), broadcastStateMaxRows = 0L))
+    val pack = PackedAdjacency.build(GraphOps.symmetrize(e).select("src", "dst"), "src")
+    val (shH, shMet) = Hedonic.run(e, init, cfg, Some(pack))
+    val shL = toMap(LabelPropagation.run(e, Some(labels), packedOpt = Some(pack)))
+    def steps(ms: Seq[graft.model.RunMetrics]) = ms.map(m => (m.superstep, m.moved, m.frontier))
+    assert(toMap(shH).keySet == (0L to 6L).toSet + 42L)
+    assert(toMap(shH) == toMap(ownH))
+    assert(toMap(shH) == toMap(shufH))
+    assert(steps(shMet) == steps(ownMet))
+    assert(steps(shMet) == steps(shufMet))
+    assert(shL.keySet == (0L to 6L).toSet + 42L)
+    assert(shL == ownL)
+    assert(shL == shufL)
+    pack.unpersist()
+  }
+
+  test("calls over a shared hub-free pack submit only their gate and their rounds") {
+    // Adaptive execution off, as it splits each shuffle stage into a job
+    // of its own.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val e = edgesOf(Fixtures.zachary)
+      val pack = PackedAdjacency.build(GraphOps.symmetrize(e).select("src", "dst"), "src")
+      assert(pack.maxSegs == 1 && pack.ids.isDefined)
+      // PageRank: degrees come with the pack, the output frame is lazy
+      for (k <- Seq(1, 4)) {
+        val ((_, iters), jobs) = jobsOf(s"shared-pagerank-$k")(
+          PageRank.runTimed(e, PageRank.Config(fixedIter = Some(k)), packedOpt = Some(pack)))
+        assert(iters.size == k)
+        assert(jobs == k, s"fixedIter=$k")
+      }
+      // default-init LPA: the state is the pack's numbering; maxIter stops
+      // it before convergence
+      for (k <- Seq(1, 3)) {
+        val (_, jobs) = jobsOf(s"shared-lpa-$k")(
+          LabelPropagation.run(e, maxIter = k, packedOpt = Some(pack)))
+        assert(jobs == k, s"maxIter=$k")
+      }
+      // Hedonic at the density alpha: the gate's capped collect, then one
+      // job per superstep — alpha comes off the pack (V, 2E)
+      val init = GraphOps.vertices(e).select(col("id"), col("id").as("community"))
+      val (_, gateJobs) = jobsOf("shared-hedonic-gate")(
+        graft.algo.Superstep.stateGate(init, Hedonic.Config().broadcastStateMaxRows))
+      assert(gateJobs > 0, "listener never saw the gate")
+      val cfg = Hedonic.Config(maxSupersteps = 40)
+      val ((shared, met), jobs) = jobsOf("shared-hedonic")(Hedonic.run(e, init, cfg, Some(pack)))
+      assert(met.nonEmpty && met.last.frontier == 0L)
+      assert(jobs == gateJobs + met.size)
+      val alpha = GraphOps.density(e)
+      assert(toMap(shared) == toMap(Hedonic.run(e, init, cfg.copy(alpha = Some(alpha)))._1))
+      assert(toMap(shared) == toMap(Hedonic.run(e, init, cfg)._1))
+      pack.unpersist()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("weighted hedonic honors a weighted shared pack") {

@@ -55,9 +55,9 @@ class StateGateSpec extends SparkSpec {
   }
 
   test("hub-free own-pack PageRank: three set-up jobs, then one job per iteration") {
-    // Set-up = count the degree table, collect it (ids, degrees and the
-    // pack's degree summary), materialize the reindexed pack; no stats,
-    // segment-join or separate degree-collect job. Adaptive execution off,
+    // Set-up = count the degree table, collect it (ids, degrees, the
+    // pack's numbering and degree summary), materialize the numbered pack;
+    // no stats, segment-join, reindex or separate degree-collect job. Adaptive execution off,
     // as it splits each shuffle stage into a job of its own.
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -179,12 +179,12 @@ class StrategySpec extends SparkSpec {
     assert(b == s)
   }
 
-  // --- dense-index vs hash-probe kernel A/B (PackedAdjacency.reindex) ---
-  // The pack decides the state representation: a hub-free pack
-  // (maxSegs == 1) runs the dense-index kernels (bare values array through
-  // int position arrays), any other the hash kernels (broadcast hash
-  // maps). Both sides run on ONE prebuilt pack p; the hash side gets
-  // p.copy(maxSegs = 2), whose hub branch then selects no rows, so only the
+  // --- dense-index vs hash-probe kernel A/B (numbered vs long-id pack) ---
+  // The pack decides the state representation: a numbered hub-free pack
+  // runs the dense-index kernels (bare values array through int position
+  // arrays), a long-id pack the hash kernels (broadcast hash maps). The
+  // hash side gets the long-id layout of the same graph with
+  // copy(maxSegs = 2), whose hub branch then selects no rows, so only the
   // state representation differs. The shared kernel tails must make every
   // decision — and every per-superstep counter — identical, unweighted
   // and weighted.
@@ -195,18 +195,27 @@ class StrategySpec extends SparkSpec {
       graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted)
   }
 
+  private def hashPackOf(e: org.apache.spark.sql.Dataset[graft.model.Edge],
+                         weighted: Boolean = false): graft.graph.PackedAdj = {
+    val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+    graft.graph.PackedAdjacency.buildLongIds(
+      graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted)
+      .copy(maxSegs = 2)
+  }
+
   test("hedonic: indexed and hash packed kernels decide identically") {
     val e = edgesOf(pairs)
     val init = membersOf(Seq((0L, 5L), (1L, 0L), (2L, 0L), (3L, 1L),
       (4L, 1L), (5L, 0L), (6L, 1L), (7L, 5L)))
     val cfg = Hedonic.Config(maxSupersteps = 40)
     val p = packOf(e)
+    val hp = hashPackOf(e)
     val (mI, metI) = Hedonic.run(e, init, cfg, Some(p))
-    val (mH, metH) = Hedonic.run(e, init, cfg, Some(p.copy(maxSegs = 2)))
+    val (mH, metH) = Hedonic.run(e, init, cfg, Some(hp))
     assert(toMap(mI) == toMap(mH))
     assert(metI.map(m => (m.superstep, m.moved, m.frontier)) ==
       metH.map(m => (m.superstep, m.moved, m.frontier)))
-    p.unpersist()
+    p.unpersist(); hp.unpersist()
   }
 
   test("hedonic: WEIGHTED indexed and hash packed kernels agree") {
@@ -217,23 +226,25 @@ class StrategySpec extends SparkSpec {
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
     val cfg = Hedonic.Config(maxSupersteps = 40, weighted = true)
     val p = packOf(wedges, weighted = true)
+    val hp = hashPackOf(wedges, weighted = true)
     val (mI, _) = Hedonic.run(wedges, init, cfg, Some(p))
-    val (mH, _) = Hedonic.run(wedges, init, cfg, Some(p.copy(maxSegs = 2)))
+    val (mH, _) = Hedonic.run(wedges, init, cfg, Some(hp))
     assert(toMap(mI) == toMap(mH))
-    p.unpersist()
+    p.unpersist(); hp.unpersist()
   }
 
   test("pagerank: indexed (pre-divided) and hash kernels agree bitwise") {
     val e = edgesOf(Fixtures.zachary)
     val cfg = PageRank.Config(fixedIter = Some(20))
     val p = packOf(e)
+    val hp = hashPackOf(e)
     val i = PageRank.runTimed(e, cfg, None, Some(p))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.runTimed(e, cfg, None, Some(p.copy(maxSegs = 2)))._1
+    val h = PageRank.runTimed(e, cfg, None, Some(hp))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // Same divisions, same neighbor order: EXACT equality, not allclose.
     assert(i == h)
-    p.unpersist()
+    p.unpersist(); hp.unpersist()
   }
 
   test("pagerank: WEIGHTED indexed and hash kernels agree bitwise") {
@@ -243,26 +254,29 @@ class StrategySpec extends SparkSpec {
     }.toDS()
     val cfg = PageRank.Config(fixedIter = Some(20), weighted = true)
     val p = packOf(wedges, weighted = true)
+    val hp = hashPackOf(wedges, weighted = true)
     val i = PageRank.runTimed(wedges, cfg, None, Some(p))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.runTimed(wedges, cfg, None, Some(p.copy(maxSegs = 2)))._1
+    val h = PageRank.runTimed(wedges, cfg, None, Some(hp))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(i == h)
-    p.unpersist()
+    p.unpersist(); hp.unpersist()
   }
 
   test("lpa: indexed and hash packed kernels produce identical labels") {
     val e = edgesOf(pairs)
     val p = packOf(e)
+    val hp = hashPackOf(e)
     val i = toMap(LabelPropagation.run(e, packedOpt = Some(p)))
-    val h = toMap(LabelPropagation.run(e, packedOpt = Some(p.copy(maxSegs = 2))))
+    val h = toMap(LabelPropagation.run(e, packedOpt = Some(hp)))
     assert(i == h)
     val pw = packOf(e, weighted = true)
+    val hpw = hashPackOf(e, weighted = true)
     val iw = toMap(LabelPropagation.run(e, weighted = true, packedOpt = Some(pw)))
     val hw = toMap(LabelPropagation.run(e, weighted = true,
-      packedOpt = Some(pw.copy(maxSegs = 2))))
+      packedOpt = Some(hpw)))
     assert(iw == hw)
-    p.unpersist(); pw.unpersist()
+    p.unpersist(); pw.unpersist(); hp.unpersist(); hpw.unpersist()
   }
 
   test("hub packs: multi-round hash-layout runs match the shuffle path") {
@@ -301,10 +315,8 @@ class StrategySpec extends SparkSpec {
       val e = edgesOf(pairs)
       val sc = spark.sparkContext
       val ids = (0L to 7L).toArray
-      val idxB = sc.broadcast(StateMap.longLong(ids, Array.tabulate(8)(_.toLong), 8))
-      val packed = PackedAdjacency.build(
-        GraphOps.symmetrize(e).select("src", "dst"), "src")
-      val pidx = PackedAdjacency.reindex(packed, idxB)
+      val pidx = PackedAdjacency.build(
+        GraphOps.symmetrize(e).select("src", "dst"), "src", numbering = Some(ids))
       val commArrB = new StateMap.Ref(sc.broadcast(ids.clone()))
       val sizeB = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, Array.fill(8)(1L), 8)))
       val hplan = Hedonic.stepPlanPackedIdx(pidx, commArrB, sizeB, 0.25, lit(true))
@@ -314,7 +326,7 @@ class StrategySpec extends SparkSpec {
       assert(spineShuffles(pplan) == 0, pplan.queryExecution.executedPlan.toString)
       val lplan = LabelPropagation.stepPlanPackedIdx(pidx, commArrB, lit(true))
       assert(spineShuffles(lplan) == 0, lplan.queryExecution.executedPlan.toString)
-      pidx.unpersist(); packed.unpersist()
+      pidx.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

@@ -1,0 +1,128 @@
+#!/usr/bin/env python3
+"""Interleaved A/B of the benchmark: a base revision against the working tree.
+
+    python3 tools/ab.py --workload <name> [--pairs 10] [--seed 1] [--base HEAD]
+
+Exports the base revision with `git archive` into a temporary directory and
+runs `perfbench/run.py --trace 0` of each side for `--pairs` pairs on
+consecutive seeds (`--seed`, `--seed`+1, ...), alternating which side runs
+first. Each side builds under its own `CARGO_TARGET_DIR` in that directory,
+so nothing is written to the checkout; the directory is removed at the end.
+
+For every end-to-end metric of BENCHMARK.json it prints the per-run values,
+both medians, the change's wins, the base's quartiles and a verdict:
+`worse than bound` when the change's median is worse than the base's by more
+than the metric's bound, `unchanged` when every pair reads the same,
+`resolved` when the medians differ by more than the base's interquartile
+range, `unresolved` otherwise.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def run_side(checkout, target, workload, seed, seconds):
+    """One benchmark run; its metrics as {name: value}, or None on failure."""
+    env = dict(os.environ, CARGO_TARGET_DIR=str(target))
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    res = subprocess.run(cmd, cwd=checkout, env=env, stdout=subprocess.PIPE,
+                         stderr=subprocess.PIPE, text=True)
+    lines = res.stdout.splitlines()
+    if res.returncode != 0 or not lines or not lines[-1].startswith("{"):
+        tail = "\n".join(res.stderr.splitlines()[-20:])
+        print(f"# run failed: {checkout} seed {seed} exit {res.returncode}\n{tail}",
+              file=sys.stderr)
+        return None
+    return {k: v["value"] for k, v in json.loads(lines[-1])["metrics"].items()}
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def verdict(metric, base, change):
+    lower = metric["better"] == "lower"
+    mb, mc = statistics.median(base), statistics.median(change)
+    worse = (mc - mb) if lower else (mb - mc)
+    if mb != 0 and worse / abs(mb) > metric["bound"]:
+        return "worse than bound"
+    q1, q3 = quartiles(base)
+    if base == change:
+        return "unchanged"
+    if abs(mc - mb) > q3 - q1:
+        return "resolved " + ("better" if worse < 0 else "worse")
+    return "unresolved"
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--base", default="HEAD")
+    a = ap.parse_args()
+    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
+    seconds = bench["run_seconds"]
+
+    scratch = Path(tempfile.mkdtemp(prefix="ab-"))
+    try:
+        base_dir = scratch / "base"
+        base_dir.mkdir()
+        archive = subprocess.run(["git", "archive", a.base], cwd=ROOT, check=True,
+                                 stdout=subprocess.PIPE).stdout
+        subprocess.run(["tar", "-x", "-C", str(base_dir)], input=archive, check=True)
+        sides = {"base": (base_dir, scratch / "base-build"),
+                 "change": (ROOT, scratch / "change-build")}
+        for checkout, target in sides.values():
+            env = dict(os.environ, CARGO_TARGET_DIR=str(target))
+            subprocess.run([sys.executable, "perfbench/build.py"], cwd=checkout, env=env,
+                           check=True, stdout=subprocess.DEVNULL)
+
+        runs = {"base": [], "change": []}
+        for i in range(a.pairs):
+            seed = a.seed + i
+            order = ("base", "change") if i % 2 == 0 else ("change", "base")
+            for side in order:
+                runs[side].append(run_side(*sides[side], a.workload, seed, seconds))
+            print(f"# pair {i + 1}/{a.pairs} seed {seed} done ({order[0]} first)",
+                  file=sys.stderr)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    ok = [i for i in range(a.pairs) if runs["base"][i] and runs["change"][i]]
+    print(f"workload {a.workload}, base {a.base}, seeds {a.seed}..{a.seed + a.pairs - 1}, "
+          f"{len(ok)}/{a.pairs} pairs complete")
+    for metric in bench["end_to_end"]:
+        name = metric["name"]
+        idx = [i for i in ok if name in runs["base"][i] and name in runs["change"][i]]
+        if not idx:
+            continue
+        base = [runs["base"][i][name] for i in idx]
+        change = [runs["change"][i][name] for i in idx]
+        lower = metric["better"] == "lower"
+        wins = sum(1 for b, c in zip(base, change) if (c < b if lower else c > b))
+        q1, q3 = quartiles(base)
+        mb, mc = statistics.median(base), statistics.median(change)
+        rel = (mc - mb) / mb * 100 if mb else 0.0
+        print(f"\n{name} ({metric['unit']}, {metric['better']} is better, bound {metric['bound']})")
+        print("  base:   " + " ".join(f"{v:.4g}" for v in base))
+        print("  change: " + " ".join(f"{v:.4g}" for v in change))
+        print(f"  median {mb:.4g} -> {mc:.4g} ({rel:+.1f}%), change wins {wins}/{len(idx)}, "
+              f"base quartiles {q1:.4g}..{q3:.4g} (IQR {q3 - q1:.4g}): "
+              f"{verdict(metric, base, change)}")
+
+
+if __name__ == "__main__":
+    main()
