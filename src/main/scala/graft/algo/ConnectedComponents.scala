@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Edge
 import graft.graph.GraphOps
 import graft.io.Iterate
+import graft.util.StateMap
 
 /** Connected components — north-rule addition N2. Serial analog in the
   * reference: BFS reachability in scripts/robustness/edges.py:8-28.
@@ -24,6 +25,15 @@ import graft.io.Iterate
   *
   * Labels are canonical: comp = min vertex id of the component, so the
   * "exact up to permutation" bar is met exactly.
+  *
+  * Small inputs skip the loop: an edge table within `maxDriverEdges` is
+  * collected by the StateGate (Superstep.stateGate) — ONE named job that
+  * ships (src, dst) as two primitive arrays — and resolved by a driver
+  * union-find. Each of the job's P tasks reads at most about
+  * maxDriverEdges / P rows, so an over-budget table is decided from the
+  * capped counts with no second job (rows ship only from partitions within
+  * their share); the driver never holds more than maxDriverEdges + 1 + P
+  * pairs.
   */
 object ConnectedComponents {
 
@@ -71,15 +81,20 @@ object ConnectedComponents {
     // exchanges + pin + convergence check, x O(log^2 V) rounds) dwarfs
     // the actual work on small inputs — dedupSurvivors' pair graphs and
     // Leiden.refine's intra-community slices are tiny by construction at
-    // any corpus scale. The capped collect (Superstep.stateGate) keeps an
-    // over-budget table off the driver; larger inputs
+    // any corpus scale. The gate (Superstep.stateGate) is one named job
+    // that ships the (src, dst) pairs as two primitive arrays; each task
+    // reads at most about budget / P rows, so an over-budget table is
+    // proven so from the capped counts with no second job. Partitions
+    // within their share have shipped their rows by then (none ship only
+    // when every partition overflows); the driver holds at most
+    // budget + 1 + P pairs in any case. Larger inputs
     // run the large/small-star loop below unchanged, so the 100 TB path
     // is exactly the code it was. Labels are identical by construction:
     // union-by-minimum keeps every union-find root the component minimum,
     // the same canonical comp = min(component) the star loop converges
     // to (AlgoSpec pins both paths against runNaive).
     Superstep.stateGate(edges.select(col("src"), col("dst")), maxDriverEdges) match {
-      case Some(rows) => return runDriver(edges.sparkSession, rows)
+      case Some(pairs) => return runDriver(edges.sparkSession, pairs.longs(0), pairs.longs(1))
       case None =>
     }
     // Per round: pin + cache-count (pinCount, InternalRow cache — no
@@ -122,42 +137,38 @@ object ConnectedComponents {
   }
 
   /** Driver-side union-find over a budget-bounded pair collect (the small
-    * branch of run()'s strategy split). Union-by-minimum: merging roots
-    * attaches the larger to the smaller, so every root stays its
+    * branch of run()'s strategy split). Vertices get dense positions
+    * (StateMap.Numbering) and the parent table is an int array over them,
+    * so no value is boxed. Union-by-minimum: merging roots attaches the
+    * one with the larger id to the smaller, so every root stays its
     * component's minimum id and find(v) is exactly the star loop's
-    * canonical comp label; path compression keeps it near-linear. */
+    * canonical comp label; path halving keeps it near-linear. */
   private def runDriver(spark: org.apache.spark.sql.SparkSession,
-                        rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val parent = new scala.collection.mutable.LongMap[Long](rows.length * 2)
-    def find(x0: Long): Long = {
+                        src: Array[Long], dst: Array[Long]): DataFrame = {
+    val num = new StateMap.Numbering
+    var parent = Array.tabulate(64)(identity) // unnumbered positions are roots
+    def find(x0: Int): Int = {
       var x = x0
-      while (parent.getOrElse(x, x) != x) {
-        val p = parent(x)
-        val gp = parent.getOrElse(p, p)
-        parent(x) = gp // compression
-        x = gp
-      }
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
     var i = 0
-    while (i < rows.length) {
-      val a = rows(i).getLong(0); val b = rows(i).getLong(1)
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    while (i < src.length) {
+      val a = num(src(i))
+      val b = num(dst(i))
+      if (num.size > parent.length) {
+        val old = parent.length
+        parent = java.util.Arrays.copyOf(parent, 2 * old)
+        var j = old
+        while (j < parent.length) { parent(j) = j; j += 1 }
       }
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) { if (num.id(ra) < num.id(rb)) parent(rb) = ra else parent(ra) = rb }
       i += 1
     }
-    val n = parent.size
-    val ids = new Array[Long](n)
-    val comps = new Array[Long](n)
-    var j = 0
-    parent.foreachKey { v => ids(j) = v; j += 1 }
-    j = 0
-    while (j < n) { comps(j) = find(ids(j)); j += 1 }
-    Superstep.frame(spark, ids, "comp", comps)
+    val ids = num.ids
+    Superstep.frame(spark, ids, "comp", Array.tabulate(ids.length)(j => ids(find(j))))
   }
 
   /** Naive min-label propagation — O(diameter) supersteps; the in-repo

@@ -516,7 +516,7 @@ object Hedonic {
     // ONE materialization decides the strategy AND (when within budget)
     // already IS the driver-state collect (Superstep.stateGate).
     Superstep.stateGate(startMembers.select("id", "community"), cfg.broadcastStateMaxRows) match {
-      case Some(rows) =>
+      case Some(cols) =>
         packedOpt.foreach(p => require(p.weighted == cfg.weighted,
           s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}"))
         // ONE-superstep fast path (round 6): a single superstep never
@@ -533,7 +533,7 @@ object Hedonic {
         // build-time shuffle, then V-row supersteps — see PackedAdjacency /
         // stepPlanPacked).
         // An own pack is numbered by the state: position i is ids(i).
-        val ids = Superstep.longs(rows, 0)
+        val ids = cols.longs(0)
         val packed =
           if (oneShot) None
           else Some(packedOpt.getOrElse {
@@ -545,7 +545,7 @@ object Hedonic {
               degrees = degrees, numbering = Some(ids))
           })
         val edgeCount = packed.fold(degrees.getOrElse(GraphOps.degreeSummary(edges)).degSum)(_.degSum)
-        return runDriverState(edges, packed, ids, Superstep.longs(rows, 1), startStep, a,
+        return runDriverState(edges, packed, ids, cols.longs(1), startStep, a,
           edgeCount, cfg, ckpt, ownsPack = packedOpt.isEmpty)
       case None =>
     }

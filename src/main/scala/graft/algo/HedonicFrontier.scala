@@ -45,15 +45,15 @@ object HedonicFrontier {
       // one capped materialization = strategy decision + driver-state
       // collect (Superstep.stateGate)
       Superstep.stateGate(init.select("id", "community"), cfg.broadcastStateMaxRows) match {
-        case Some(rows) =>
+        case Some(cols) =>
           // numbered by the state, so the run scans the pack as it is
-          val ids = Superstep.longs(rows, 0)
+          val ids = cols.longs(0)
           val packed = graft.graph.PackedAdjacency.build(
             GraphOps.symmetrize(edges).select("src", "dst"), "src",
             partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
             numbering = Some(ids))
           if (packed.maxSegs == 1)
-            return runDriverState(edges, packed, ids, Superstep.longs(rows, 1), a, cfg)
+            return runDriverState(edges, packed, ids, cols.longs(1), a, cfg)
           packed.unpersist() // hub graph: fall through to the shuffle loop
         case None =>
       }

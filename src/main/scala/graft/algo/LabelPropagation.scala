@@ -92,9 +92,8 @@ object LabelPropagation {
       case (None, Some(ids)) =>
         Option.when(Superstep.fits(ids.length, broadcastStateMaxRows))((ids, ids.clone(), None))
       case _ =>
-        Superstep.stateGate(state, broadcastStateMaxRows, known).map { rows =>
-          (Superstep.longs(rows, 0), Superstep.longs(rows, 1),
-            degAgg.map(_ => Superstep.longs(rows, 2)))
+        Superstep.stateGate(state, broadcastStateMaxRows, known).map { cols =>
+          (cols.longs(0), cols.longs(1), degAgg.map(_ => cols.longs(2)))
         }
     }
     inHand match {
@@ -158,9 +157,9 @@ object LabelPropagation {
   def bestLabels(sym: DataFrame, labels: DataFrame, weighted: Boolean = false,
                  broadcastStateMaxRows: Long = 4000000L): DataFrame =
     Superstep.stateGate(labels.select("id", "label"), broadcastStateMaxRows) match {
-      case Some(rows) =>
-        runDriverState(labels.sparkSession, Left(sym), Superstep.longs(rows, 0),
-          Superstep.longs(rows, 1), maxIter = 1, parityGating = false, weighted,
+      case Some(cols) =>
+        runDriverState(labels.sparkSession, Left(sym), cols.longs(0),
+          cols.longs(1), maxIter = 1, parityGating = false, weighted,
           ownsPack = false, "bestLabel")
       case None => step(sym, labels, weighted).select(col("id"), col("bestLabel"))
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Edge
 import graft.graph.GraphOps
 import graft.io.Iterate
+import graft.util.Columns
 
 /** PageRank over the (undirected, symmetrized) co-occurrence graph —
   * north-rule addition N1 (SURVEY.md §2.9); no direct reference
@@ -109,14 +110,14 @@ object PageRank {
             symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))).persist()
         val v = degAgg.count()
         val out = Superstep.stateGate(degAgg, cfg.broadcastStateMaxRows, Some(v)) match {
-          case Some(rows) =>
-            val ids = Superstep.longs(rows, 0)
-            val d = Superstep.longs(rows, 1)
+          case Some(cols) =>
+            val ids = cols.longs(0)
+            val d = cols.longs(1)
             val packed = graft.graph.PackedAdjacency.build(symDf, "dst", cfg.weighted,
               partitions = cfg.packPartitions, cachePartitions = cfg.cachePartitions,
               degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))),
               degrees = Some(graft.graph.DegreeSummary.of(d)), numbering = Some(ids))
-            val degs = if (cfg.weighted) Superstep.doubles(rows, 2) else d.map(_.toDouble)
+            val degs = if (cfg.weighted) cols.doubles(2) else d.map(_.toDouble)
             runDriverState(spark, packed, ids, degs, v.toDouble, cfg, ownsPack = true)
           case None =>
             // over-budget V: co-partitioned shuffle path, no dangling (min deg 1)
@@ -137,13 +138,12 @@ object PageRank {
         val (ids, degs) = (p.ids, p.deg) match {
           case (Some(ids), Some(d)) if !cfg.weighted => (ids, d.map(_.toDouble))
           case _ =>
-            val vd = (if (cfg.weighted)
+            val vd = Columns.of(if (cfg.weighted)
                 p.df.groupBy(col("id")).agg(
                   sum(aggregate(col("wts"), lit(0.0), (acc, x) => acc + x)).as("deg"))
               else
                 p.df.groupBy(col("id")).agg(sum(size(col("nbrs"))).cast("double").as("deg")))
-              .collect()
-            (Superstep.longs(vd, 0), Superstep.doubles(vd, 1))
+            (vd.longs(0), vd.doubles(1))
         }
         runDriverState(spark, p, ids, degs, p.vertices.toDouble, cfg, ownsPack = false)
       case _ =>

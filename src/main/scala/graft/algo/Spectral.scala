@@ -177,17 +177,17 @@ object Spectral {
     Superstep.stateGate(degAgg.select(col("id"), col("d"),
         Portable.uniformSym(Portable.key(lit("sp"), col("id"))).as("x")),
         broadcastStateMaxRows, Some(nL)) match {
-      case Some(rows) =>
-        val d = Superstep.longs(rows, 1)
+      case Some(cols) =>
+        val d = cols.longs(1)
         val packed = graft.graph.PackedAdjacency.build(symDf, "dst",
           degOpt = Some(degAgg.select(col("id").as("dst"), col("d"))),
           degrees = Some(graft.graph.DegreeSummary.of(d)),
-          numbering = Some(Superstep.longs(rows, 0)))
+          numbering = Some(cols.longs(0)))
         if (packed.maxSegs == 1) {
           val run = new Superstep.Run(spark, packed.ids.get, Some(packed), ownsPack = true)
           val n = run.n
           val degs = d.map(_.toDouble)
-          var x = Superstep.doubles(rows, 2)
+          var x = cols.doubles(2)
           var m2 = 0.0
           var dmax = 0.0
           var i = 0

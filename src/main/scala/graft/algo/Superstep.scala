@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import graft.graph.{PackedAdj, PackedAdjacency}
-import graft.util.{DeltaState, Portable, StateMap}
+import graft.util.{Columns, DeltaState, Portable, StateMap}
 
 /** The driver-state superstep engine shared by every broadcast-state loop
   * (Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral) and by
@@ -22,15 +22,28 @@ import graft.util.{DeltaState, Portable, StateMap}
   * change something. Each algorithm supplies its kernel plan, its merge
   * rule and its own bookkeeping; this object owns the rest:
   *
-  *  - StateGate (`stateGate` / `fits`): one capped collect decides the
-  *    strategy AND already is the driver-state collect. The cap is clamped
-  *    to `Int.MaxValue - 2` (collect arrays are int-indexed) and the
-  *    collected length is compared against that CLAMPED cap, so a
-  *    truncated collect is never taken for a complete one. A budget <= 0
-  *    means "over budget" without running a job — the forced-shuffle
-  *    setting. A caller that already counted the state (a persisted
-  *    degree table) passes the count: over budget is then decided with
-  *    no job, within budget the collect is exact.
+  *  - StateGate (`stateGate` / `fits`): one named job decides the
+  *    strategy AND already is the driver-state collect, shipping one
+  *    primitive array per column (graft.util.Columns, the primitive
+  *    collect) — no `limit` plan, no SQL action, no boxed Row. The cap
+  *    is clamped to `Int.MaxValue - 2` (driver arrays are int-indexed)
+  *    and compared against that CLAMPED cap, so a truncated read is never
+  *    taken for a complete one. A
+  *    budget <= 0 means "over budget" without running a job — the
+  *    forced-shuffle setting. A caller that already counted the state (a
+  *    persisted degree table) passes the count: over budget is then
+  *    decided with no job, within budget the collect is exact and a row
+  *    count that disagrees throws. With no count, each task reads at most
+  *    about cap / P rows and ships them only if its partition held no
+  *    more; it always ships its count. Capped counts past the cap decide
+  *    "over budget" with no second job, however large the input; the
+  *    rows of partitions that did not overflow have shipped by then, so
+  *    no rows ship only when every partition overflows. When a partition
+  *    overflowed while the counts fit, a counts-only job and then one
+  *    shipping job read the overflowed partitions again. The driver holds
+  *    at most cap + 1 + P rows, and no task reads more than cap + 1.
+  *    `Columns.of` is the same job without a cap, for the other
+  *    driver-side collects (the pack's numbering, degree summaries).
   *  - State layout (`Run`): a hub-free pack is numbered by its build
   *    (PackedAdjacency), so a round's state is a bare primitive array
   *    indexed by pack position. A state whose id set IS the numbering's
@@ -87,32 +100,53 @@ object Superstep {
   private[graft] def fits(collected: Long, budget: Long): Boolean =
     budget > 0 && collected <= math.min(budget, Int.MaxValue - 2L)
 
-  /** StateGate: the state's rows when they fit `budget`, else None. With
-    * no count in hand that is one capped collect (none when the budget is
-    * <= 0); with `known` = the state's row count, over budget runs no job
-    * and within budget is one exact collect. */
-  def stateGate(state: DataFrame, budget: Long, known: Option[Long] = None): Option[Array[Row]] =
-    known match {
-      case Some(n) => if (fits(n, budget)) Some(state.collect()) else None
-      case None if budget <= 0 => None
-      case None =>
-        val cap = math.min(budget, Int.MaxValue - 2L).toInt
-        val rows = state.limit(cap + 1).collect()
-        if (fits(rows.length, budget)) Some(rows) else None
+  /** StateGate: the state's rows when they fit `budget`, else None (see
+    * the object doc). With no count in hand, task p reads at most
+    * share + 1 rows, share = ceil((cap + 1) / P), and ships them only if
+    * it read at most `share`; it always ships its count. */
+  def stateGate(state: DataFrame, budget: Long, known: Option[Long] = None): Option[Columns] =
+    if (budget <= 0 || known.exists(!fits(_, budget))) None
+    else {
+      val src = new Columns.Source(state)
+      known match {
+        case Some(n) =>
+          val bs = src.take(src.all, n.toInt + 1, n.toInt)
+          val got = bs.map(_.count.toLong).sum
+          if (got != n) throw new IllegalStateException(
+            s"state gate: the state read ${if (got > n) "at least " else ""}$got rows, " +
+              s"its count in hand is $n")
+          Some(src.columns(bs))
+        case None =>
+          val cap = math.min(budget, Int.MaxValue - 2L).toInt
+          val p = src.all.size
+          val share = ((cap + 1L + p - 1) / math.max(p, 1)).toInt
+          val first = src.take(src.all, share + 1, share)
+          if (first.map(_.count.toLong).sum > cap) None
+          else if (first.forall(_.shipped)) Some(src.columns(first))
+          else overflow(src, first, cap, share)
+      }
     }
 
-  def longs(rows: Array[Row], c: Int): Array[Long] = {
-    val a = new Array[Long](rows.length)
-    var i = 0
-    while (i < a.length) { a(i) = rows(i).getLong(c); i += 1 }
-    a
-  }
-
-  def doubles(rows: Array[Row], c: Int): Array[Double] = {
-    val a = new Array[Double](rows.length)
-    var i = 0
-    while (i < a.length) { a(i) = rows(i).getDouble(c); i += 1 }
-    a
+  /** The gate's last step: `first` (one batch per partition) fits the cap,
+    * but some partitions held more than `share` rows and shipped none.
+    * Within the remaining budget `rem` each of those k partitions holds at
+    * most `most` = rem - (k - 1)(share + 1) rows, since the others hold
+    * more than `share` each. A counts-only job reads at most most + 1 rows
+    * of each; when the counts fit `rem`, one more job ships them all. */
+  private def overflow(src: Columns.Source, first: Array[Columns.Batch], cap: Int,
+                       share: Int): Option[Columns] = {
+    val over = first.indices.filterNot(first(_).shipped)
+    val rem = cap - first.filter(_.shipped).map(_.count).sum
+    val most = rem - (over.size - 1) * (share + 1)
+    val counts = src.take(over, most + 1, 0).map(_.count)
+    if (counts.exists(_ > most) || counts.map(_.toLong).sum > rem) return None
+    val rows = src.take(over, most + 1, most)
+    if (!(rows.map(_.count) sameElements counts)) throw new IllegalStateException(
+      s"state gate: partitions ${over.mkString(",")} read ${counts.mkString(",")} rows, " +
+        s"then ${rows.map(_.count).mkString(",")}")
+    val byPart = first.clone()
+    over.indices.foreach(j => byPart(over(j)) = rows(j))
+    Some(src.columns(byPart))
   }
 
   /** (key, value) frame over the driver arrays (see the object doc). */

@@ -113,12 +113,8 @@ object GraphOps {
 
   /** V, 2E and the max degree of the symmetrized edges in one job — the
     * degree summary PackedAdjacency.build takes in place of its own. */
-  def degreeSummary(edges: Dataset[Edge]): DegreeSummary = {
-    val row = symmetrize(edges).groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)), coalesce(max(col("d")), lit(0L)))
-      .collect()(0)
-    DegreeSummary(row.getLong(0), row.getLong(1), row.getLong(2))
-  }
+  def degreeSummary(edges: Dataset[Edge]): DegreeSummary =
+    DegreeSummary.of(symmetrize(edges).groupBy(col("src")).agg(count(lit(1)).as("d")))
 
   /** Graph density 2E/(V(V-1)) — the reference's default resolution alpha
     * (hedonic/__init__.py:78,215; scripts/experiment.py:76). Driver-side

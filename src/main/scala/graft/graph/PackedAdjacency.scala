@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.util.StateMap
+import graft.util.{Columns, StateMap}
 
 /** CSR-packed adjacency cache (see PackedAdjacency.build). Two layouts:
   *  - numbered (`ids` defined; every hub-free build): one row per vertex,
@@ -40,6 +40,13 @@ object DegreeSummary {
     var i = 0
     while (i < degrees.length) { sum += degrees(i); mx = math.max(mx, degrees(i)); i += 1 }
     DegreeSummary(degrees.length, sum, mx)
+  }
+
+  /** The summary of a per-vertex degree table (column "d"), in one job. */
+  def of(degAgg: DataFrame): DegreeSummary = {
+    val c = Columns.of(degAgg.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)),
+      coalesce(max(col("d")), lit(0L))))
+    DegreeSummary(c.longs(0)(0), c.longs(1)(0), c.longs(2)(0))
   }
 }
 
@@ -179,14 +186,11 @@ object PackedAdjacency {
     // is its numbering, its degrees and its summary at once.
     val own = Option.when(
         numbered && numbering.isEmpty && degrees.forall(s => segsOf(s.maxDeg) == 1)) {
-      val rows = degAgg.select(col(key), col("d")).collect()
-      (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+      val c = Columns.of(degAgg.select(col(key), col("d")))
+      (c.longs(0), c.longs(1))
     }
-    val st = degrees.orElse(own.map(o => DegreeSummary.of(o._2))).getOrElse {
-      val r = degAgg.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)),
-        coalesce(max(col("d")), lit(0L))).collect()(0)
-      DegreeSummary(r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+    val st = degrees.orElse(own.map(o => DegreeSummary.of(o._2)))
+      .getOrElse(DegreeSummary.of(degAgg))
     val maxSegs = segsOf(st.maxDeg)
     val ids = if (numbered && maxSegs == 1) numbering.orElse(own.map(_._1)) else None
     val (input, segs) =

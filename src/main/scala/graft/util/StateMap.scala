@@ -148,6 +148,42 @@ object StateMap {
     longLong(ids, vs, j)
   }
 
+  /** Dense positions of long ids in first-seen order: `apply` returns an
+    * id's position, numbering it if unseen. Open addressing over a
+    * position table that doubles at half load; keys are read back from
+    * the id array, so every long is a valid id. */
+  final class Numbering {
+    private var keys = new Array[Long](16)
+    private var at = Array.fill(64)(-1)
+    private var n = 0
+
+    def size: Int = n
+    def id(p: Int): Long = keys(p)
+    def ids: Array[Long] = java.util.Arrays.copyOf(keys, n)
+
+    private def slot(k: Long): Int = {
+      val mask = at.length - 1
+      var i = (mix(k) & mask).toInt
+      while (at(i) >= 0 && keys(at(i)) != k) i = (i + 1) & mask
+      i
+    }
+
+    def apply(k: Long): Int = {
+      val s = slot(k)
+      if (at(s) >= 0) at(s)
+      else {
+        if (n == keys.length) keys = java.util.Arrays.copyOf(keys, n * 2)
+        keys(n) = k; at(s) = n; n += 1
+        if (2 * n > at.length) {
+          at = Array.fill(at.length * 2)(-1)
+          var p = 0
+          while (p < n) { at(slot(keys(p))) = p; p += 1 }
+        }
+        n - 1
+      }
+    }
+  }
+
   private[graft] val refCls = classOf[Ref[_]].getName
 
   /** NULL when the key is absent or the child is null — mirrors the row

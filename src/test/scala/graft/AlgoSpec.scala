@@ -253,6 +253,20 @@ class PageRankSpec extends SparkSpec {
     // 33 and 0 are the two hubs of the karate club.
     assert(top.take(2).toSet == Set(33L, 0L))
   }
+
+  test("topK plans a bounded top-k, not a global sort") {
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    val e = edgesOf(Fixtures.zachary)
+    val ranks = PageRank.run(e, PageRank.Config(fixedIter = Some(10)))
+    val top = PageRank.topK(ranks, 5)
+    // the physical plan before adaptive execution wraps it
+    val plan = top.queryExecution.sparkPlan
+    assert(plan.collect { case t: TakeOrderedAndProjectExec => t }.size == 1, plan.toString)
+    assert(plan.collect { case s: SortExec if s.global => s }.isEmpty, plan.toString)
+    val sorted = ranks.collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .sortBy { case (id, r) => (-r, id) }.take(5).map(_._1).toSeq
+    assert(top.collect().map(_.getLong(0)).toSeq == sorted)
+  }
 }
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -268,9 +282,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     for (g <- Seq(chain, Fixtures.zachary)) {
       val e = edgesOf(g)
       val naive = toMap(ConnectedComponents.runNaive(e))
-      // default budget -> driver union-find; budget 0 -> large/small-star
+      // default budget -> driver union-find; budget 0 (no gate job) and a
+      // budget below the edge count (a gate that ships no rows) ->
+      // large/small-star
       assert(toMap(ConnectedComponents.run(e)) == naive)
       assert(toMap(ConnectedComponents.run(e, maxDriverEdges = 0L)) == naive)
+      assert(toMap(ConnectedComponents.run(e, maxDriverEdges = 3L)) == naive)
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
-import graft.algo.{Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral}
+import graft.algo.{ConnectedComponents, Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral}
 import graft.graph.{GraphOps, PackedAdjacency}
 
 /** Pack-once, run-many: a caller-built CSR pack of the symmetrized edges is
@@ -85,6 +85,11 @@ class SharedPackSpec extends SparkSpec {
       "LabelPropagation.run" -> (() => countAndRelease(LabelPropagation.run(e))),
       "LabelPropagation.run over budget" -> (() => countAndRelease(
         LabelPropagation.run(e, broadcastStateMaxRows = 7L))),
+      // CC: the driver union-find, and the star loop after a gate that
+      // proved the 9 edges over a budget of 3
+      "ConnectedComponents.run" -> (() => countAndRelease(ConnectedComponents.run(e))),
+      "ConnectedComponents.run over budget" -> (() => countAndRelease(
+        ConnectedComponents.run(e, maxDriverEdges = 3L))),
       // a state that is not the pack's vertex set runs on a renumbered
       // copy of the shared pack, which the run must release
       "misaligned Hedonic.run on the shared pack" ->

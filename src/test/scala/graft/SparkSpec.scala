@@ -1,7 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,12 +48,32 @@ trait SparkSpec extends AnyFunSuite {
     * by job group; a sentinel job submitted afterwards proves every
     * earlier job-start event has reached the listener). */
   def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val (out, bytes) = resultBytesOf(group)(body)
+    (out, bytes.size)
+  }
+
+  /** `body`'s result and, per Spark job it submitted (in submission
+    * order), the bytes its tasks shipped back to the driver. */
+  def resultBytesOf[T](group: String)(body: => T): (T, Seq[Long]) = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]()
+    val jobOfStage = new ConcurrentHashMap[Int, Int]()
+    val bytes = new ConcurrentHashMap[Int, Long]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+        groups.add(g)
+        if (g == group) {
+          bytes.put(j.jobId, 0L)
+          j.stageIds.foreach(jobOfStage.put(_, j.jobId))
+        }
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (jobOfStage.containsKey(t.stageId) && t.taskMetrics != null) {
+          val job = jobOfStage.get(t.stageId)
+          bytes.put(job, bytes.get(job) + t.taskMetrics.resultSize)
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -65,11 +86,19 @@ trait SparkSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30000000000L
       while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains(sentinel), "listener never saw the sentinel job")
-      (out, groups.toArray.count(_ == group))
+      (out, bytes.keySet.asScala.toSeq.sorted.map(bytes.get(_)))
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
+  }
+
+  /** `body` with adaptive execution off, as it splits each shuffle stage
+    * into a job of its own. */
+  def withoutAqe[T](body: => T): T = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   /** Two labelings equal up to label permutation (must be a bijection). */

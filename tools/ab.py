@@ -2,6 +2,7 @@
 """Interleaved A/B of the benchmark: a base revision against the working tree.
 
     python3 tools/ab.py --workload <name> [--pairs 10] [--seed 1] [--base HEAD]
+                        [--drift <metric>] [--changes]
 
 Exports the base revision with `git archive` into a temporary directory and
 runs `perfbench/run.py --trace 0` of each side for `--pairs` pairs on
@@ -15,6 +16,12 @@ both medians, the change's wins, the base's quartiles and a verdict:
 than the metric's bound, `unchanged` when every pair reads the same,
 `resolved` when the medians differ by more than the base's interquartile
 range, `unresolved` otherwise.
+
+`--drift <metric>` names a metric the change does not touch. Its per-pair
+change/base ratios and their median are the drift index: how far the host's
+speed moved between the two runs of a pair, apart from the change.
+`--changes` prints, last, one paragraph for CHANGES.md with every metric's
+medians, wins, base IQR and verdict, and the drift index.
 """
 import argparse
 import json
@@ -72,6 +79,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--base", default="HEAD")
+    ap.add_argument("--drift", help="a metric the change does not touch (drift index)")
+    ap.add_argument("--changes", action="store_true", help="print a CHANGES.md fragment")
     a = ap.parse_args()
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     seconds = bench["run_seconds"]
@@ -102,8 +111,9 @@ def main():
         shutil.rmtree(scratch, ignore_errors=True)
 
     ok = [i for i in range(a.pairs) if runs["base"][i] and runs["change"][i]]
-    print(f"workload {a.workload}, base {a.base}, seeds {a.seed}..{a.seed + a.pairs - 1}, "
-          f"{len(ok)}/{a.pairs} pairs complete")
+    seeds = f"seeds {a.seed}..{a.seed + a.pairs - 1}"
+    print(f"workload {a.workload}, base {a.base}, {seeds}, {len(ok)}/{a.pairs} pairs complete")
+    summaries = []
     for metric in bench["end_to_end"]:
         name = metric["name"]
         idx = [i for i in ok if name in runs["base"][i] and name in runs["change"][i]]
@@ -116,12 +126,31 @@ def main():
         q1, q3 = quartiles(base)
         mb, mc = statistics.median(base), statistics.median(change)
         rel = (mc - mb) / mb * 100 if mb else 0.0
+        v = verdict(metric, base, change)
+        summaries.append((name, mb, mc, rel, wins, len(idx), q3 - q1, v))
         print(f"\n{name} ({metric['unit']}, {metric['better']} is better, bound {metric['bound']})")
-        print("  base:   " + " ".join(f"{v:.4g}" for v in base))
-        print("  change: " + " ".join(f"{v:.4g}" for v in change))
+        print("  base:   " + " ".join(f"{x:.4g}" for x in base))
+        print("  change: " + " ".join(f"{x:.4g}" for x in change))
         print(f"  median {mb:.4g} -> {mc:.4g} ({rel:+.1f}%), change wins {wins}/{len(idx)}, "
-              f"base quartiles {q1:.4g}..{q3:.4g} (IQR {q3 - q1:.4g}): "
-              f"{verdict(metric, base, change)}")
+              f"base quartiles {q1:.4g}..{q3:.4g} (IQR {q3 - q1:.4g}): {v}")
+
+    drift = None
+    if a.drift:
+        idx = [i for i in ok if runs["base"][i].get(a.drift) and a.drift in runs["change"][i]]
+        ratios = [runs["change"][i][a.drift] / runs["base"][i][a.drift] for i in idx]
+        if ratios:
+            drift = statistics.median(ratios)
+            print(f"\ndrift index ({a.drift}, change/base per pair): "
+                  + " ".join(f"{r:.3f}" for r in ratios) + f"; median {drift:.3f}")
+        else:
+            print(f"\ndrift index: no pair reports {a.drift}")
+
+    if a.changes:
+        parts = [f"{n} {mb:.4g} -> {mc:.4g} ({rel:+.1f}%, {w}/{k} wins, base IQR {iqr:.3g}, {v})"
+                 for n, mb, mc, rel, w, k, iqr, v in summaries]
+        tail = f"; drift index ({a.drift}) median {drift:.3f}" if drift is not None else ""
+        print(f"\n{a.workload} A/B, {len(ok)}/{a.pairs} interleaved pairs, {seeds}, "
+              f"base {a.base}, medians base -> change: " + "; ".join(parts) + tail + ".")
 
 
 if __name__ == "__main__":
