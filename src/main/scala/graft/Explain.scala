@@ -54,11 +54,13 @@ object Explain {
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
 
-    // The CSR-packed broadcast-state superstep plans (round 3): the whole
-    // superstep is InMemoryTableScan -> Project(kernel) -> Filter ->
-    // Project inside ONE WholeStageCodegen span — no aggregate, no
-    // exchange, no join. These are what Hedonic/PageRank/LPA.run execute
-    // per round on the broadcast-state strategy.
+    // The CSR-packed broadcast-state superstep plans that Hedonic/PageRank/
+    // LPA.run execute per round. Over a hub-free pack (the indexed and delta
+    // shapes) the whole superstep is InMemoryTableScan -> Project(kernel) ->
+    // Filter -> Project inside ONE WholeStageCodegen span — no aggregate, no
+    // exchange, no join. A hub pack (segCap = 2 splits the degree-3 vertex)
+    // adds the hub branch: per-segment partials -> (myIdx, key) aggregate ->
+    // the shared decide tail, unioned with the single-segment rows.
     {
       import org.apache.spark.sql.functions._
       import spark.implicits._
@@ -66,34 +68,27 @@ object Explain {
       val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L))
         .map { case (a, b) => graft.model.Edge(a, b, 1.0) }.toDS()
       val symDf = graft.graph.GraphOps.symmetrize(edges).select("src", "dst")
-      val packed = graft.graph.PackedAdjacency.buildLongIds(symDf, "src")
       val ids = (0L to 3L).toArray
       val sc = spark.sparkContext
-      val commR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, ids, 4)))
-      val sizeR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, Array.fill(4)(1L), 4)))
-      val rankR = new StateMap.Ref(sc.broadcast(StateMap.longDouble(ids, Array.fill(4)(0.25), 4)))
-      val degR = new StateMap.Ref(sc.broadcast(StateMap.longDouble(ids, Array.fill(4)(2.0), 4)))
-      val shapes = Seq(
-        "packed_hedonic_superstep" ->
-          graft.algo.Hedonic.stepPlanPacked(packed, commR, sizeR, 0.1,
-            graft.util.Portable.parityGate(col("id"), 0)),
-        "packed_pagerank_iteration" ->
-          graft.algo.PageRank.iterPlanPacked(packed, rankR, degR, 4.0,
-            graft.algo.PageRank.Config()),
-        "packed_lpa_step" ->
-          graft.algo.LabelPropagation.stepPlanPacked(packed, commR, lit(true)))
-      // Round-4 dense-index twins (the production path on hub-free
-      // graphs): same single-span shape, but state enters as bare
-      // primitive arrays read through int position arrays.
+      val hub = graft.graph.PackedAdjacency.build(symDf, "src", segCap = 2)
       val pidx = graft.graph.PackedAdjacency.build(symDf, "src", numbering = Some(ids))
       val run = new graft.algo.Superstep.Run(spark, ids, Some(pidx))
+      val sizeR = new StateMap.Ref(sc.broadcast(StateMap.longLong(ids, Array.fill(4)(1L), 4)))
       val commArrR = new StateMap.Ref(sc.broadcast(ids.clone()))
       val qR = new StateMap.Ref(sc.broadcast(Array.fill(4)(0.125)))
-      // Round-5 delta-transport twin (the production per-round plan after
-      // the envelope fix): identical single-span shape; state enters as a
-      // DeltaState.Payload resolved once per task.
+      // The delta transport: state enters as a DeltaState.Payload resolved
+      // once per task.
       run.delta.publish(0, ids, scala.collection.mutable.LongMap(ids.map(_ -> 1L): _*))
       val dState = run.delta.ref
+      val shapes = Seq(
+        "packed_hedonic_superstep" ->
+          graft.algo.Hedonic.stepPlanPackedIdxDelta(hub, dState, 0.1,
+            graft.util.Portable.parityGate(col("id"), 0)),
+        "packed_pagerank_iteration" ->
+          graft.algo.PageRank.iterPlanPackedIdx(hub, qR, None, 4.0,
+            graft.algo.PageRank.Config()),
+        "packed_lpa_step" ->
+          graft.algo.LabelPropagation.stepPlanPackedIdxDelta(hub, dState, lit(true)))
       val idxShapes = Seq(
         "indexed_hedonic_superstep" ->
           graft.algo.Hedonic.stepPlanPackedIdx(pidx, commArrR, sizeR, 0.1,
@@ -104,12 +99,12 @@ object Explain {
         "indexed_pagerank_iteration" ->
           graft.algo.PageRank.iterPlanPackedIdx(pidx, qR, None, 4.0,
             graft.algo.PageRank.Config()),
-        "indexed_lpa_step" ->
-          graft.algo.LabelPropagation.stepPlanPackedIdx(pidx, commArrR, lit(true)))
+        "delta_lpa_step" ->
+          graft.algo.LabelPropagation.stepPlanPackedIdxDelta(pidx, dState, lit(true)))
       shapes.foreach { case (name, df) =>
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name (broadcast-state strategy, per-round plan)\n\n```\n$plan```\n")
+        sb.append(s"\n## $name (hub pack, segCap = 2, per-round plan)\n\n```\n$plan```\n")
       }
       idxShapes.foreach { case (name, df) =>
         val plan = df.queryExecution.explainString(
@@ -117,7 +112,7 @@ object Explain {
         sb.append(s"\n## $name (dense-index strategy, per-round plan)\n\n```\n$plan```\n")
       }
       run.close()
-      pidx.unpersist(); packed.unpersist()
+      pidx.unpersist(); hub.unpersist()
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

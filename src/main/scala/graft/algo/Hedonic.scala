@@ -48,11 +48,11 @@ import graft.io.{Checkpoint, Iterate}
   * job per superstep, on both physical strategies.
   *  - Broadcast-state (V within Config.broadcastStateMaxRows): the state
   *    lives in DRIVER arrays between supersteps and re-enters the plan as
-  *    broadcast primitive maps (graft.util.StateMap); the superstep is a
-  *    single single-stage job scanning the CSR-packed adjacency, with a
-  *    codegen'd per-vertex kernel doing gather+score+argmax in one pass
-  *    (PackedAdjacency / PackedKernels / stepPlanPacked) and a wanter-row
-  *    collect at the end. Nothing is pinned; wants/moved are counted on
+  *    the per-round delta payload (graft.util.DeltaState); the superstep
+  *    is a single single-stage job scanning the CSR-packed adjacency, with
+  *    a codegen'd per-vertex kernel doing gather+score+argmax in one pass
+  *    (PackedAdjacency / PackedKernels / stepPlanPackedIdxDelta) and a
+  *    wanter-row collect at the end. Nothing is pinned; wants/moved are counted on
   *    the collected rows.
   *  - Co-partitioned shuffle (the 1e9-vertex path): the new state is
   *    pinned (eager cache + RDD-lineage cut + stats barrier, see
@@ -259,24 +259,28 @@ object Hedonic {
           .select(col("src").as("id"), StateMap.lookup(commOf, col("dst")).as("community"))
           .filter(col("community").isNotNull)
           .groupBy("id", "community").agg(sum(lit(1L)).as("friends"))
-    decideFromCounts(counts, commOf, sizeOf, alpha, weighted)
+    decideFromCounts(counts, Seq("id"), c => StateMap.lookup(commOf, c),
+        c => StateMap.lookup(sizeOf, c), alpha, weighted)
       .select(col("id"), col("bestComm"), gate.as("doMove"))
   }
 
-  /** Shared decide tail over per-(id, candidate community) friend counts:
-    * payoff -> canonical argmax -> strict-improvement filter. Feeds both
-    * the row-based stepPlanMap and stepPlanPacked's multi-segment (hub)
-    * branch, so hub decisions are expression-identical to the row plan. */
+  /** Shared decide tail over per-(keys, candidate community) friend
+    * counts: payoff -> canonical argmax -> strict-improvement filter.
+    * `cur` looks up the current community of `keys.head` and `size` a
+    * community's size. Feeds both the row-based stepPlanMap (keys = id,
+    * map lookups) and the hub branch of stepPlanPackedIdxDelta (keys =
+    * myIdx, id; payload lookups by position), so hub decisions are
+    * expression-identical to the row plan. */
   private[graft] def decideFromCounts(
       counts: DataFrame,
-      commOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
+      keys: Seq[String],
+      cur: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      size: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       alpha: Double,
-      weighted: Boolean = false): DataFrame = {
-    import graft.util.StateMap
+      weighted: Boolean): DataFrame = {
     val cand = counts
-      .withColumn("csize", StateMap.lookup(sizeOf, col("community")))
-      .withColumn("curComm", StateMap.lookup(commOf, col("id")))
+      .withColumn("csize", size(col("community")))
+      .withColumn("curComm", cur(col(keys.head)))
       .filter(col("curComm").isNotNull)
       .withColumn("isCur", col("community") === col("curComm"))
       .withColumn("strangers",
@@ -284,7 +288,7 @@ object Hedonic {
       .withColumn("payoff",
         (if (weighted) col("wfriends") * (1.0 - alpha)
          else col("friends") * (1.0 - alpha)) - col("strangers") * alpha)
-    val best = cand.groupBy("id").agg(
+    val best = cand.groupBy(keys.map(col): _*).agg(
       max(struct(
         col("payoff"),
         col("isCur").cast("int").as("ic"),
@@ -292,64 +296,21 @@ object Hedonic {
         col("community").as("comm"))).as("b"),
       max(when(col("isCur"), col("payoff"))).as("curP0"))
     best
-      .withColumn("curComm", StateMap.lookup(commOf, col("id")))
-      .withColumn("curSize", StateMap.lookup(sizeOf, col("curComm")))
-      .select(
-        col("id"),
+      .withColumn("curComm", cur(col(keys.head)))
+      .withColumn("curSize", size(col("curComm")))
+      .select(keys.map(col) ++ Seq(
         (col("b.payoff") >
           coalesce(col("curP0"),
             lit(0L) * (1.0 - alpha) - (col("curSize") - 1L) * alpha)).as("wants"),
-        col("b.comm").as("bestComm"))
+        col("b.comm").as("bestComm")): _*)
       .filter(col("wants"))
-      .select(col("id"), col("bestComm"))
+      .select(keys.map(col) :+ col("bestComm"): _*)
   }
 
-  /** CSR-packed superstep plan (the production broadcast-state path): a
-    * V-row scan of the packed adjacency where a codegen'd per-vertex
-    * kernel (PackedKernels.hedonicDecide) gathers, scores, and argmaxes in
-    * one pass — no aggregate operator, no per-edge rows. Multi-segment
-    * (hub) vertices flow through per-segment partial counts + a regular
-    * sum into the shared decide tail; the branch is elided when the build
-    * saw no hubs (maxSegs == 1, the common case). Decision-identical to
-    * stepPlanMap (PackedSpec pins both, including the hub branch). */
-  private[graft] def stepPlanPacked(
-      packed: graft.graph.PackedAdj,
-      commOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      sizeOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      alpha: Double,
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wtsOpt = if (packed.weighted) Some(col("wts")) else None
-    val dec1 = packed.df.filter(col("nsegs") === 1)
-      .select(col("id"),
-        PackedKernels.hedonicDecide(col("id"), col("nbrs"), wtsOpt, commOf, sizeOf, alpha)
-          .as("bestComm"))
-      .filter(col("bestComm").isNotNull)
-    val dec =
-      if (packed.maxSegs > 1) {
-        val counts =
-          if (packed.weighted)
-            packed.df.filter(col("nsegs") > 1)
-              .select(col("id"), explode(
-                PackedKernels.commCountsW(col("nbrs"), col("wts"), commOf)).as("cf"))
-              .select(col("id"), col("cf.community").as("community"),
-                col("cf.friends").as("friends"), col("cf.wfriends").as("wfriends"))
-              .groupBy("id", "community")
-              .agg(sum("friends").as("friends"), sum("wfriends").as("wfriends"))
-          else
-            packed.df.filter(col("nsegs") > 1)
-              .select(col("id"), explode(PackedKernels.commCounts(col("nbrs"), commOf)).as("cf"))
-              .select(col("id"), col("cf.community").as("community"), col("cf.friends").as("friends"))
-              .groupBy("id", "community").agg(sum("friends").as("friends"))
-        dec1.unionByName(decideFromCounts(counts, commOf, sizeOf, alpha, packed.weighted))
-      } else dec1
-    dec.select(col("id"), col("bestComm"), gate.as("doMove"))
-  }
-
-  /** Dense-index superstep plan (hub-free production path): same shape as
-    * stepPlanPacked's single-segment branch, but the kernel reads the
-    * per-round community state as a bare long[] through the numbered
-    * pack's int position arrays (PackedKernels.kHedonicIdx) —
-    * decision-identical by shared kernel tail. */
+  /** Superstep plan over a hub-free pack with the per-round community
+    * state as bare broadcasts (a long[] read through the pack's int
+    * position arrays, PackedKernels.kHedonicIdx, and the size map): the
+    * frontier executor's decide plan. */
   private[graft] def stepPlanPackedIdx(
       pidx: graft.graph.PackedAdj,
       commArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
@@ -371,11 +332,16 @@ object Hedonic {
         col("bestComm"), gate.as("doMove"))
   }
 
-  /** Delta-transport variant of stepPlanPackedIdx (the production
-    * driver-state plan): one Payload broadcast per round — base snapshot
-    * handle + cumulative overrides — instead of fresh O(V) comms/sizes
-    * broadcasts. Decision-identical (same kHedonicIdx kernel tail;
-    * PackedSpec pins it). */
+  /** The driver-state superstep plan over a pack (the production
+    * broadcast-state path): a V-row scan where a codegen'd per-vertex
+    * kernel (PackedKernels.kHedonicIdx) gathers, scores and argmaxes in
+    * one pass — no aggregate operator, no per-edge rows. The state is one
+    * delta Payload broadcast per round — base snapshot handle + cumulative
+    * overrides — instead of fresh O(V) comms/sizes broadcasts. On a hub
+    * pack (maxSegs > 1) multi-segment vertices flow through per-segment
+    * partial counts, a (myIdx, community) sum and the shared decide tail
+    * with payload lookups by position; a hub-free pack's plan has no such
+    * branch. Decision-identical to stepPlanMap (PackedSpec pins both). */
   private[graft] def stepPlanPackedIdxDelta(
       pidx: graft.graph.PackedAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
@@ -383,13 +349,28 @@ object Hedonic {
       gate: org.apache.spark.sql.Column,
       emitPos: Boolean = false): DataFrame = {
     val wtsOpt = if (pidx.weighted) Some(col("wts")) else None
-    pidx.df
+    val hub = pidx.maxSegs > 1
+    val dec1 = (if (hub) pidx.df.filter(col("nsegs") === 1) else pidx.df)
       .select(col("id"), col("myIdx"),
         PackedKernels.hedonicDecideIdxDelta(col("myIdx"), col("nbrs"), wtsOpt,
           stateR, alpha).as("bestComm"))
       .filter(col("bestComm").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"),
-        col("bestComm"), gate.as("doMove"))
+    val dec =
+      if (!hub) dec1
+      else {
+        val w = Option.when(pidx.weighted)("wfriends")
+        val counts = pidx.df.filter(col("nsegs") > 1)
+          .select(col("myIdx"), col("id"),
+            explode(PackedKernels.commCounts(col("nbrs"), wtsOpt, stateR)).as("cf"))
+          .select((Seq(col("myIdx"), col("id")) ++
+            ("community" +: "friends" +: w.toSeq).map(f => col("cf." + f).as(f))): _*)
+          .groupBy("myIdx", "id", "community")
+          .agg(sum("friends").as("friends"), w.toSeq.map(f => sum(f).as(f)): _*)
+        dec1.unionByName(decideFromCounts(counts, Seq("myIdx", "id"),
+          PackedKernels.stateAt(stateR, _), PackedKernels.sizeAt(stateR, _), alpha,
+          pidx.weighted))
+      }
+    dec.select(if (emitPos) col("myIdx") else col("id"), col("bestComm"), gate.as("doMove"))
   }
 
   /** M4 one-pass hedonic improvement at alpha = 0 (reference
@@ -481,8 +462,8 @@ object Hedonic {
     * identical), honored on the broadcast-state path. A pipeline running
     * several algorithms on one graph packs ONCE and shares it — the pack's
     * E-row shuffle+sort is the dominant one-time cost at every scale and
-    * there is no reason to pay it per algorithm. A hub-free pack comes
-    * numbered by its build: an init over exactly the pack's vertices runs
+    * there is no reason to pay it per algorithm. A pack comes numbered by
+    * its build: an init over exactly the pack's vertices runs
     * on it as it is, any other init on a renumbered copy the run
     * releases. The default alpha takes V and 2E from the pack. The caller
     * owns the cache lifetime (run() will not unpersist a prebuilt pack);
@@ -524,14 +505,13 @@ object Hedonic {
         // E-row adjacency), so the single-ungated-step queries
         // (q_move1 / q_wmove1) run stepPlanMap straight over the symmetrized
         // rows — measured 5.2-5.9 s -> 3.1-4.3 s on the sf0.1 dense graph
-        // (BenchExtra move1_ab). Decision-identical: stepPlanMap is the same
-        // plan the driver-state loop uses on hub graphs (StrategySpec pins
-        // it against both the packed kernels and the shuffle path).
+        // (BenchExtra move1_ab). Decision-identical: StrategySpec pins
+        // stepPlanMap against the packed kernels and the shuffle path.
         val oneShot = cfg.maxSupersteps - startStep == 1 && packedOpt.isEmpty &&
           ckpt.isEmpty && !cfg.trackPotential
         // Otherwise the loop iterates over the CSR-packed adjacency (one
         // build-time shuffle, then V-row supersteps — see PackedAdjacency /
-        // stepPlanPacked).
+        // stepPlanPackedIdxDelta).
         // An own pack is numbered by the state: position i is ids(i).
         val ids = cols.longs(0)
         val packed =
@@ -614,9 +594,9 @@ object Hedonic {
   /** Broadcast-strategy loop with DRIVER-RESIDENT state (V fits the
     * broadcast budget by definition, so it fits the driver), on the
     * Superstep engine. The plan reads the membership as the delta-transport
-    * payload on hub-free packs, as two primitive maps (id -> community,
-    * community -> size) on hub packs, and — `packed = None`, the
-    * one-superstep fast path — as the same maps over the symmetrized rows.
+    * payload over a pack, hub or not, and — `packed = None`, the
+    * one-superstep fast path — as two primitive maps (id -> community,
+    * community -> size) over the symmetrized rows.
     * Each superstep is ONE single-stage Spark job collecting only the
     * WANTER rows (doMove carries the gate); nothing pinned. All
     * payoff/argmax/gate arithmetic stays IN-PLAN — identical expressions
@@ -644,10 +624,9 @@ object Hedonic {
     val sizeR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
     val gate = run.parityGate(cfg.parityGating)
     val dense = run.dense.isDefined
-    val plan = (run.dense, packed) match {
-      case (Some(pidx), _) => stepPlanPackedIdxDelta(pidx, run.delta.ref, alpha, gate, emitPos = true)
-      case (None, Some(p)) => stepPlanPacked(p, commR, sizeR, alpha, gate)
-      case (None, None) =>
+    val plan = run.dense match {
+      case Some(pidx) => stepPlanPackedIdxDelta(pidx, run.delta.ref, alpha, gate, emitPos = true)
+      case None =>
         val symCols = if (cfg.weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
         stepPlanMap(GraphOps.symmetrize(edges).select(symCols.map(col): _*),
           commR, sizeR, alpha, gate, cfg.weighted)

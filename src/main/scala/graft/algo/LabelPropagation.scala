@@ -23,8 +23,8 @@ import graft.io.Iterate
   *
   * Cost model: ONE job per iteration on both strategies. Broadcast-state
   * (small V): labels live in DRIVER arrays between rounds and re-enter the
-  * plan as a broadcast id -> label primitive map read through codegen'd
-  * lookups (graft.util.StateMap); the single-stage job ends in a
+  * plan as the per-round delta payload read by position over the packed
+  * adjacency (graft.util.DeltaState); the single-stage job ends in a
   * changer-row collect and nothing is pinned (see Superstep for the
   * rationale and the measured serial-cost motivation). Shuffle path: the
   * new labels are pinned while the would-change counter rides the
@@ -58,10 +58,9 @@ object LabelPropagation {
 
   /** `packedOpt`: a caller-built CSR pack of the symmetrized edges (see
     * Hedonic.run — pack once, run hedonic + PageRank + LPA), honored on
-    * the broadcast-state path; with the default init a hub-free pack's
-    * numbering is the state, so the call runs its rounds and nothing
-    * else. Caller owns the cache lifetime and the `weighted` flags must
-    * match. */
+    * the broadcast-state path; with the default init the pack's numbering
+    * is the state, so the call runs its rounds and nothing else. Caller
+    * owns the cache lifetime and the `weighted` flags must match. */
   def run(edges: Dataset[Edge], initOpt: Option[DataFrame] = None,
           maxIter: Int = 30, parityGating: Boolean = true,
           weighted: Boolean = false,
@@ -74,21 +73,22 @@ object LabelPropagation {
     // count in hand: a shared pack's V, or the own-pack degree table,
     // persisted and counted once — over budget that count alone decides,
     // within budget one exact collect is the state AND the pack build's
-    // degree summary. Over a numbered shared pack it is the pack's own
-    // numbering, with no job at all. A caller's init gets one capped
-    // collect.
+    // degree summary. Over a shared pack it is the pack's own numbering,
+    // with no job at all. A caller's init gets one capped collect.
     val degAgg = Option.when(initOpt.isEmpty && packedOpt.isEmpty)(
       symDf.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")).persist())
     val (state, known) = (initOpt, packedOpt) match {
       case (Some(i), _) => (i.select(col("id"), col("label")), None)
       case (None, Some(p)) =>
+        // Read only by the shuffle fallback (over budget): a distributed
+        // scan of the pack, one row per vertex.
         val ids = if (p.maxSegs == 1) p.df.select("id") else p.df.select("id").distinct()
         (ids.select(col("id"), col("id").as("label")), Some(p.vertices))
       case (None, None) =>
         (degAgg.get.select(col("id"), col("id").as("label"), col("d")), Some(degAgg.get.count()))
     }
     // (ids, labels, degrees when the own-pack degree table was collected)
-    val inHand = (initOpt, packedOpt.flatMap(_.ids)) match {
+    val inHand = (initOpt, packedOpt.map(_.ids)) match {
       case (None, Some(ids)) =>
         Option.when(Superstep.fits(ids.length, broadcastStateMaxRows))((ids, ids.clone(), None))
       case _ =>
@@ -99,7 +99,7 @@ object LabelPropagation {
     inHand match {
       case Some((ids, labs, degs)) =>
         // Broadcast-state strategy iterates over the CSR-packed adjacency
-        // (see PackedAdjacency / stepPlanPacked).
+        // (see PackedAdjacency / stepPlanPackedIdxDelta).
         packedOpt.foreach(p => require(p.weighted == weighted,
           s"prebuilt pack weighted=${p.weighted} but weighted=$weighted"))
         val packed = packedOpt.getOrElse {
@@ -184,80 +184,56 @@ object LabelPropagation {
       .filter(col("nbrLabel").isNotNull)
       .groupBy("id", "nbrLabel")
       .agg(vote.as("cnt"))
-    decideFromVotes(votes, labOf)
+    decideFromVotes(votes, Seq("id"), c => StateMap.lookup(labOf, c))
       .select(col("id"), col("bestLabel"), gate.as("g"))
   }
 
-  /** Shared decide tail over per-(id, label) vote sums: canonical argmax
-    * (count desc, smallest label) + changed-only filter. Feeds both the
-    * row-based stepPlanMap and stepPlanPacked's multi-segment (hub)
-    * branch. */
-  private[graft] def decideFromVotes(votes: DataFrame,
-      labOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]])
-      : DataFrame = {
-    import graft.util.StateMap
+  /** Shared decide tail over per-(keys, label) vote sums: canonical argmax
+    * (count desc, smallest label) + changed-only filter; `cur` looks up
+    * the current label of `keys.head`. Feeds both the row-based
+    * stepPlanMap (keys = id, map lookup) and the hub branch of
+    * stepPlanPackedIdxDelta (keys = myIdx, id; payload lookup by
+    * position). */
+  private[graft] def decideFromVotes(votes: DataFrame, keys: Seq[String],
+      cur: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
     votes
-      .groupBy("id").agg(
+      .groupBy(keys.map(col): _*).agg(
         max(struct(col("cnt"), (-col("nbrLabel")).as("neg"), col("nbrLabel").as("lab"))).as("b"))
-      .withColumn("cur", StateMap.lookup(labOf, col("id")))
+      .withColumn("cur", cur(col(keys.head)))
       .filter(col("cur").isNotNull && col("b.lab") =!= col("cur"))
-      .select(col("id"), col("b.lab").as("bestLabel"))
-  }
+      .select(keys.map(col) :+ col("b.lab").as("bestLabel"): _*)
 
-  /** CSR-packed step plan (the production broadcast-state path): a V-row
-    * scan of the packed adjacency where a codegen'd per-vertex kernel
-    * (PackedKernels.labelDecide) tallies neighbor labels and argmaxes in
-    * one pass — no aggregate operator on the common path. Multi-segment
-    * (hub) vertices flow through per-segment partial votes + a regular sum
-    * into the shared decide tail; the branch is elided when the build saw
-    * no hubs. Decision-identical to stepPlanMap (PackedSpec). */
-  private[graft] def stepPlanPacked(packed: graft.graph.PackedAdj,
-      labOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongLongMap]],
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wcol = if (packed.weighted) Some(col("wts")) else None
-    val dec1 = packed.df.filter(col("nsegs") === 1)
-      .select(col("id"),
-        PackedKernels.labelDecide(col("id"), col("nbrs"), wcol, labOf).as("bestLabel"))
-      .filter(col("bestLabel").isNotNull)
-    val dec =
-      if (packed.maxSegs > 1) {
-        val votes = packed.df.filter(col("nsegs") > 1)
-          .select(col("id"), explode(PackedKernels.labelVotes(col("nbrs"), wcol, labOf)).as("lv"))
-          .select(col("id"), col("lv.nbrLabel").as("nbrLabel"), col("lv.cnt").as("cnt"))
-          .groupBy("id", "nbrLabel").agg(sum("cnt").as("cnt"))
-        dec1.unionByName(decideFromVotes(votes, labOf))
-      } else dec1
-    dec.select(col("id"), col("bestLabel"), gate.as("g"))
-  }
-
-  /** Dense-index step plan (hub-free production path; see
-    * Hedonic.stepPlanPackedIdx). */
-  private[graft] def stepPlanPackedIdx(pidx: graft.graph.PackedAdj,
-      labArr: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      gate: org.apache.spark.sql.Column): DataFrame = {
-    val wcol = if (pidx.weighted) Some(col("wts")) else None
-    pidx.df
-      .select(col("id"),
-        PackedKernels.labelDecideIdx(col("myIdx"), col("nbrs"), wcol, labArr)
-          .as("bestLabel"))
-      .filter(col("bestLabel").isNotNull)
-      .select(col("id"), col("bestLabel"), gate.as("g"))
-  }
-
-  /** Delta-transport twin (see Hedonic.stepPlanPackedIdxDelta /
-    * DeltaState): labels ride the Payload's comms lane; decisions use the
-    * same kLabelIdx tail, so results are identical (PackedSpec pins). */
+  /** The driver-state step plan over a pack (see
+    * Hedonic.stepPlanPackedIdxDelta / DeltaState): a V-row scan where a
+    * codegen'd per-vertex kernel (PackedKernels.kLabelIdx) tallies the
+    * neighbor labels, read by position from the Payload's comms lane, and
+    * argmaxes in one pass. On a hub pack multi-segment vertices flow
+    * through per-segment partial votes, a (myIdx, label) sum and the
+    * shared decide tail. Decision-identical to stepPlanMap (PackedSpec). */
   private[graft] def stepPlanPackedIdxDelta(pidx: graft.graph.PackedAdj,
       stateR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]],
       gate: org.apache.spark.sql.Column, emitPos: Boolean = false): DataFrame = {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
+    val hub = pidx.maxSegs > 1
     // emitPos: key on the state position (see Hedonic.stepPlanPackedIdx)
-    pidx.df
+    val dec1 = (if (hub) pidx.df.filter(col("nsegs") === 1) else pidx.df)
       .select(col("id"), col("myIdx"),
         PackedKernels.labelDecideIdxDelta(col("myIdx"), col("nbrs"), wcol, stateR)
           .as("bestLabel"))
       .filter(col("bestLabel").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"), col("bestLabel"), gate.as("g"))
+    val dec =
+      if (!hub) dec1
+      else {
+        val votes = pidx.df.filter(col("nsegs") > 1)
+          .select(col("myIdx"), col("id"),
+            explode(PackedKernels.labelVotes(col("nbrs"), wcol, stateR)).as("lv"))
+          .select(col("myIdx"), col("id"), col("lv.nbrLabel").as("nbrLabel"),
+            col("lv.cnt").as("cnt"))
+          .groupBy("myIdx", "id", "nbrLabel").agg(sum("cnt").as("cnt"))
+        dec1.unionByName(decideFromVotes(votes, Seq("myIdx", "id"),
+          PackedKernels.stateAt(stateR, _)))
+      }
+    dec.select(if (emitPos) col("myIdx") else col("id"), col("bestLabel"), gate.as("g"))
   }
 
   /** Broadcast-strategy loop with DRIVER-RESIDENT labels on the Superstep
@@ -265,8 +241,9 @@ object LabelPropagation {
     * iteration. Decision semantics identical to the shuffle loop: `wants`
     * = majority label differs (counted BEFORE gating, so convergence is
     * gate-independent); a node absent from the vote table keeps its label.
-    * `adj` is the packed adjacency, or (Left) the symmetrized rows the
-    * map-state one-shot votes over. The output's label column is `name`. */
+    * `adj` is the packed adjacency (the delta payload, hub or not), or
+    * (Left) the symmetrized rows the map-state one-shot votes over. The
+    * output's label column is `name`. */
   private def runDriverState(spark: org.apache.spark.sql.SparkSession,
       adj: Either[DataFrame, graft.graph.PackedAdj],
       ids: Array[Long], labs0: Array[Long], maxIter: Int, parityGating: Boolean,
@@ -277,10 +254,9 @@ object LabelPropagation {
     val labR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[StateMap.LongLongMap]](null)
     val gate = run.parityGate(parityGating)
     val dense = run.dense.isDefined
-    val plan = (run.dense, adj) match {
-      case (Some(pidx), _)   => stepPlanPackedIdxDelta(pidx, run.delta.ref, gate, emitPos = true)
-      case (None, Right(p))  => stepPlanPacked(p, labR, gate)
-      case (None, Left(sym)) => stepPlanMap(sym, labR, weighted, gate)
+    val plan = adj match {
+      case Left(sym) => stepPlanMap(sym, labR, weighted, gate)
+      case Right(_)  => stepPlanPackedIdxDelta(run.dense.get, run.delta.ref, gate, emitPos = true)
     }
     val job = run.moves(plan)
     // labels ride the delta Payload's comms lane; the size lane stays empty

@@ -31,11 +31,9 @@ import graft.util.Columns
   *
   *  - broadcast-state (V <= broadcastStateMaxRows, no explicit vertex
   *    table): the rank vector lives in DRIVER arrays between iterations;
-  *    each round it re-enters the plan as a broadcast id -> rank primitive
-  *    map read through codegen'd lookups (graft.util.StateMap) inside a
-  *    scan of the edge table cached pre-partitioned on dst — the GROUPING
-  *    key — so the aggregate runs in place and the single job ends in a
-  *    V-row collect. An
+  *    each round it re-enters the plan as a broadcast primitive array read
+  *    by position inside a scan of the CSR-packed in-neighbor lists, so
+  *    the single job ends in a V-row collect. An
   *    iteration moves ZERO edge-scale rows through the shuffle and runs
   *    zero auxiliary jobs. This is what makes per-iteration cost scale
   *    with cores (the N->4N efficiency target): both the E-row exchange
@@ -83,10 +81,11 @@ object PageRank {
     * `packedOpt`: a caller-built CSR pack of the SYMMETRIZED edges (see
     * Hedonic.run — src- and dst-packs are identical on a symmetric edge
     * set), honored on the broadcast-state path. Pack once, run hedonic +
-    * PageRank + LPA: a hub-free pack hands over its numbering and
-    * degrees, so the call runs its iterations and nothing else; strengths
-    * (weighted) and hub-pack degrees are derived from the cached V-row
-    * pack (sum(wts) / size(nbrs)) instead of a second E-row aggregate.
+    * PageRank + LPA: a pack that numbered itself hands over its numbering
+    * and degrees, so the call runs its iterations and nothing else;
+    * strengths (weighted), and degrees of a pack numbered by its caller,
+    * are derived from the cached V-row pack (sum(wts) / size(nbrs))
+    * instead of a second E-row aggregate.
     * Caller owns the pack's cache lifetime; its `weighted` flag must match
     * cfg.weighted. */
   def runTimed(edges: Dataset[Edge], cfg: Config = Config(),
@@ -131,12 +130,13 @@ object PageRank {
       case (None, Some(p)) if Superstep.fits(p.vertices, cfg.broadcastStateMaxRows) =>
         // Caller's pack: V is the pack's own. A pack that numbered itself
         // carries its degrees in pack order, so no job runs. Strengths and
-        // hub packs' degrees come off the cached V-row pack (multi-segment
-        // hub vertices contribute one row per segment, hence the groupBy).
+        // the degrees of a pack numbered by its caller come off the cached
+        // V-row pack (multi-segment hub vertices contribute one row per
+        // segment, hence the groupBy).
         require(p.weighted == cfg.weighted,
           s"prebuilt pack weighted=${p.weighted} but cfg.weighted=${cfg.weighted}")
-        val (ids, degs) = (p.ids, p.deg) match {
-          case (Some(ids), Some(d)) if !cfg.weighted => (ids, d.map(_.toDouble))
+        val (ids, degs) = p.deg match {
+          case Some(d) if !cfg.weighted => (p.ids, d.map(_.toDouble))
           case _ =>
             val vd = Columns.of(if (cfg.weighted)
                 p.df.groupBy(col("id")).agg(
@@ -223,14 +223,13 @@ object PageRank {
     * broadcast budget, hence the driver) on the Superstep engine. An
     * iteration is exactly ONE single-stage job: packed-adjacency scan,
     * per-vertex contribution kernel, V-row primitive collect; nothing is
-    * pinned. On hub-free packs each round broadcasts ONE bare double[] —
-    * the pre-divided rank/deg when unweighted (the same IEEE division the
-    * hash kernel does per edge, so bitwise-identical sums with one read
-    * per edge), the rank alone when weighted (strength array broadcast
-    * once); hub packs read broadcast rank/degree maps (degrees set once —
-    * they never change). The rank update stays IN-PLAN, same arithmetic
-    * shape as the shuffle path's expression (rank/deg per contribution
-    * row); only the tol-mode |delta| sum moves to the driver (same values,
+    * pinned. Each round broadcasts ONE bare double[] — the pre-divided
+    * rank/deg when unweighted (the same IEEE division the row plan does
+    * per edge, with one read per edge), the rank alone when weighted
+    * (strength array broadcast once) — hub packs included, whose segment
+    * partials a V-row aggregate sums. The rank update stays IN-PLAN, same
+    * arithmetic shape as the shuffle path's expression (rank/deg per
+    * contribution row); only the tol-mode |delta| sum moves to the driver (same values,
     * different summation order — a stopping heuristic, not a result). No
     * dangling term: this path requires an edge-derived vertex set (min
     * degree 1). */
@@ -238,29 +237,20 @@ object PageRank {
       packed: graft.graph.PackedAdj, ids: Array[Long], degs0: Array[Double], v: Double,
       cfg: Config, ownsPack: Boolean): (DataFrame, Seq[Long]) = {
     import graft.util.StateMap
-    type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
     val iterMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     val run = new Superstep.Run(spark, ids, Some(packed), ownsPack)
     val n = run.n
     val degs = run.align(degs0)
-    val dense = run.dense.isDefined
-    val qR = new StateMap.Ref[Bc[Array[Double]]](null)
-    val rankR = new StateMap.Ref[Bc[StateMap.LongDoubleMap]](null)
-    val plan = run.dense match {
-      case Some(pidx) => iterPlanPackedIdx(pidx, qR,
-        if (cfg.weighted) Some(run.once(degs.clone())) else None, v, cfg, emitPos = true)
-      case None => iterPlanPacked(packed, rankR,
-        run.once(StateMap.longDouble(run.ids, degs, n)), v, cfg)
-    }
-    val job = run.values(plan)
+    val qR = new StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]](null)
+    val job = run.values(iterPlanPackedIdx(run.dense.get, qR,
+      if (cfg.weighted) Some(run.once(degs.clone())) else None, v, cfg, emitPos = true))
     var ranks = Array.fill(n)(1.0 / v)
     val nIter = cfg.fixedIter.getOrElse(cfg.maxIter)
     var iter = 0
     var done = false
     while (!done && iter < nIter) {
       val t0 = System.nanoTime()
-      if (!dense) run.publish(rankR, StateMap.longDouble(run.ids, ranks, n))
-      else if (cfg.weighted) run.publish(qR, ranks.clone())
+      if (cfg.weighted) run.publish(qR, ranks.clone())
       else {
         val q = new Array[Double](n)
         var z = 0
@@ -346,35 +336,15 @@ object PageRank {
       .select(col("id"), newRank.as("rank"))
   }
 
-  /** CSR-packed iteration plan (the production broadcast-state path): a
-    * V-row scan of the packed in-neighbor lists where a codegen'd kernel
-    * (PackedKernels.prContrib) sums rank(u)/deg(u) over each vertex's
-    * in-neighbors in one pass — no aggregate operator at all unless the
-    * build saw hub vertices (maxSegs > 1), in which case per-segment
-    * partial sums are combined by a regular V-row aggregate. Same per-
-    * contribution arithmetic as iterPlan/iterPlanMap; per-vertex
-    * accumulation order is the sorted neighbor array (deterministic across
-    * runs). */
-  private[graft] def iterPlanPacked(packed: graft.graph.PackedAdj,
-      rankOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongDoubleMap]],
-      degOf: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.StateMap.LongDoubleMap]],
-      v: Double, cfg: Config): DataFrame = {
-    val newRank =
-      lit((1.0 - cfg.damping) / v) +
-        lit(cfg.damping) * (coalesce(col("s"), lit(0.0)) + lit(0.0))
-    val wcol = if (packed.weighted) Some(col("wts")) else None
-    val contrib = packed.df
-      .select(col("id"), PackedKernels.prContrib(col("nbrs"), wcol, rankOf, degOf).as("c"))
-      .filter(col("c").isNotNull)
-    val s =
-      if (packed.maxSegs > 1) contrib.groupBy("id").agg(sum("c").as("s"))
-      else contrib.withColumnRenamed("c", "s")
-    s.select(col("id"), newRank.as("rank"))
-  }
-
-  /** Dense-index iteration plan (hub-free production path; see
-    * PackedKernels.kContribIdx). No hub branch — only hub-free packs are
-    * numbered. */
+  /** The driver-state iteration plan over a pack (the production
+    * broadcast-state path): a V-row scan of the packed in-neighbor lists
+    * where a codegen'd kernel (PackedKernels.kContribIdx) sums
+    * rank(u)/deg(u) over each vertex's in-neighbors in one pass — no
+    * aggregate operator at all unless the pack has hub vertices
+    * (maxSegs > 1), whose per-segment partial sums a (myIdx, id) sum
+    * combines. Same per-contribution arithmetic as iterPlan/iterPlanMap;
+    * per-vertex accumulation order is the sorted neighbor array
+    * (deterministic across runs). */
   private[graft] def iterPlanPackedIdx(pidx: graft.graph.PackedAdj,
       qR: graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]],
       degArrR: Option[graft.util.StateMap.Ref[org.apache.spark.broadcast.Broadcast[Array[Double]]]],
@@ -385,11 +355,12 @@ object PageRank {
     val wcol = if (pidx.weighted) Some(col("wts")) else None
     // emitPos: the driver-state loop keys its merge on the dense state
     // POSITION (myIdx) — no id->index probe, primitive-array collect.
-    pidx.df
+    val contrib = pidx.df
       .select(col("id"), col("myIdx"),
         PackedKernels.prContribIdx(col("nbrs"), wcol, qR, degArrR).as("s"))
       .filter(col("s").isNotNull)
-      .select(if (emitPos) col("myIdx") else col("id"), newRank.as("rank"))
+    val s = if (pidx.maxSegs > 1) contrib.groupBy("myIdx", "id").agg(sum("s").as("s")) else contrib
+    s.select(if (emitPos) col("myIdx") else col("id"), newRank.as("rank"))
   }
 
   /** Top-k vertices by rank (SURVEY.md §2.6 addition). */

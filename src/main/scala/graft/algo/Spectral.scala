@@ -184,7 +184,7 @@ object Spectral {
           degrees = Some(graft.graph.DegreeSummary.of(d)),
           numbering = Some(cols.longs(0)))
         if (packed.maxSegs == 1) {
-          val run = new Superstep.Run(spark, packed.ids.get, Some(packed), ownsPack = true)
+          val run = new Superstep.Run(spark, packed.ids, Some(packed), ownsPack = true)
           val n = run.n
           val degs = d.map(_.toDouble)
           var x = cols.doubles(2)

@@ -44,16 +44,17 @@ import graft.util.{Columns, DeltaState, Portable, StateMap}
   *    at most cap + 1 + P rows, and no task reads more than cap + 1.
   *    `Columns.of` is the same job without a cap, for the other
   *    driver-side collects (the pack's numbering, degree summaries).
-  *  - State layout (`Run`): a hub-free pack is numbered by its build
+  *  - State layout (`Run`): every pack is numbered by its build
   *    (PackedAdjacency), so a round's state is a bare primitive array
-  *    indexed by pack position. A state whose id set IS the numbering's
-  *    (aligned: an own pack numbered by the state, a shared pack's
-  *    edge-derived vertex set) is laid out in pack order with one map
-  *    lookup per row and no Spark job; any other state gets the pack
-  *    renumbered to its own positions (PackedAdjacency.reindex, -1 for
-  *    pack vertices outside it). Hub packs keep the hash kernels over
-  *    broadcast primitive maps keyed by state position. An own pack is
-  *    released at close; a caller's shared pack never is.
+  *    indexed by pack position, hub packs included. A state whose id set
+  *    IS the numbering's (aligned: an own pack numbered by the state, a
+  *    shared pack's edge-derived vertex set) is laid out in pack order
+  *    with one map lookup per row and no Spark job; any other state gets
+  *    the pack renumbered to its own positions (PackedAdjacency.reindex,
+  *    -1 for pack vertices outside it). Only the map plan that scans no
+  *    pack (the Hedonic/LPA one-shot over the symmetrized rows) reads
+  *    broadcast primitive maps. An own pack is released at close; a
+  *    caller's shared pack never is.
   *  - Plans are built ONCE over StateMap.Ref cells and re-collected every
   *    round; the Refs carry per-round BROADCAST HANDLES (`publish`), not
   *    the state itself — a handle serializes to an id and the value ships
@@ -66,8 +67,8 @@ import graft.util.{Columns, DeltaState, Portable, StateMap}
   *    per-partition primitive arrays read straight off the codegen'd
   *    InternalRow iterator. Row-based DataFrame.collect deserializes and
   *    boxes every row serially on the driver — a per-round cost that does
-  *    not shrink with cluster size. Rows are keyed by state POSITION; on
-  *    the hash layout the position is looked up in-plan from the id.
+  *    not shrink with cluster size. Rows are keyed by state POSITION; the
+  *    map plan's position is looked up in-plan from the id.
   *  - Round submission (`collect`): `sc.runJob` with a NAMED serializable
   *    task function (`Task`), never `rdd.collect()` or a lambda.
   *    `RDD.collect` hands `runJob` two lambdas (captured by RDD and by
@@ -218,16 +219,16 @@ object Superstep {
 
   /** One driver-state run over the state vertices `stateIds` (in the
     * caller's collect order). `packed` is the adjacency the plans scan, if
-    * any: a numbered pack is scanned as it is when the state is aligned
-    * with it and renumbered to the state otherwise (`dense`), a hub pack
-    * stays on the hash kernels. `ids` is the run's position order — the
+    * any: it is scanned as it is when the state is aligned with its
+    * numbering and renumbered to the state otherwise (`dense`). `ids` is
+    * the run's position order — the
     * pack's when aligned — and `align` lays the caller's value arrays out
     * in it. `ownsPack` = the run built the pack itself and releases it.
     * Call `close()` when done. */
   final class Run(val spark: SparkSession, stateIds: Array[Long],
                   packed: Option[PackedAdj] = None, ownsPack: Boolean = false) {
     val sc = spark.sparkContext
-    private val numbering = packed.flatMap(_.ids)
+    private val numbering = packed.map(_.ids)
     /** Pack position of each state row, when the state is aligned with a
       * pack numbered by someone else (the run adopts the pack's order). */
     private val order: Option[Array[Int]] =
@@ -239,11 +240,11 @@ object Superstep {
     private val live = ArrayBuffer.empty[Broadcast[_]]  // destroyed after each collect
     private val owned = ArrayBuffer.empty[Broadcast[_]] // destroyed by close()
 
-    private val remapped = numbering.isDefined && !(numbering.get eq ids)
-    /** The numbered layout the plans scan, in this run's positions. */
-    val dense: Option[PackedAdj] = packed.filter(_.ids.isDefined).map { p =>
+    private val remapped = numbering.exists(!_.eq(ids))
+    /** The pack the plans scan, in this run's positions. */
+    val dense: Option[PackedAdj] = packed.map { p =>
       if (!remapped) p
-      else PackedAdjacency.reindex(p, ids, p.ids.get.map(PackedAdjacency.positionOf(posOf, _)))
+      else PackedAdjacency.reindex(p, ids, p.ids.map(PackedAdjacency.positionOf(posOf, _)))
     }
 
     /** The caller's per-row values (collect order) in this run's order. */
@@ -279,9 +280,9 @@ object Superstep {
 
     private lazy val posR = once(posOf)
 
-    /** Position-key a plan: dense-layout plans already emit the state
-      * position first; hash-layout plans emit the id, looked up in-plan
-      * (ids outside the state table become -1, which merges skip). */
+    /** Position-key a plan: plans over a pack already emit the state
+      * position first; the map plan emits the id, looked up in-plan (ids
+      * outside the state table become -1, which merges skip). */
     private def keyed(plan: DataFrame): DataFrame =
       if (dense.isDefined) plan
       else {
@@ -293,13 +294,16 @@ object Superstep {
     def moves(plan: DataFrame): Job[Moves] = job(keyed(plan), MovesTask)
     def values(plan: DataFrame): Job[Values] = job(keyed(plan), ValuesTask)
 
-    /** A round's job over `plan`. Dense-layout plans only scan the cached
-      * pack, so one RDD serves every round. Hash-layout plans may hold an
-      * exchange (hub branch, row aggregate), and re-running a physical plan
-      * reuses its shuffle output — stale state — so they are re-planned
-      * each round. */
+    /** A round's job over `plan`. Plans over a hub-free pack only scan the
+      * cached pack, so one RDD serves every round. A hub pack's plan (its
+      * hub branch) and the map plan (its row aggregate) hold an exchange,
+      * and re-running a physical plan reuses its shuffle output — stale
+      * state — so they are re-planned each round. */
     def job[P: ClassTag](plan: DataFrame, task: Task[P]): Job[P] =
-      if (dense.isDefined) { val rdd = plan.queryExecution.toRdd; new Job(() => rdd, task) }
+      if (dense.exists(_.maxSegs == 1)) {
+        val rdd = plan.queryExecution.toRdd
+        new Job(() => rdd, task)
+      }
       else new Job(() => plan.select(plan.columns.map(col): _*).queryExecution.toRdd, task)
 
     /** Run round `epoch`'s job — one batch per partition — and release its

@@ -135,8 +135,8 @@ object Dedup {
     out
   }
 
-  /** Pre-pin computation of jaccardPairs, exposed for plan evidence
-    * (PlanDump6 — the pinned public frame explains as a bare RDD scan).
+  /** Pre-pin computation of jaccardPairs, exposed for plan evidence (the
+    * pinned public frame explains as a bare RDD scan).
     * Returns (pairs, ranked shingle cache); the CALLER owns the cache. */
   private[graft] def jaccardPairsFrame(docs: DataFrame, threshold: Double, n: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text",

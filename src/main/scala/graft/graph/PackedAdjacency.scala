@@ -1,30 +1,27 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.util.{Columns, StateMap}
 
-/** CSR-packed adjacency cache (see PackedAdjacency.build). Two layouts:
-  *  - numbered (`ids` defined; every hub-free build): one row per vertex,
-  *    (id, myIdx, nbrs: array<int>[, wts]). Neighbor arrays hold
-  *    POSITIONS in the numbering (-1 = endpoint outside it) and `myIdx` is
-  *    the row's own. On the driver, `ids(i)` is the vertex at position i
-  *    and, when the build numbered the pack itself, `deg(i)` its degree.
-  *    Kernels read per-round state as a bare primitive array indexed by
-  *    position — one direct load per neighbor instead of ~2 random
-  *    hash-probe cache lines — and int arrays halve the cache against long
-  *    ids.
-  *  - long ids (`maxSegs > 1`, a hub graph): (id, nsegs, nbrs:
-  *    array<long>[, wts]) rows, one per vertex segment, read by the hash
-  *    kernels through broadcast maps.
-  * `maxSegs == 1` means no vertex exceeded the segment cap, so plan
-  * builders can skip the hub-combine branch entirely. `degSum` (directed
-  * half-edges, 2E on a symmetrized input) and `vertices` (V) come from the
-  * build's degree summary. Caller owns the cache lifetime (unpersist()). */
+/** CSR-packed adjacency cache (see PackedAdjacency.build): one row per
+  * vertex segment, (id, myIdx[, nsegs], nbrs: array<int>[, wts]). Every
+  * pack is numbered: neighbor arrays hold POSITIONS in the numbering `ids`
+  * (-1 = endpoint outside it) and `myIdx` is the row's own. On the driver
+  * `ids(i)` is the vertex at position i and, when the build numbered the
+  * pack itself, `deg(i)` its degree. Kernels read per-round state as a
+  * bare primitive array indexed by position — one direct load per
+  * neighbor instead of ~2 random hash-probe cache lines — and int arrays
+  * halve the cache against long ids.
+  * `maxSegs == 1` means no vertex exceeded the segment cap: one row per
+  * vertex and no `nsegs` column, so plan builders skip the hub branch.
+  * Otherwise a vertex's `nsegs` rows share its `myIdx`. `degSum`
+  * (directed half-edges, 2E on a symmetrized input) and `vertices` (V)
+  * come from the build's degree summary. Caller owns the cache lifetime
+  * (unpersist()). */
 final case class PackedAdj(df: DataFrame, maxSegs: Int, weighted: Boolean,
-                           degSum: Long = 0L, vertices: Long = 0L,
-                           ids: Option[Array[Long]] = None,
-                           deg: Option[Array[Long]] = None) {
+                           degSum: Long, vertices: Long, ids: Array[Long],
+                           deg: Option[Array[Long]]) {
   def unpersist(): Unit = { df.unpersist(); () }
 }
 
@@ -74,17 +71,20 @@ object DegreeSummary {
   * xxhash64(neighbor) % nsegs, so no single row exceeds ~segCap elements
   * (8 MB of longs at the default 1<<20) — the bounded-row answer to the
   * collect_set hub bomb this engine already purged from connected
-  * components. Per-vertex decisions for multi-segment vertices flow
-  * through a partial-counts + regular-aggregate branch in the plan
-  * builders; `maxSegs` tells them whether that branch can be elided.
+  * components. Segmenting bounds row length, not id space, so segments
+  * carry positions like every other row. Per-vertex decisions for
+  * multi-segment vertices flow through a partial-counts + regular-aggregate
+  * branch in the plan builders; `maxSegs` tells them whether that branch
+  * can be elided.
   *
   * Arrays are sorted by neighbor id so per-vertex float accumulation
   * order — and therefore every kernel output — is deterministic across
   * runs and partitionings; numbering keeps that order (positions are
   * assigned per neighbor, the array is not re-sorted).
   *
-  * Numbering (hub-free packs): the build numbers the vertices itself,
-  * once, so every algorithm call over a shared pack scans it as it is.
+  * Numbering (every pack, hub or not): the build numbers the vertices
+  * itself, once, so every algorithm call over a shared pack scans it as
+  * it is.
   * A build given no `numbering` takes it from its own degree table — the
   * V-row (id, degree) collect that also yields the degree summary, so the
   * build stays at two jobs — and the pack then carries its ids and
@@ -115,8 +115,8 @@ object PackedAdjacency {
     * sort also hands every kernel a sorted neighbor array for free
     * (deterministic float accumulation order).
     *
-    * Only the int layout of a hub-free pack is cached, never its long-id
-    * table. Measured necessity: at 1.67e9 pre-assembly rows on 2x12 GB
+    * Only the int layout is cached, never the long-id table it is
+    * assembled from. Measured necessity: at 1.67e9 pre-assembly rows on 2x12 GB
     * executors, caching the long-array table (13.4 GB) while the pack sort
     * runs drove execution memory to zero; the int table (6.7 GB) fits. */
   /** `partitions`: pack-shuffle output count (defaults to the session's
@@ -151,48 +151,31 @@ object PackedAdjacency {
     * exactly what the join would assign — so no broadcast-build job runs.
     * Hub graphs keep the join. */
   /** `numbering`: the caller's state ids (an own-pack build): position i
-    * of the pack is vertex numbering(i). Without it a hub-free build
-    * numbers itself from its degree collect (see the object doc). Ignored
-    * on hub graphs. */
+    * of the pack is vertex numbering(i). Without it the build numbers
+    * itself from its degree collect (see the object doc). */
   def build(sym: DataFrame, key: String, weighted: Boolean = false,
             segCap: Int = 1 << 20,
             partitions: Option[Int] = None,
             cachePartitions: Option[Int] = None,
             degOpt: Option[DataFrame] = None,
             degrees: Option[DegreeSummary] = None,
-            numbering: Option[Array[Long]] = None): PackedAdj =
-    pack(sym, key, weighted, segCap, partitions, cachePartitions, degOpt, degrees,
-      numbering, numbered = true)
-
-  /** build()'s long-id layout whatever the degrees: the hash kernels'
-    * input, which specs and plan dumps set against the numbered layout of
-    * the same hub-free graph. */
-  private[graft] def buildLongIds(sym: DataFrame, key: String, weighted: Boolean = false,
-                                  segCap: Int = 1 << 20): PackedAdj =
-    pack(sym, key, weighted, segCap, None, None, None, None, None, numbered = false)
-
-  private def pack(sym: DataFrame, key: String, weighted: Boolean, segCap: Int,
-                   partitions: Option[Int], cachePartitions: Option[Int],
-                   degOpt: Option[DataFrame], degrees: Option[DegreeSummary],
-                   numbering: Option[Array[Long]], numbered: Boolean): PackedAdj = {
+            numbering: Option[Array[Long]] = None): PackedAdj = {
     val spark = sym.sparkSession
     import spark.implicits._
     val nbr = if (key == "src") "dst" else "src"
     lazy val degAgg = degOpt.getOrElse(sym.groupBy(col(key)).agg(count(lit(1)).as("d")))
-    def segsOf(maxDeg: Long): Int = math.max(1L, (maxDeg + segCap - 1) / segCap).toInt
     // Stats come from the V-row degree frame, NOT from scanning the packed
     // table afterwards: maxSegs decides the layout before anything is
     // cached. A build that numbers itself collects the whole frame, which
     // is its numbering, its degrees and its summary at once.
-    val own = Option.when(
-        numbered && numbering.isEmpty && degrees.forall(s => segsOf(s.maxDeg) == 1)) {
+    val own = Option.when(numbering.isEmpty) {
       val c = Columns.of(degAgg.select(col(key), col("d")))
       (c.longs(0), c.longs(1))
     }
     val st = degrees.orElse(own.map(o => DegreeSummary.of(o._2)))
       .getOrElse(DegreeSummary.of(degAgg))
-    val maxSegs = segsOf(st.maxDeg)
-    val ids = if (numbered && maxSegs == 1) numbering.orElse(own.map(_._1)) else None
+    val maxSegs = math.max(1L, (st.maxDeg + segCap - 1) / segCap).toInt
+    val ids = numbering.getOrElse(own.get._1)
     val (input, segs) =
       if (maxSegs == 1) (sym, Seq(lit(0L).as("seg"), lit(1).as("nsegs")))
       else {
@@ -211,29 +194,28 @@ object PackedAdjacency {
     // never carries it — at 1.67e9 pre-assembly rows that column alone is
     // ~13 GB of shuffle spill for bytes the pack then discards.
     val rows = (if (weighted) keyed else keyed.withColumn("w", lit(0.0))).as[NbrRow]
-    val posB = ids.map(a => spark.sparkContext.broadcast(
-      StateMap.longLong(a, Array.tabulate(a.length)(_.toLong), a.length)))
-    val (layout, assembled) = posB match {
-      case Some(b) => ("myIdx", rows.mapPartitions { it =>
-        val m = b.value
-        segments(it, weighted).map { case (id, _, nb, wt) =>
-          (id, positionOf(m, id), nb.map(positionOf(m, _)), wt)
-        }
-      }.toDF())
-      case None => ("nsegs", rows.mapPartitions(segments(_, weighted)).toDF())
-    }
-    val packed0 = assembled.toDF("id", layout, "nbrs", "wts")
-      .select((Seq(col("id"), col(layout), col("nbrs")) ++
-        (if (weighted) Seq(col("wts")) else Nil)): _*)
+    val posB = spark.sparkContext.broadcast(
+      StateMap.longLong(ids, Array.tabulate(ids.length)(_.toLong), ids.length))
+    val packed0 = rows.mapPartitions { it =>
+      val m = posB.value
+      segments(it, weighted).map { case (id, ns, nb, wt) =>
+        (id, positionOf(m, id), ns, nb.map(positionOf(m, _)), wt)
+      }
+    }.toDF("id", "myIdx", "nsegs", "nbrs", "wts").select(layout(maxSegs, weighted): _*)
     val packed1 = cachePartitions.fold(packed0)(n => packed0.repartition(n, col("id")))
     packed1.persist()
     packed1.count()
     // unpersist, not destroy: a lost cache partition re-runs the assembly,
     // which still needs the map re-shippable.
-    posB.foreach(_.unpersist())
-    PackedAdj(packed1, maxSegs, weighted, st.degSum, st.vertices, ids,
-      if (numbering.isEmpty) own.map(_._2) else None)
+    posB.unpersist()
+    PackedAdj(packed1, maxSegs, weighted, st.degSum, st.vertices, ids, own.map(_._2))
   }
+
+  /** The cached columns: (id, myIdx[, nsegs], nbrs[, wts]) — `nsegs` only
+    * on a hub pack, so a hub-free pack's rows and plans never carry it. */
+  private def layout(maxSegs: Int, weighted: Boolean): Seq[Column] =
+    Seq(col("id"), col("myIdx")) ++ (if (maxSegs > 1) Seq(col("nsegs")) else Nil) ++
+      Seq(col("nbrs")) ++ (if (weighted) Seq(col("wts")) else Nil)
 
   /** Position of vertex `k` in the numbering `m`, -1 outside it. */
   private[graft] def positionOf(m: StateMap.LongLongMap, k: Long): Int = {
@@ -266,30 +248,31 @@ object PackedAdjacency {
       }
     }
 
-  /** Renumber a numbered pack: the row at pack position p moves to
-    * `to(p)` (-1 = outside the new numbering `ids`), in `myIdx` and in
-    * every neighbor array. Neighbor order is PRESERVED, so per-vertex
-    * float accumulation order — and every kernel decision — is unchanged.
-    * One scan of the cached int layout; the caller releases the copy. */
+  /** Renumber a pack: the row at pack position p moves to `to(p)` (-1 =
+    * outside the new numbering `ids`), in `myIdx` and in every neighbor
+    * array; a hub pack's `nsegs` rides along. Neighbor order is
+    * PRESERVED, so per-vertex float accumulation order — and every kernel
+    * decision — is unchanged. One scan of the cached int layout; the
+    * caller releases the copy. */
   def reindex(packed: PackedAdj, ids: Array[Long], to: Array[Int]): PackedAdj = {
-    require(packed.ids.isDefined, "reindex requires a numbered (hub-free) pack")
     val spark = packed.df.sparkSession
     import spark.implicits._
     val toB = spark.sparkContext.broadcast(to)
+    val nsegs = if (packed.maxSegs > 1) col("nsegs") else lit(1)
     val wts = if (packed.weighted) col("wts") else lit(null).cast("array<double>")
-    val out = packed.df.select(col("id"), col("myIdx"), col("nbrs"), wts.as("wts"))
-      .as[(Long, Int, Array[Int], Array[Double])]
+    val out = packed.df.select(col("id"), col("myIdx"), nsegs.as("nsegs"), col("nbrs"),
+        wts.as("wts"))
+      .as[(Long, Int, Int, Array[Int], Array[Double])]
       .mapPartitions { it =>
         val t = toB.value
         def at(p: Int): Int = if (p < 0) -1 else t(p)
-        it.map { case (id, my, nb, wt) => (id, at(my), nb.map(at), wt) }
-      }.toDF("id", "myIdx", "nbrs", "wts")
-      .select((Seq(col("id"), col("myIdx"), col("nbrs")) ++
-        (if (packed.weighted) Seq(col("wts")) else Nil)): _*)
+        it.map { case (id, my, ns, nb, wt) => (id, at(my), ns, nb.map(at), wt) }
+      }.toDF("id", "myIdx", "nsegs", "nbrs", "wts")
+      .select(layout(packed.maxSegs, packed.weighted): _*)
       .persist()
     out.count()
     toB.unpersist()
-    packed.copy(df = out, ids = Some(ids), deg = None)
+    packed.copy(df = out, ids = ids, deg = None)
   }
 }
 

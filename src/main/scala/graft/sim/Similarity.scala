@@ -199,8 +199,8 @@ object Similarity {
     *
     * Cache ownership (ADVICE r5): the RETURNED frame is pinned (it must
     * survive this call) and the CALLER owns that cache — a sweep calling
-    * annRecall repeatedly (RecallCurve) must release each result once
-    * consumed or it holds one dead cached RDD per call; the internal
+    * annRecall repeatedly (a recall-vs-probe curve) must release each
+    * result once consumed or it holds one dead cached RDD per call; the internal
     * exact-arm scratch is released here before returning. */
   def annRecall(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCells: Int = 8, nProbe: Int = 2,

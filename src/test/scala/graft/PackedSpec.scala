@@ -4,15 +4,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.algo.{Hedonic, LabelPropagation, PageRank}
 import graft.graph.{GraphOps, PackedAdjacency}
-import graft.util.StateMap
+import graft.util.{DeltaState, StateMap}
 
 /** Pins the CSR-packed superstep plans (PackedAdjacency + PackedKernels)
   * decision-identical to the row-based broadcast-map plans they replace,
   * on both branches: the single-segment kernel path AND the multi-segment
   * (hub) partial-counts path, forced by building with segCap = 2 so every
-  * vertex is segmented. The row-based plans are themselves pinned to the
-  * shuffle strategy and the serial oracle by StrategySpec/AlgoSpec, so
-  * this closes the identity chain serial -> shuffle -> row-map -> packed. */
+  * vertex of degree > 2 is segmented. The row-based plans are themselves
+  * pinned to the shuffle strategy and the serial oracle by
+  * StrategySpec/AlgoSpec, so this closes the identity chain serial ->
+  * shuffle -> row-map -> packed. */
 class PackedSpec extends SparkSpec {
 
   private def sc = spark.sparkContext
@@ -32,6 +33,20 @@ class PackedSpec extends SparkSpec {
   private def rows3(df: DataFrame): Set[(Long, Long, Boolean)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
 
+  /** A delta payload at epoch 0 whose base is `comms` (by position) and
+    * the community sizes `sizes`. */
+  private def payloadOf(comms: Array[Long], sizes: Seq[(Long, Long)]) = {
+    val base = sc.broadcast(new DeltaState.FullState(comms.clone(),
+      sizes.map(_._1).toArray, sizes.map(_._2).toArray))
+    new StateMap.Ref(sc.broadcast(new DeltaState.Payload(DeltaState.newRunId(), 0, 0, base,
+      Array.empty[Int], Array.empty[Long], Array.empty[Long], Array.empty[Long])))
+  }
+
+  // The state's ids and values, by position: a pack numbered by them maps
+  // vertex 33 (outside the state) to -1.
+  private val stateIds = stateSeq.map(_._1).toArray
+  private def stateComms = stateSeq.map(_._2).toArray
+
   test("hedonic: packed kernel and hub branch match the row-based plan") {
     val e = edgesOf(Fixtures.zachary)
     val symDf = GraphOps.symmetrize(e).select("src", "dst")
@@ -42,9 +57,10 @@ class PackedSpec extends SparkSpec {
     val expect = rows3(Hedonic.stepPlanMap(symDf, commB, sizeB, alpha, gate))
     assert(expect.nonEmpty) // the fixture must actually exercise movers
     for (cap <- Seq(1 << 20, 2)) {
-      val p = PackedAdjacency.buildLongIds(symDf, "src", weighted = false, segCap = cap)
+      val p = PackedAdjacency.build(symDf, "src", segCap = cap, numbering = Some(stateIds))
       if (cap == 2) assert(p.maxSegs > 1) else assert(p.maxSegs == 1)
-      val got = rows3(Hedonic.stepPlanPacked(p, commB, sizeB, alpha, gate))
+      val got = rows3(Hedonic.stepPlanPackedIdxDelta(p,
+        payloadOf(stateComms, sizesOf(stateSeq)), alpha, gate))
       assert(got == expect, s"segCap=$cap")
       p.unpersist()
     }
@@ -68,9 +84,11 @@ class PackedSpec extends SparkSpec {
       Hedonic.stepPlanMap(symDf.select("src", "dst"), commB, sizeB, alpha, gate))
     assert(expect != unweighted)
     for (cap <- Seq(1 << 20, 2)) {
-      val p = PackedAdjacency.buildLongIds(symDf, "src", weighted = true, segCap = cap)
+      val p = PackedAdjacency.build(symDf, "src", weighted = true, segCap = cap,
+        numbering = Some(stateIds))
       if (cap == 2) assert(p.maxSegs > 1)
-      val got = rows3(Hedonic.stepPlanPacked(p, commB, sizeB, alpha, gate))
+      val got = rows3(Hedonic.stepPlanPackedIdxDelta(p,
+        payloadOf(stateComms, sizesOf(stateSeq)), alpha, gate))
       assert(got == expect, s"segCap=$cap")
       p.unpersist()
     }
@@ -90,8 +108,10 @@ class PackedSpec extends SparkSpec {
       val expect = rows3(LabelPropagation.stepPlanMap(symDf, labB, weighted, gate))
       assert(expect.nonEmpty)
       for (cap <- Seq(1 << 20, 2)) {
-        val p = PackedAdjacency.buildLongIds(symDf, "src", weighted, segCap = cap)
-        val got = rows3(LabelPropagation.stepPlanPacked(p, labB, gate))
+        val p = PackedAdjacency.build(symDf, "src", weighted, segCap = cap,
+          numbering = Some(stateIds))
+        val got = rows3(LabelPropagation.stepPlanPackedIdxDelta(p, payloadOf(stateComms, Nil),
+          gate))
         assert(got == expect, s"weighted=$weighted segCap=$cap")
         p.unpersist()
       }
@@ -118,9 +138,17 @@ class PackedSpec extends SparkSpec {
       val rankB = new StateMap.Ref(sc.broadcast(ldMap(rankSeq)))
       val expect = PageRank.iterPlanMap(symDf, rankB, degB, v, cfg)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      // By position: the pre-divided rank/deg unweighted, rank and
+      // strength weighted (see PackedKernels.kContribIdx).
+      val (ranks, degs) = (rankSeq.map(_._2).toArray, degSeq.map(_._2).toArray)
+      val qB = new StateMap.Ref(sc.broadcast(
+        if (weighted) ranks else ranks.indices.map(i => ranks(i) / degs(i)).toArray))
+      val degArrB = Option.when(weighted)(new StateMap.Ref(sc.broadcast(degs)))
       for (cap <- Seq(1 << 20, 2)) {
-        val p = PackedAdjacency.buildLongIds(symDf, "dst", weighted, segCap = cap)
-        val got = PageRank.iterPlanPacked(p, rankB, degB, v, cfg)
+        val p = PackedAdjacency.build(symDf, "dst", weighted, segCap = cap,
+          numbering = Some(degSeq.map(_._1).toArray))
+        if (cap == 2) assert(p.maxSegs > 1)
+        val got = PageRank.iterPlanPackedIdx(p, qB, degArrB, v, cfg)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(got.keySet == expect.keySet, s"weighted=$weighted segCap=$cap")
         // Same arithmetic, summation order differs (sorted array vs row
@@ -158,7 +186,7 @@ class PackedSpec extends SparkSpec {
     assert(gotH == expectH)
     val expectL = rows3(LabelPropagation.stepPlanMap(symDf, commB, false, gate))
       .map { case (id, l, g) => (id, l, g) }
-    val gotL = rows3(LabelPropagation.stepPlanPackedIdx(pidx, commArrB, gate))
+    val gotL = rows3(LabelPropagation.stepPlanPackedIdxDelta(pidx, payloadOf(comms, Nil), gate))
     assert(gotL == expectL)
     pidx.unpersist()
   }
@@ -207,17 +235,24 @@ class PackedSpec extends SparkSpec {
     val expect1 = rows3(Hedonic.stepPlanPackedIdx(pidx, commArrB1, sizeB1, alpha, gate))
     val got1 = rows3(Hedonic.stepPlanPackedIdxDelta(pidx, stateB, alpha, gate))
     assert(got1 == expect1)
-    // LPA delta twin (labels in the comms lane, size lane empty): parity
-    // against the bare-array plan at the SAME delta epoch
-    val labArrB1 = new StateMap.Ref(sc.broadcast(comms1.clone()))
-    val expectL = rows3(LabelPropagation.stepPlanPackedIdx(pidx, labArrB1, gate))
+    // LPA delta plan (labels in the comms lane, size lane empty): parity
+    // against the row plan over the same labels, at the full base (epoch
+    // 0) and after one round of overrides (epoch 1, in place)
+    val lRun = DeltaState.newRunId()
     val lBase = sc.broadcast(new DeltaState.FullState(comms.clone(),
       Array.empty[Long], Array.empty[Long]))
     val lState = new StateMap.Ref(sc.broadcast(new DeltaState.Payload(
-      DeltaState.newRunId(), 1, 0, lBase, Array(0), Array(comms(5)),
+      lRun, 0, 0, lBase, Array.empty[Int], Array.empty[Long],
       Array.empty[Long], Array.empty[Long])))
-    val gotL = rows3(LabelPropagation.stepPlanPackedIdxDelta(pidx, lState, gate))
-    assert(gotL == expectL)
+    val expectL0 = rows3(LabelPropagation.stepPlanMap(symDf,
+      new StateMap.Ref(sc.broadcast(llMap(stateSeq))), false, gate))
+    assert(rows3(LabelPropagation.stepPlanPackedIdxDelta(pidx, lState, gate)) == expectL0)
+    lState.value = sc.broadcast(new DeltaState.Payload(
+      lRun, 1, 0, lBase, Array(0), Array(3L), Array.empty[Long], Array.empty[Long]))
+    val expectL1 = rows3(LabelPropagation.stepPlanMap(symDf,
+      new StateMap.Ref(sc.broadcast(llMap(stateSeq.updated(0, (ids(0), 3L))))), false, gate))
+    assert(expectL1 != expectL0) // the override must change a decision
+    assert(rows3(LabelPropagation.stepPlanPackedIdxDelta(pidx, lState, gate)) == expectL1)
     pidx.unpersist()
   }
 
@@ -237,16 +272,15 @@ class PackedSpec extends SparkSpec {
     try {
       val e = edgesOf(Fixtures.zachary)
       val symDf = GraphOps.symmetrize(e).select("src", "dst")
-      val p = PackedAdjacency.buildLongIds(symDf, "src")
-      val commB = new StateMap.Ref(sc.broadcast(llMap(stateSeq)))
-      val sizeB = new StateMap.Ref(sc.broadcast(llMap(sizesOf(stateSeq))))
-      val degB = new StateMap.Ref(sc.broadcast(ldMap((0L to 33L).map(i => (i, 2.0)))))
-      val rankB = new StateMap.Ref(sc.broadcast(ldMap((0L to 33L).map(i => (i, 1.0 / 34)))))
-      val h = Hedonic.stepPlanPacked(p, commB, sizeB, 0.1, lit(true))
+      val p = PackedAdjacency.build(symDf, "src")
+      assert(p.maxSegs == 1)
+      val state = payloadOf(stateComms, sizesOf(stateSeq))
+      val qB = new StateMap.Ref(sc.broadcast(Array.fill(34)(1.0 / 68)))
+      val h = Hedonic.stepPlanPackedIdxDelta(p, state, 0.1, lit(true))
       assert(spine(h) == 0, h.queryExecution.executedPlan.toString)
-      val l = LabelPropagation.stepPlanPacked(p, commB, lit(true))
+      val l = LabelPropagation.stepPlanPackedIdxDelta(p, state, lit(true))
       assert(spine(l) == 0, l.queryExecution.executedPlan.toString)
-      val pr = PageRank.iterPlanPacked(p, rankB, degB, 34.0, PageRank.Config())
+      val pr = PageRank.iterPlanPackedIdx(p, qB, None, 34.0, PageRank.Config())
       assert(spine(pr) == 0, pr.queryExecution.executedPlan.toString)
       p.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)

@@ -154,7 +154,7 @@ class SharedPackSpec extends SparkSpec {
     try {
       val e = edgesOf(Fixtures.zachary)
       val pack = PackedAdjacency.build(GraphOps.symmetrize(e).select("src", "dst"), "src")
-      assert(pack.maxSegs == 1 && pack.ids.isDefined)
+      assert(pack.maxSegs == 1 && pack.ids.length == 34)
       // PageRank: degrees come with the pack, the output frame is lazy
       for (k <- Seq(1, 4)) {
         val ((_, iters), jobs) = jobsOf(s"shared-pagerank-$k")(
@@ -184,6 +184,58 @@ class SharedPackSpec extends SparkSpec {
       assert(toMap(shared) == toMap(Hedonic.run(e, init, cfg)._1))
       pack.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("hedonic over a shared hub pack submits as many jobs as over the hub-free pack") {
+    withoutAqe {
+      val e = edgesOf(Fixtures.zachary)
+      val sym = GraphOps.symmetrize(e).select("src", "dst")
+      val free = PackedAdjacency.build(sym, "src")
+      val hub = PackedAdjacency.build(sym, "src", segCap = 2)
+      assert(free.maxSegs == 1 && hub.maxSegs > 1)
+      val init = GraphOps.vertices(e).select(col("id"), col("id").as("community"))
+      val cfg = Hedonic.Config(maxSupersteps = 40)
+      val ((mF, metF), jobsF) = jobsOf("hedonic-free-pack")(Hedonic.run(e, init, cfg, Some(free)))
+      val ((mH, metH), jobsH) = jobsOf("hedonic-hub-pack")(Hedonic.run(e, init, cfg, Some(hub)))
+      assert(metF.size > 1)
+      assert(metH.map(m => (m.superstep, m.moved, m.frontier)) ==
+        metF.map(m => (m.superstep, m.moved, m.frontier)))
+      assert(toMap(mH) == toMap(mF))
+      assert(jobsH == jobsF)
+      free.unpersist(); hub.unpersist()
+    }
+  }
+
+  test("a shared hub pack: runs leak no cache, keep the pack, and default-init LPA runs no id job") {
+    withoutAqe {
+      val e = edgesOf(Fixtures.zachary)
+      val pack = PackedAdjacency.build(GraphOps.symmetrize(e).select("src", "dst"), "src",
+        segCap = 2)
+      assert(pack.maxSegs > 1)
+      // lacks pack vertex 33, adds isolated vertex 42: a renumbered copy
+      val misaligned = membersOf((0L to 32L).map(i => (i, i % 3)) :+ ((42L, 42L)))
+      val runs = Seq[(String, () => Long)](
+        "misaligned Hedonic.run" -> (() =>
+          Hedonic.run(e, misaligned, Hedonic.Config(maxSupersteps = 40), Some(pack))._1.count()),
+        "default-init LabelPropagation.run" -> (() =>
+          LabelPropagation.run(e, packedOpt = Some(pack)).count()),
+        "PageRank.runTimed" -> (() => PageRank.runTimed(e,
+          PageRank.Config(fixedIter = Some(5)), packedOpt = Some(pack))._1.count()))
+      runs.foreach { case (who, body) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(body() == 34L, s"$who: wrong row count")
+        assert(pack.df.storageLevel.useMemory, s"shared pack was unpersisted by $who")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$who leaked persistent RDDs: $leaked")
+      }
+      // the state is the pack's numbering: one job per round and no other
+      for (k <- Seq(1, 3)) {
+        val (_, jobs) = jobsOf(s"shared-hub-lpa-$k")(
+          LabelPropagation.run(e, maxIter = k, packedOpt = Some(pack)))
+        assert(jobs == k, s"maxIter=$k")
+      }
+      pack.unpersist()
+    }
   }
 
   test("weighted hedonic honors a weighted shared pack") {

@@ -179,15 +179,14 @@ class StrategySpec extends SparkSpec {
     assert(b == s)
   }
 
-  // --- dense-index vs hash-probe kernel A/B (numbered vs long-id pack) ---
-  // The pack decides the state representation: a numbered hub-free pack
-  // runs the dense-index kernels (bare values array through int position
-  // arrays), a long-id pack the hash kernels (broadcast hash maps). The
-  // hash side gets the long-id layout of the same graph with
-  // copy(maxSegs = 2), whose hub branch then selects no rows, so only the
-  // state representation differs. The shared kernel tails must make every
-  // decision — and every per-superstep counter — identical, unweighted
-  // and weighted.
+  // --- hub-free vs hub pack A/B (one numbered layout, two row shapes) ---
+  // Both sides are numbered packs of the same graph read by the position
+  // kernels. The second is built with segCap = 2, so every vertex of
+  // degree > 2 is split into segments whose partials the hub branch sums
+  // (an aggregate exchange, re-planned each round) before the shared
+  // decide tail. Every decision — and every per-superstep counter — must
+  // be identical, unweighted and weighted; PageRank's segment partials
+  // change only the summation order.
   private def packOf(e: org.apache.spark.sql.Dataset[graft.model.Edge],
                      weighted: Boolean = false): graft.graph.PackedAdj = {
     val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
@@ -195,12 +194,18 @@ class StrategySpec extends SparkSpec {
       graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted)
   }
 
-  private def hashPackOf(e: org.apache.spark.sql.Dataset[graft.model.Edge],
-                         weighted: Boolean = false): graft.graph.PackedAdj = {
+  /** The segCap = 2 hub pack of `e`. The tests below compare the hub-free
+    * pack ("indexed") with it; their names still say "hash" for the second
+    * side, which was the long-id layout that hub packs used before every
+    * pack was numbered, and are kept so their ids stay stable. */
+  private def hubPackOf(e: org.apache.spark.sql.Dataset[graft.model.Edge],
+                        weighted: Boolean = false): graft.graph.PackedAdj = {
     val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    graft.graph.PackedAdjacency.buildLongIds(
-      graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted)
-      .copy(maxSegs = 2)
+    val hub = graft.graph.PackedAdjacency.build(
+      graft.graph.GraphOps.symmetrize(e).select(cols.map(col): _*), "src", weighted,
+      segCap = 2)
+    assert(hub.maxSegs > 1)
+    hub
   }
 
   test("hedonic: indexed and hash packed kernels decide identically") {
@@ -209,7 +214,7 @@ class StrategySpec extends SparkSpec {
       (4L, 1L), (5L, 0L), (6L, 1L), (7L, 5L)))
     val cfg = Hedonic.Config(maxSupersteps = 40)
     val p = packOf(e)
-    val hp = hashPackOf(e)
+    val hp = hubPackOf(e)
     val (mI, metI) = Hedonic.run(e, init, cfg, Some(p))
     val (mH, metH) = Hedonic.run(e, init, cfg, Some(hp))
     assert(toMap(mI) == toMap(mH))
@@ -226,25 +231,44 @@ class StrategySpec extends SparkSpec {
     val init = membersOf((0L to 7L).map(i => (i, i % 3)))
     val cfg = Hedonic.Config(maxSupersteps = 40, weighted = true)
     val p = packOf(wedges, weighted = true)
-    val hp = hashPackOf(wedges, weighted = true)
+    val hp = hubPackOf(wedges, weighted = true)
     val (mI, _) = Hedonic.run(wedges, init, cfg, Some(p))
     val (mH, _) = Hedonic.run(wedges, init, cfg, Some(hp))
     assert(toMap(mI) == toMap(mH))
     p.unpersist(); hp.unpersist()
   }
 
-  test("pagerank: indexed (pre-divided) and hash kernels agree bitwise") {
-    val e = edgesOf(Fixtures.zachary)
-    val cfg = PageRank.Config(fixedIter = Some(20))
-    val p = packOf(e)
-    val hp = hashPackOf(e)
-    val i = PageRank.runTimed(e, cfg, None, Some(p))._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.runTimed(e, cfg, None, Some(hp))._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // Same divisions, same neighbor order: EXACT equality, not allclose.
-    assert(i == h)
+  /** PageRank over the hub-free pack of `e` against its segCap = 2 hub pack
+    * at `cfg`. One round starts from the same ranks on both sides, and a
+    * vertex of degree <= 2 is one segment whose partial the hub branch's
+    * sum returns unchanged, so its round-1 rank is bitwise equal; a split
+    * vertex sums its segment partials in another order, and later rounds
+    * carry that on: PackedSpec's 1e-15 bound. */
+  private def pagerankHubAgrees(e: org.apache.spark.sql.Dataset[graft.model.Edge],
+                                cfg: PageRank.Config): Unit = {
+    val p = packOf(e, cfg.weighted)
+    val hp = hubPackOf(e, cfg.weighted)
+    def ranks(c: PageRank.Config, pack: graft.graph.PackedAdj) =
+      PageRank.runTimed(e, c, None, Some(pack))._1
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val deg = Fixtures.zachary.flatMap { case (u, v) => Seq(u -> v, v -> u) }.distinct
+      .groupBy(_._1).map { case (u, ns) => u -> ns.size }
+    assert(deg.values.exists(_ <= 2) && deg.values.exists(_ > 2))
+    val c1 = cfg.copy(fixedIter = Some(1))
+    val (i1, h1) = (ranks(c1, p), ranks(c1, hp))
+    assert(i1.keySet == h1.keySet)
+    i1.foreach { case (id, r) =>
+      if (deg(id) <= 2) assert(r == h1(id), s"id=$id")
+      else assert(math.abs(r - h1(id)) < 1e-15, s"id=$id")
+    }
+    val (i, h) = (ranks(cfg, p), ranks(cfg, hp))
+    assert(i.keySet == h.keySet)
+    i.foreach { case (id, r) => assert(math.abs(r - h(id)) < 1e-15, s"id=$id") }
     p.unpersist(); hp.unpersist()
+  }
+
+  test("pagerank: indexed (pre-divided) and hash kernels agree bitwise") {
+    pagerankHubAgrees(edgesOf(Fixtures.zachary), PageRank.Config(fixedIter = Some(20)))
   }
 
   test("pagerank: WEIGHTED indexed and hash kernels agree bitwise") {
@@ -252,26 +276,18 @@ class StrategySpec extends SparkSpec {
     val wedges = Fixtures.zachary.map { case (u, v) =>
       graft.model.Edge(u, v, ((u + 2 * v) % 5 + 1).toDouble)
     }.toDS()
-    val cfg = PageRank.Config(fixedIter = Some(20), weighted = true)
-    val p = packOf(wedges, weighted = true)
-    val hp = hashPackOf(wedges, weighted = true)
-    val i = PageRank.runTimed(wedges, cfg, None, Some(p))._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = PageRank.runTimed(wedges, cfg, None, Some(hp))._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(i == h)
-    p.unpersist(); hp.unpersist()
+    pagerankHubAgrees(wedges, PageRank.Config(fixedIter = Some(20), weighted = true))
   }
 
   test("lpa: indexed and hash packed kernels produce identical labels") {
     val e = edgesOf(pairs)
     val p = packOf(e)
-    val hp = hashPackOf(e)
+    val hp = hubPackOf(e)
     val i = toMap(LabelPropagation.run(e, packedOpt = Some(p)))
     val h = toMap(LabelPropagation.run(e, packedOpt = Some(hp)))
     assert(i == h)
     val pw = packOf(e, weighted = true)
-    val hpw = hashPackOf(e, weighted = true)
+    val hpw = hubPackOf(e, weighted = true)
     val iw = toMap(LabelPropagation.run(e, weighted = true, packedOpt = Some(pw)))
     val hw = toMap(LabelPropagation.run(e, weighted = true,
       packedOpt = Some(hpw)))
@@ -306,6 +322,28 @@ class StrategySpec extends SparkSpec {
     hub.unpersist()
   }
 
+  test("hub packs: a state that is not the pack's vertex set matches the shuffle path") {
+    // The init lacks pack vertex 7 and adds isolated vertex 42, so the run
+    // renumbers the hub pack to the state (reindex carries nsegs; vertex 7
+    // becomes -1). segCap = 2 segments vertices 2, 3 and 5.
+    val e = edgesOf(pairs)
+    val hub = graft.graph.PackedAdjacency.build(
+      graft.graph.GraphOps.symmetrize(e).select("src", "dst"), "src", segCap = 2)
+    assert(hub.maxSegs == 2)
+    val init = membersOf((0L to 6L).map(i => (i, i % 3)) :+ ((42L, 42L)))
+    val cfg = Hedonic.Config(maxSupersteps = 40)
+    val (mH, metH) = Hedonic.run(e, init, cfg, Some(hub))
+    val (mS, metS) = Hedonic.run(e, init, cfg.copy(broadcastStateMaxRows = 0L))
+    assert(toMap(mH).keySet == (0L to 6L).toSet + 42L)
+    assert(toMap(mH) == toMap(mS))
+    assert(metH.map(m => (m.superstep, m.moved, m.frontier)) ==
+      metS.map(m => (m.superstep, m.moved, m.frontier)))
+    val labels = init.withColumnRenamed("community", "label")
+    assert(toMap(LabelPropagation.run(e, Some(labels), packedOpt = Some(hub))) ==
+      toMap(LabelPropagation.run(e, Some(labels), broadcastStateMaxRows = 0L)))
+    hub.unpersist()
+  }
+
   test("indexed superstep plans contain zero spine shuffle exchanges") {
     import graft.graph.{GraphOps, PackedAdjacency}
     import graft.util.StateMap
@@ -324,7 +362,9 @@ class StrategySpec extends SparkSpec {
       val qB = new StateMap.Ref(sc.broadcast(Array.fill(8)(0.125)))
       val pplan = PageRank.iterPlanPackedIdx(pidx, qB, None, 8.0, PageRank.Config())
       assert(spineShuffles(pplan) == 0, pplan.queryExecution.executedPlan.toString)
-      val lplan = LabelPropagation.stepPlanPackedIdx(pidx, commArrB, lit(true))
+      val lplan = LabelPropagation.stepPlanPackedIdxDelta(pidx,
+        new StateMap.Ref[org.apache.spark.broadcast.Broadcast[graft.util.DeltaState.Payload]](null),
+        lit(true))
       assert(spineShuffles(lplan) == 0, lplan.queryExecution.executedPlan.toString)
       pidx.unpersist()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)

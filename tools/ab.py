@@ -3,6 +3,7 @@
 
     python3 tools/ab.py --workload <name> [--pairs 10] [--seed 1] [--base HEAD]
                         [--drift <metric>] [--changes]
+    python3 tools/ab.py --loc [--base HEAD]
 
 Exports the base revision with `git archive` into a temporary directory and
 runs `perfbench/run.py --trace 0` of each side for `--pairs` pairs on
@@ -22,10 +23,17 @@ change/base ratios and their median are the drift index: how far the host's
 speed moved between the two runs of a pair, apart from the change.
 `--changes` prints, last, one paragraph for CHANGES.md with every metric's
 medians, wins, base IQR and verdict, and the drift index.
+
+`--loc` runs no benchmark. It prints the code-line count CHANGES.md uses
+(`cat $(git ls-files 'src/main/scala/*.scala') | grep -vcE
+'^\s*($|//|\*|/\*)'`: lines that are not blank and do not start a comment)
+for the base revision and the working tree, per package under
+`src/main/scala/graft/` and in total.
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -52,6 +60,50 @@ def run_side(checkout, target, workload, seed, seconds):
     return {k: v["value"] for k, v in json.loads(lines[-1])["metrics"].items()}
 
 
+COMMENT_OR_BLANK = re.compile(r"\s*($|//|\*|/\*)")
+SCALA_MAIN = "src/main/scala/"
+
+
+def code_lines(text):
+    """Lines that are neither blank nor start a comment (the CHANGES.md count)."""
+    return sum(1 for line in text.splitlines() if not COMMENT_OR_BLANK.match(line))
+
+
+def package_of(path):
+    """`algo` for src/main/scala/graft/algo/X.scala, `graft` for files directly in graft/."""
+    parts = path[len(SCALA_MAIN):].split("/")
+    return parts[1] if len(parts) > 2 and parts[0] == "graft" else parts[0]
+
+
+def loc_by_package(base):
+    """{package: code lines} of the revision `base`, or of the working tree when None."""
+    git = ["git", "-C", str(ROOT)]
+    if base is None:
+        files = subprocess.run(git + ["ls-files", "--", SCALA_MAIN + "*.scala"], check=True,
+                               stdout=subprocess.PIPE, text=True).stdout.split()
+        read = lambda f: (ROOT / f).read_text() if (ROOT / f).exists() else ""
+    else:
+        files = subprocess.run(git + ["ls-tree", "-r", "--name-only", base, "--", SCALA_MAIN],
+                               check=True, stdout=subprocess.PIPE, text=True).stdout.split()
+        files = [f for f in files if f.endswith(".scala")]
+        read = lambda f: subprocess.run(git + ["show", f"{base}:{f}"], check=True,
+                                        stdout=subprocess.PIPE, text=True).stdout
+    counts = {}
+    for f in files:
+        counts[package_of(f)] = counts.get(package_of(f), 0) + code_lines(read(f))
+    return counts
+
+
+def print_loc(base):
+    b, c = loc_by_package(base), loc_by_package(None)
+    print(f"code lines (CHANGES.md count), base {base} -> working tree")
+    for pkg in sorted(set(b) | set(c)):
+        x, y = b.get(pkg, 0), c.get(pkg, 0)
+        print(f"  {pkg:<12} {x:>6} -> {y:>6} ({y - x:+d})")
+    x, y = sum(b.values()), sum(c.values())
+    print(f"  {'total':<12} {x:>6} -> {y:>6} ({y - x:+d})")
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0]
@@ -75,13 +127,20 @@ def verdict(metric, base, change):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--base", default="HEAD")
     ap.add_argument("--drift", help="a metric the change does not touch (drift index)")
     ap.add_argument("--changes", action="store_true", help="print a CHANGES.md fragment")
+    ap.add_argument("--loc", action="store_true",
+                    help="print code-line counts of the base and the working tree, and exit")
     a = ap.parse_args()
+    if a.loc:
+        print_loc(a.base)
+        return
+    if not a.workload:
+        ap.error("--workload is required unless --loc is given")
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     seconds = bench["run_seconds"]
 
