@@ -72,8 +72,12 @@ object ConnectedComponents {
       .dropDuplicates("src", "dst")
   }
 
+  /** The default driver budget in edges (16 B each on the driver), shared
+    * with TriangleCount.count. */
+  private[algo] val DriverEdges = 4000000L
+
   def run(edges: Dataset[Edge], maxIter: Int = 50,
-          maxDriverEdges: Long = 4000000L): DataFrame = {
+          maxDriverEdges: Long = DriverEdges): DataFrame = {
     // Scale-gated strategy split (round 6) — the engine's broadcast-state
     // playbook (Hedonic.run / LabelPropagation.run): a pair table within
     // the driver budget is resolved with ONE collect + union-find instead

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.algo.{ConnectedComponents, Hedonic, LabelPropagation, PageRank, TriangleCount}
+import graft.algo.{ConnectedComponents, Hedonic, LabelPropagation, PageRank}
 import graft.graph.GraphOps
 
 /** Driver-side serial re-implementations used as schedule-independent
@@ -331,27 +331,5 @@ class LabelPropagationSpec extends SparkSpec {
   test("deterministic across reruns") {
     val e = edgesOf(Fixtures.zachary)
     assert(toMap(LabelPropagation.run(e)) == toMap(LabelPropagation.run(e)))
-  }
-}
-
-class TriangleCountSpec extends SparkSpec {
-
-  test("K4 has 4 triangles; Zachary has 45; kite matches serial oracle") {
-    val k4 = for (i <- 0L until 4L; j <- (i + 1) until 4L) yield (i, j)
-    assert(TriangleCount.count(edgesOf(k4)) == 4L)
-    assert(TriangleCount.count(edgesOf(Fixtures.zachary)) == 45L)
-    assert(TriangleCount.count(edgesOf(Fixtures.kite)) ==
-      SerialOracle.triangles(Fixtures.kite))
-  }
-
-  test("per-vertex counts sum to 3x total") {
-    val e = edgesOf(Fixtures.zachary)
-    val per = TriangleCount.perVertex(e).agg(sum("triangles")).collect()(0).getLong(0)
-    assert(per == 3 * 45L)
-  }
-
-  test("triangle-free graph counts zero") {
-    val chain = (0L until 10L).map(i => (i, i + 1))
-    assert(TriangleCount.count(edgesOf(chain)) == 0L)
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
-import graft.algo.{ConnectedComponents, Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral}
+import graft.algo.{ConnectedComponents, Hedonic, HedonicFrontier, LabelPropagation, PageRank, Spectral,
+  TriangleCount}
 import graft.graph.{GraphOps, PackedAdjacency}
 
 /** Pack-once, run-many: a caller-built CSR pack of the symmetrized edges is
@@ -96,12 +97,18 @@ class SharedPackSpec extends SparkSpec {
         (() => Hedonic.run(e, misaligned, cfgH, Some(pack))._1.count()),
       "misaligned LabelPropagation.run on the shared pack" -> (() => LabelPropagation.run(e,
         Some(misaligned.withColumnRenamed("community", "label")), packedOpt = Some(pack)).count()))
+    // TriangleCount: the driver CSR, and the distributed plan after a gate
+    // that proved the 9 edges over a budget of 3. Their result is the
+    // count of the two triangles, not a row count.
+    val runs = others.map { case (who, body) => (who, 8L, body) } ++ Seq[(String, Long, () => Long)](
+      ("TriangleCount.count", 2L, () => TriangleCount.count(e)),
+      ("TriangleCount.count over budget", 2L, () => TriangleCount.countWithin(e, 3L)))
     // Leaks are checked per run: several runs persist the same degree
     // plan, and a later run's unpersist would remove an earlier run's
     // leaked entry before a check at the end could see it.
-    others.foreach { case (who, body) =>
+    runs.foreach { case (who, want, body) =>
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      assert(body() == 8L, s"$who: wrong row count")
+      assert(body() == want, s"$who: wrong result")
       assert(pack.df.storageLevel.useMemory, s"shared pack was unpersisted by $who")
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty, s"$who leaked persistent RDDs: $leaked")

@@ -2,7 +2,7 @@
 """Interleaved A/B of the benchmark: a base revision against the working tree.
 
     python3 tools/ab.py --workload <name> [--pairs 10] [--seed 1] [--base HEAD]
-                        [--drift <metric>] [--changes]
+                        [--drift <metric>] [--changes] [--trace]
     python3 tools/ab.py --loc [--base HEAD]
 
 Exports the base revision with `git archive` into a temporary directory and
@@ -17,6 +17,11 @@ both medians, the change's wins, the base's quartiles and a verdict:
 than the metric's bound, `unchanged` when every pair reads the same,
 `resolved` when the medians differ by more than the base's interquartile
 range, `unresolved` otherwise.
+
+`--trace` runs both sides with `--trace 1` instead and prints the same
+per-run values, medians, wins and base quartiles for every `per_layer` metric
+of BENCHMARK.json that the runs report. Those metrics have no bound, so the
+verdict is only `unchanged`, `resolved` or `unresolved`.
 
 `--drift <metric>` names a metric the change does not touch. Its per-pair
 change/base ratios and their median are the drift index: how far the host's
@@ -44,11 +49,11 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 
 
-def run_side(checkout, target, workload, seed, seconds):
+def run_side(checkout, target, workload, seed, seconds, trace):
     """One benchmark run; its metrics as {name: value}, or None on failure."""
     env = dict(os.environ, CARGO_TARGET_DIR=str(target))
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", "1" if trace else "0"]
     res = subprocess.run(cmd, cwd=checkout, env=env, stdout=subprocess.PIPE,
                          stderr=subprocess.PIPE, text=True)
     lines = res.stdout.splitlines()
@@ -115,7 +120,7 @@ def verdict(metric, base, change):
     lower = metric["better"] == "lower"
     mb, mc = statistics.median(base), statistics.median(change)
     worse = (mc - mb) if lower else (mb - mc)
-    if mb != 0 and worse / abs(mb) > metric["bound"]:
+    if "bound" in metric and mb != 0 and worse / abs(mb) > metric["bound"]:
         return "worse than bound"
     q1, q3 = quartiles(base)
     if base == change:
@@ -133,6 +138,8 @@ def main():
     ap.add_argument("--base", default="HEAD")
     ap.add_argument("--drift", help="a metric the change does not touch (drift index)")
     ap.add_argument("--changes", action="store_true", help="print a CHANGES.md fragment")
+    ap.add_argument("--trace", action="store_true",
+                    help="run traced and compare the per-layer metrics (no bounds)")
     ap.add_argument("--loc", action="store_true",
                     help="print code-line counts of the base and the working tree, and exit")
     a = ap.parse_args()
@@ -163,7 +170,7 @@ def main():
             seed = a.seed + i
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                runs[side].append(run_side(*sides[side], a.workload, seed, seconds))
+                runs[side].append(run_side(*sides[side], a.workload, seed, seconds, a.trace))
             print(f"# pair {i + 1}/{a.pairs} seed {seed} done ({order[0]} first)",
                   file=sys.stderr)
     finally:
@@ -173,7 +180,7 @@ def main():
     seeds = f"seeds {a.seed}..{a.seed + a.pairs - 1}"
     print(f"workload {a.workload}, base {a.base}, {seeds}, {len(ok)}/{a.pairs} pairs complete")
     summaries = []
-    for metric in bench["end_to_end"]:
+    for metric in bench["per_layer" if a.trace else "end_to_end"]:
         name = metric["name"]
         idx = [i for i in ok if name in runs["base"][i] and name in runs["change"][i]]
         if not idx:
@@ -187,7 +194,8 @@ def main():
         rel = (mc - mb) / mb * 100 if mb else 0.0
         v = verdict(metric, base, change)
         summaries.append((name, mb, mc, rel, wins, len(idx), q3 - q1, v))
-        print(f"\n{name} ({metric['unit']}, {metric['better']} is better, bound {metric['bound']})")
+        bound = f", bound {metric['bound']}" if "bound" in metric else ""
+        print(f"\n{name} ({metric['unit']}, {metric['better']} is better{bound})")
         print("  base:   " + " ".join(f"{x:.4g}" for x in base))
         print("  change: " + " ".join(f"{x:.4g}" for x in change))
         print(f"  median {mb:.4g} -> {mc:.4g} ({rel:+.1f}%), change wins {wins}/{len(idx)}, "
@@ -208,7 +216,8 @@ def main():
         parts = [f"{n} {mb:.4g} -> {mc:.4g} ({rel:+.1f}%, {w}/{k} wins, base IQR {iqr:.3g}, {v})"
                  for n, mb, mc, rel, w, k, iqr, v in summaries]
         tail = f"; drift index ({a.drift}) median {drift:.3f}" if drift is not None else ""
-        print(f"\n{a.workload} A/B, {len(ok)}/{a.pairs} interleaved pairs, {seeds}, "
+        traced = " traced" if a.trace else ""
+        print(f"\n{a.workload}{traced} A/B, {len(ok)}/{a.pairs} interleaved pairs, {seeds}, "
               f"base {a.base}, medians base -> change: " + "; ".join(parts) + tail + ".")
 
 

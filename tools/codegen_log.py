@@ -1,9 +1,13 @@
 #!/usr/bin/env python3
 """Count Spark generated-class compiles per benchmark repetition.
 
-Reads the stderr of a perfbench run made with the log4j2 configuration this
-script writes, and prints one row per segment of the run: set-up, then each
-repetition, then whatever follows the last repetition.
+Reads the stderr of a perfbench `repo-pipeline` run made with the log4j2
+configuration this script writes, and prints one row per segment of the run:
+set-up, then each repetition. A repetition starts at its extraction's edge
+count (`count at Main.scala:164`), the first job every `repo-pipeline`
+repetition runs, and lasts until the next one starts; the last repetition
+also holds whatever follows it. Only `repo-pipeline` is segmented this way:
+the graph workloads run extraction in set-up, not in their repetitions.
 
     python3 tools/codegen_log.py --write-config cg.properties            # bodies (DEBUG)
     python3 tools/codegen_log.py --write-config cg.properties --level info  # timing only
@@ -14,7 +18,7 @@ repetition, then whatever follows the last repetition.
 
 The configuration keeps the root logger at `warn` on a stderr console and
 sets `SparkContext` to `info` (its "Starting job:" lines mark the segment
-ends) and `CodeGenerator` to `debug`, which logs each compiled body once per
+starts) and `CodeGenerator` to `debug`, which logs each compiled body once per
 compile, or to `info`, which logs only "Code generated in N ms". A DEBUG run
 inflates the compile time, so take the ms column from an INFO run and the
 body columns from a DEBUG run.
@@ -53,10 +57,9 @@ logger.sc.level = info
 HEADER = re.compile(r"^\d\d/\d\d/\d\d \d\d:\d\d:\d\d (TRACE|DEBUG|INFO|WARN|ERROR) (\S+?): ?(.*)$")
 GENERATED = re.compile(r"Code generated in ([0-9.]+) ms")
 WHOLE_STAGE = re.compile(r"GeneratedIteratorForCodegenStage\d+")
-# Segment ends in a perfbench repo-pipeline run: set-up ends at its sha check,
-# each repetition at its last operation, triangle count.
-SETUP_END = re.compile(r"^Starting job: count at Main\.scala:154$")
-REP_END = re.compile(r"^Starting job: head at TriangleCount\.scala:\d+$")
+# Segment starts in a perfbench repo-pipeline run: each repetition opens with
+# the edge count of its extraction, a job whatever strategy the algorithms take.
+REP_START = re.compile(r"^Starting job: count at Main\.scala:164$")
 
 
 def records(lines):
@@ -92,13 +95,10 @@ class Segment:
 
 def segments(lines):
     segs = [Segment("set-up")]
-    reps = 0
     for level, logger, msg in records(lines):
         if logger == "SparkContext" and msg.startswith("Starting job:"):
-            end = SETUP_END if segs[-1].name == "set-up" else REP_END
-            if end.search(msg):
-                segs.append(Segment(f"rep {reps}"))
-                reps += 1
+            if REP_START.search(msg):
+                segs.append(Segment(f"rep {len(segs) - 1}"))
             continue
         if logger != "CodeGenerator":
             continue
@@ -108,9 +108,6 @@ def segments(lines):
             segs[-1].ms += float(g.group(1))
         elif level == "DEBUG" and "/* 001 */" in msg:
             segs[-1].add_body(msg.strip("\n"))
-    # the segment opened by the last repetition's end is the tail
-    if len(segs) > 1:
-        segs[-1].name = "tail"
     return segs
 
 
